@@ -538,7 +538,8 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # token-keyed shuffle, no join, one tokenization per document.
     # Exactness: count(*) over exploded tokens == size(split(..)) for
     # non-null text (split returns >= 1 element; the fixture has no
-    # null/empty texts at any SF — verified 0.001/0.01/0.1/sf1);
+    # null/empty texts at any SF — verified 0.001/0.01/0.1/sf1, and
+    # pinned by test_documents_text_never_null_or_empty);
     # sum(when(t = term, 1)) == size - size(array_remove) == tf;
     # dl sums are integer-valued doubles (exact in float64), so
     # avgdl = exact_sum / n is ONE IEEE division — identical across

@@ -253,7 +253,11 @@ def exact_percentiles(
 
     Returns a 1-row DataFrame with columns e0..e{len-1}, one per
     fraction, in order. Nulls in ``col`` are ignored, matching
-    Percentile's update ("skip null"). Replicates
+    Percentile's update ("skip null"). On empty or all-NULL input the
+    result is still one row, with every e_i NULL (the global
+    aggregate over no picked values), where ``F.percentile`` returns
+    one NULL array: element access on either gives NULL, but the
+    shapes differ. Replicates
     Percentile.getPercentile exactly: position = (n-1) * fraction in
     double; lower/higher = floor/ceil; short-circuit to the lower
     value when higher == lower OR both picked values are equal (the

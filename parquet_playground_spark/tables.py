@@ -4,6 +4,17 @@ Tables are one parquet file per name under an sf dir
 (/root/testdata/sf{0.001,0.01,0.1}). At 100 TB each "file" becomes a
 partitioned directory; ``spark.read.parquet`` handles both shapes, so
 nothing here changes at scale.
+
+Each table's footer schema is inferred once per process and reused.
+Spark infers a Parquet schema with one job per ``spark.read.parquet``
+call (``SchemaMergeUtils.mergeSchemasInParallel``), even for a single
+file, so re-inferring it on every query costs a job and ~0.1 s of
+driver time per table load. The cache key holds everything the
+inferred schema depends on: the table's real path, its file signature
+((size, mtime_ns) of the file, or of every file under a directory
+table) and the SQL confs that Parquet schema conversion reads. Only
+the schema is reused: every query still lists the table's files and
+scans its data, and no result is cached.
 """
 
 from __future__ import annotations
@@ -16,6 +27,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @atexit.register
@@ -88,16 +100,68 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+# SQL confs that Parquet-to-Spark schema conversion reads; a change to
+# any of them can change the inferred schema, so their values are part
+# of the cache key (and the key does not depend on who built the
+# session).
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (real path, file signature, schema conf values) -> footer schema.
+# Concurrent misses on one key both infer and store the same schema,
+# so no lock is needed.
+_FOOTER_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _file_signature(path: str) -> tuple:
+    """(size, mtime_ns) of a table file; for a directory table, the
+    sorted (relative name, size, mtime_ns) of every file under it, so
+    adding, removing or rewriting any file changes the signature."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_size, st.st_mtime_ns)
+    sig = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            sig.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(sig))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Footer-schema-driven Parquet scan (reference: LoadParquet.java:49-53,
     ParquetConverter.java:98 — schema always from the footer, never
-    user-declared). Vectorized, splittable, filter-pushdown-capable."""
+    user-declared). Vectorized, splittable, filter-pushdown-capable.
+
+    The footer schema is inferred on a table's first load and handed
+    to ``spark.read.schema`` on later ones (cache key: see the module
+    docstring). It is the schema the footer gives, so plans and results
+    are unchanged; only the inference job is skipped, and the files are
+    still listed and scanned by every query."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_session_defaults(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    key = (
+        os.path.realpath(path),
+        _file_signature(path),
+        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
+    )
+    schema = _FOOTER_SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = _FOOTER_SCHEMAS[key] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
+        ts_type = {f.name: f.dataType.simpleString() for f in schema}.get("ts")
         if ts_type == "bigint":
             # events.ts stored as parquet timestamp[ns]; with
             # spark.sql.legacy.parquet.nanosAsLong it arrives as long

@@ -10,6 +10,10 @@ touching every operator category (SURVEY.md §2.3 A-K).
 
 from __future__ import annotations
 
+import glob
+import os
+
+import duckdb
 import pytest
 
 from tests.conftest import SF_DIR
@@ -465,6 +469,24 @@ def test_watermark_boundary_not_exercised(oracle_con):
         "append-mode emit-set oracle would start depending on Spark's "
         "exact-equality eviction convention"
     )
+
+
+def test_documents_text_never_null_or_empty():
+    """text_bm25_search's one-pass form counts a document's length as
+    its number of exploded tokens, which equals size(split(text)) only
+    when text is neither NULL nor empty: explode(split(NULL)) drops the
+    document and shifts n_docs, avgdl and df. Pin that fixture
+    invariant at every scale present, so a fixture change fails here
+    instead of drifting the scores."""
+    paths = sorted(
+        glob.glob(os.path.join(os.path.dirname(SF_DIR), "sf*", "documents.parquet"))
+    )
+    assert paths
+    for path in paths:
+        bad = duckdb.sql(
+            f"SELECT count(*) FROM '{path}' WHERE text IS NULL OR text = ''"
+        ).fetchone()[0]
+        assert bad == 0, f"{path}: {bad} documents with NULL or empty text"
 
 
 def test_stream_partition_derivation():

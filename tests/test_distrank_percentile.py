@@ -83,3 +83,16 @@ def test_nulls_skipped(spark):
 def test_single_distinct_value(spark):
     # span == 0: every row lands in bucket 0 (the when(span == 0) arm)
     _check(spark, [7.25] * 13, fractions=[0.0, 0.5, 1.0], n_buckets=4)
+
+
+@pytest.mark.parametrize("values", [[], [None, None, None]])
+def test_empty_or_all_null_gives_one_row_of_nulls(spark, values):
+    """No non-NULL value: one row of NULL e_i, where F.percentile
+    gives one NULL array (documented in exact_percentiles)."""
+    df = spark.createDataFrame([(v,) for v in values], "v double")
+    ref = df.agg(
+        F.percentile("v", F.array(F.lit(0.5), F.lit(0.9))).alias("eq")
+    ).collect()
+    assert [r.eq for r in ref] == [None]
+    got = exact_percentiles(df, "v", [0.5, 0.9], n_buckets=4).collect()
+    assert [r.asDict() for r in got] == [{"e0": None, "e1": None}]
