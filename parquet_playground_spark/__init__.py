@@ -8,7 +8,7 @@ LLM-data-pipeline extensions (dedup, similarity search, text analysis,
 multimodal binary columns).
 
 Layout:
-    session.py    SparkSession factory tuned for the workload
+    session.py    SparkSession factory and the one session conf table
     tables.py     testdata table loader
     registry.py   central (query, oracle-SQL) registry
     operators/    relational operators: scans, filters, joins, aggs,

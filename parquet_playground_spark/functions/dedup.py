@@ -48,7 +48,7 @@ def _fanout(df: DataFrame) -> DataFrame:
     cores; at 100 TB the source has thousands of splits and this
     repartition coalesces into AQE's normal planning (same pattern as
     rebalancing before an expensive per-row transform)."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, "doc_id")
 
 

@@ -19,6 +19,7 @@ from parquet_playground_spark.operators.distrank import (
     ntile_from_rank,
 )
 from parquet_playground_spark.registry import register, track_persist
+from parquet_playground_spark.session import scoped_confs
 from parquet_playground_spark.tables import load_table
 
 
@@ -3030,30 +3031,30 @@ def sql_scripting_control_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the script's loop semantics against a declarative equivalent. The
     geometric cutoff chain is a double multiplication sequence —
     bit-identical on both engines."""
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView(
         "script_orders"
     )
-    return spark.sql(
-        """
-        BEGIN
-          DECLARE cutoff DOUBLE DEFAULT 100000.0;
-          DECLARE n BIGINT DEFAULT 0;
-          DECLARE steps INT DEFAULT 0;
-          SET n = (SELECT count(*) FROM script_orders
-                   WHERE o_totalprice > cutoff);
-          WHILE n > 2000 DO
-            SET cutoff = cutoff * 1.5;
-            SET n = (SELECT count(*) FROM script_orders
-                     WHERE o_totalprice > cutoff);
-            SET steps = steps + 1;
-          END WHILE;
-          SELECT round(cutoff, 2) AS final_cutoff,
-                 n AS n_above,
-                 steps AS n_iterations;
-        END
-        """
-    )
+    with scoped_confs(spark, {"spark.sql.scripting.enabled": "true"}):
+        return spark.sql(
+            """
+            BEGIN
+              DECLARE cutoff DOUBLE DEFAULT 100000.0;
+              DECLARE n BIGINT DEFAULT 0;
+              DECLARE steps INT DEFAULT 0;
+              SET n = (SELECT count(*) FROM script_orders
+                       WHERE o_totalprice > cutoff);
+              WHILE n > 2000 DO
+                SET cutoff = cutoff * 1.5;
+                SET n = (SELECT count(*) FROM script_orders
+                         WHERE o_totalprice > cutoff);
+                SET steps = steps + 1;
+              END WHILE;
+              SELECT round(cutoff, 2) AS final_cutoff,
+                     n AS n_above,
+                     steps AS n_iterations;
+            END
+            """
+        )
 
 
 _FUNNEL_TB_SQL = """

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register
+from parquet_playground_spark.session import scoped_confs
 from parquet_playground_spark.tables import load_table
 
 
@@ -415,10 +416,7 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, confs):
         li = load_table(spark, sf_dir, "lineitem")
         o = load_table(spark, sf_dir, "orders").filter(
             F.col("o_totalprice") > 55000
@@ -436,12 +434,6 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100.0
             ).alias("sum_price"),
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @register(

@@ -1,61 +1,84 @@
-"""SparkSession factory.
+"""SparkSession factory and the one home of the engine's session config.
 
-Scale notes (design target: 1000-executor cluster over ~100 TB):
-  * AQE on — runtime coalescing of shuffle partitions, skew-join
-    splitting, and dynamic broadcast conversion replace any hand-tuned
-    plan at scale.
-  * Arrow on — all pandas_udf / applyInPandas paths batch-transfer.
-  * Parquet filter pushdown + nested schema pruning on — the engine's
-    equivalent of the reference's manual footer column/row-group
-    pruning (reference: MutableParquetMetadata.java:35-115), done by
-    Catalyst instead of hand-trimmed footers.
-  * UTC session timezone — determinism vs the DuckDB oracle.
-  * shuffle.partitions is sized for local test SFs; on a real cluster
-    AQE coalescing makes the static number mostly irrelevant.
+Every dynamic SQL conf the engine relies on lives in ``SESSION_CONFS``.
+``ensure_session_defaults`` applies that table once per session, so a
+session from ``get_spark`` and a session someone else built (the
+external driver's bare ``local[8]``, ``tools/verify_local.py
+--vanilla``) run with the same confs. ``get_spark`` puts only the
+static confs (master, driver memory, warehouse dir, UI, classpath) in
+the builder and then goes through the same call.
+
+  * ``spark.sql.shuffle.partitions`` is the context's
+    ``defaultParallelism``: one post-shuffle partition per core, e.g. 8
+    at ``local[8]``. AQE coalesces shuffles at runtime, so this is a
+    ceiling, not a schedule; on a real cluster it is the executor core
+    count.
+  * Streaming runs enter ``stream_confs`` instead. A stateful stream
+    pays per-partition state-store snapshot and maintenance work on
+    every micro-batch, which dominates at local test scale (the
+    tumbling query went 10.3 s -> 2.8 s from 32 to 8 partitions, and
+    3.0 s -> 2.0 s from 8 to 2, in two separate measurements), so
+    local mode uses 2. On a cluster state keys dwarf the core
+    count, so it is ``max(8, defaultParallelism)``.
+  * Scoped changes go through ``scoped_confs``, which restores the
+    earlier values (or unsets the key) on exit, exceptions included.
+
+The table holds AQE (runtime coalescing, skew splitting,
+broadcast demotion); Parquet filter pushdown, nested schema pruning and
+aggregate pushdown, which is how Catalyst does the reference's manual
+footer pruning (MutableParquetMetadata.java:35-115); the INT96 and
+nanosecond timestamp decode the reference does by hand
+(ParquetConverter.java:40-61); Arrow for every pandas exchange; and a
+UTC session time zone for determinism against the DuckDB oracle.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
+SESSION_CONFS = {
+    # determinism against the oracle
+    "spark.sql.session.timeZone": "UTC",
+    # adaptive execution: coalesce shuffles, split skew, demote
+    # sort-merge to broadcast at runtime
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # scan-side pruning
+    "spark.sql.parquet.filterPushdown": "true",
+    "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
+    "spark.sql.parquet.aggregatePushdown": "true",
+    # INT96 legacy timestamps
+    "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",
+    "spark.sql.parquet.datetimeRebaseModeInRead": "CORRECTED",
+    # timestamp[ns] columns (events.ts): Spark 4 rejects INT64
+    # TIMESTAMP(NANOS) outright; read as long nanos and convert in
+    # tables.load_table
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Arrow for all pandas-UDF exchange
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+}
+
+_APPLIED_MARKER = "spark.pp.session.defaults.applied"
+
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
 
 def get_spark(app_name: str = "parquet-playground-spark") -> SparkSession:
-    """Create (or fetch) the tuned SparkSession."""
+    """Create (or fetch) the engine's SparkSession."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        # --- determinism ---
-        .config("spark.sql.session.timeZone", "UTC")
-        # --- adaptive execution: coalesce shuffles, split skew, demote
-        # sort-merge to broadcast at runtime ---
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # --- shuffle sizing: small static number for local SFs; AQE
-        # re-coalesces so this is a ceiling, not a schedule ---
-        .config("spark.sql.shuffle.partitions", cpus)
-        # --- scan-side pruning (Catalyst equivalent of reference footer
-        # trimming, MutableParquetMetadata.java:35-115) ---
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        # --- INT96 legacy timestamps (reference ParquetConverter.java:40-61)
-        .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
-        .config("spark.sql.parquet.datetimeRebaseModeInRead", "CORRECTED")
-        # --- timestamp[ns] columns (events.ts): Spark 4 rejects INT64
-        # TIMESTAMP(NANOS) outright; read as long nanos and convert in
-        # load_table (tables.py) — same lineage as the reference's manual
-        # INT96 nano decode (ParquetConverter.java:40-61).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # --- Arrow for all pandas-UDF exchange ---
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # --- bucketed-table warehouse outside the repo tree ---
+        # bucketed-table warehouse outside the repo tree
         .config("spark.sql.warehouse.dir", "/tmp/ppspark_warehouse")
-        # --- keep driver logs readable ---
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -70,4 +93,65 @@ def get_spark(app_name: str = "parquet-playground-spark") -> SparkSession:
         builder = builder.config("spark.driver.extraClassPath", crypto_jar)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    ensure_session_defaults(spark)
     return spark
+
+
+def ensure_session_defaults(spark: SparkSession) -> None:
+    """Apply ``SESSION_CONFS`` and the shuffle partition count to
+    ``spark``, once per session."""
+    if spark.conf.get(_APPLIED_MARKER, "") == "1":
+        return
+    for key, value in SESSION_CONFS.items():
+        spark.conf.set(key, value)
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(spark.sparkContext.defaultParallelism),
+    )
+    spark.conf.set(_APPLIED_MARKER, "1")
+
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the body of a ``with`` block. On exit, even by
+    an exception, each key gets its earlier value back, or is unset if
+    the session had no value for it."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _stream_shuffle_partitions(master: str, default_parallelism: int) -> str:
+    """State-store partition count: 2 in local mode, else
+    ``max(8, defaultParallelism)`` (see the module docstring). The
+    count is fixed per checkpoint at its first batch."""
+    if master.startswith("local"):
+        return "2"
+    return str(max(default_parallelism, 8))
+
+
+def stream_confs(spark: SparkSession) -> contextlib.AbstractContextManager:
+    """Scope for one streaming run: the streaming partition count and
+    the RocksDB state store. RocksDB keeps state in native memory and
+    local disk, not the JVM heap; the default HDFS-backed store keeps
+    every partition's state map on-heap and ran out of a 1 GiB heap on
+    session windows over 6M events. Both confs are read at query
+    start."""
+    sc = spark.sparkContext
+    return scoped_confs(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": _stream_shuffle_partitions(
+                sc.master, sc.defaultParallelism
+            ),
+            "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER,
+        },
+    )

@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from parquet_playground_spark.registry import register
-from parquet_playground_spark.tables import ensure_session_defaults
+from parquet_playground_spark.session import ensure_session_defaults
 
 CORPUS_DIR = "/root/reference"
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register
+from parquet_playground_spark.session import ensure_session_defaults
 
 CORPUS_DIR = "/root/reference"
 FACTORY_CLASS = "pp.PlaygroundDecryptionFactory"
@@ -133,8 +134,6 @@ def encrypted_corpus_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     check: garbage decryption could not produce the arithmetic series
     the files contain, so a wrong key/AAD shows up as an error row, not
     a silent pass."""
-    from parquet_playground_spark.tables import ensure_session_defaults
-
     ensure_session_defaults(spark)
     install_crypto_classloader(spark)
     records = []
@@ -205,7 +204,7 @@ def write_encrypted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import tempfile
 
-    from parquet_playground_spark.tables import ensure_session_defaults, load_table
+    from parquet_playground_spark.tables import load_table
 
     ensure_session_defaults(spark)
     install_crypto_classloader(spark)

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register
-from parquet_playground_spark.tables import ensure_session_defaults
+from parquet_playground_spark.session import ensure_session_defaults, stream_confs
 
 ROWS_PER_PARTITION = 2000
 # cap on partitions per micro-batch: availableNow replays the whole
@@ -184,12 +184,7 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("event_id").alias("min_id"),
         F.max("event_id").alias("max_id"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTS", "8"),
-    )
-    try:
+    with stream_confs(spark):
         sink = f"pp_pysrc_{uuid.uuid4().hex[:12]}"
         q = (
             agg.writeStream.format("memory")
@@ -199,8 +194,6 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(sink)
 
 

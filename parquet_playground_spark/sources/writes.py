@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register
+from parquet_playground_spark.session import scoped_confs
 from parquet_playground_spark.tables import load_table
 
 
@@ -311,12 +312,8 @@ def write_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     refresh = o.filter(F.col("o_orderstatus") == "F").withColumn(
         "o_totalprice", F.col("o_totalprice") * 0.5
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with scoped_confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         refresh.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return (
         spark.read.parquet(path)
         .groupBy("o_orderstatus")

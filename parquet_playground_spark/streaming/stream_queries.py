@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register, track_temp_view
-from parquet_playground_spark.tables import ensure_session_defaults, load_table
+from parquet_playground_spark.session import ensure_session_defaults, stream_confs
+from parquet_playground_spark.tables import load_table
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -115,37 +116,6 @@ def _read_stream(spark: SparkSession, staged_dir: str) -> DataFrame:
     )
 
 
-def _stream_shuffle_partitions(
-    spark: SparkSession,
-    env: "str | None" = None,
-    master: "str | None" = None,
-    default_parallelism: "int | None" = None,
-) -> str:
-    """State-store partition count for streaming runs.
-
-    Resolution order: explicit SPARK_GRAFT_STREAM_PARTS env var; else 2
-    in local[...] mode (single-JVM state-store snapshot/maintenance
-    overhead is per-partition and dominates at test scale — measured
-    3.0s -> 2.0s going 8 -> 2 on the tumbling query in r4); else
-    defaultParallelism (cluster mode: state keys dwarf core count, and
-    a tiny fixed default would serialize state ops fleet-wide). The
-    keyword args exist so the derivation is unit-testable without
-    building a cluster session (tests/test_correctness.py).
-    """
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTS") if env is None else env
-    if env:
-        return env
-    master = spark.sparkContext.master if master is None else master
-    if master.startswith("local"):
-        return "2"
-    dp = (
-        spark.sparkContext.defaultParallelism
-        if default_parallelism is None
-        else default_parallelism
-    )
-    return str(max(int(dp), 8))
-
-
 def _maybe_report_state_metrics(q) -> None:
     """Opt-in (SPARK_GRAFT_STREAM_METRICS=1): print the last
     state-bearing micro-batch's state-store metrics to stderr — rows
@@ -206,37 +176,10 @@ def _run_to_table(
     session on it. This is also how a production job ships results: a
     durable sink, never the driver.
 
-    Streaming state partition count is pinned (default 2) for the
-    duration of the run: the state store pays per-partition
-    snapshot/maintenance overhead each micro-batch, which at local test
-    scale dominates wall time (measured 10.3s -> 2.8s on the tumbling
-    query going 32 -> 8 in r2; 3.0s -> 2.0s going 8 -> 2 in r4, with
-    stream-stream join also ~15% faster). The partition count is fixed
-    per checkpoint at first batch; SPARK_GRAFT_STREAM_PARTS overrides,
-    and when it is unset the default is DERIVED from the deployment
-    (see _stream_shuffle_partitions) — 2 in local mode where the
-    single-JVM state-store maintenance dominates, defaultParallelism
-    on a real cluster so a forgotten env var can never serialize state
-    ops on a 1000-executor job (VERDICT r4 watch item)."""
+    The run is scoped by session.stream_confs: the streaming partition
+    count and the RocksDB state store, both restored afterwards."""
     spark = stream_df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        _stream_shuffle_partitions(spark),
-    )
-    # RocksDB state store: streaming state lives in native memory /
-    # local disk, not the JVM heap. The default HDFSBackedStateStore
-    # keeps every partition's state map on-heap — measured OOM at the
-    # sf1 screen (6M events, session windows, 1g vanilla heap), and
-    # the same failure shape a 100 TB stateful job hits whenever state
-    # outgrows executor heap. Read at query start, so a per-run conf
-    # is sufficient; rocksdbjni ships with Spark 4.
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
+    with stream_confs(spark):
         if sink == "files":
             out_dir = os.path.join(
                 tempfile.gettempdir(),
@@ -266,8 +209,6 @@ def _run_to_table(
         )
         q.awaitTermination()
         _maybe_report_state_metrics(q)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     out = spark.table(name)  # analyzed eagerly — survives the drop
     # deregister the sink at the NEXT query's entry: back-to-back
     # streaming queries in one session otherwise stack every sink's
@@ -785,20 +726,13 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(f"{state_root}/v{cur + 1}")
         version["n"] = cur + 1
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTS", "2"),
-    )
-    try:
+    with stream_confs(spark):
         q = (
             src.writeStream.foreachBatch(upsert)
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.read.parquet(f"{state_root}/v{version['n']}").select(
         "user_id",
         F.col("ts").alias("last_ts"),
@@ -860,13 +794,7 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("p"),
     )
-    sparkSession = stream.sparkSession
-    prev = sparkSession.conf.get("spark.sql.shuffle.partitions")
-    sparkSession.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTS", "2"),
-    )
-    try:
+    with stream_confs(spark):
         sink = f"pp_sink_{uuid.uuid4().hex[:12]}"
         q = (
             counted.writeStream.format("memory")
@@ -877,8 +805,6 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         telemetry_rows = sum(p.numInputRows for p in q.recentProgress)
-    finally:
-        sparkSession.conf.set("spark.sql.shuffle.partitions", prev)
     result = spark.table(sink).collect()[-1]
     assert telemetry_rows == result["n"], (telemetry_rows, result["n"])
     return spark.createDataFrame(
@@ -930,12 +856,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         return sum(p.numInputRows for p in q.recentProgress)
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTS", "2"),
-    )
-    try:
+    with stream_confs(spark):
         pq.write_table(t.slice(0, step), os.path.join(src, "phase_a.parquet"))
         first_in = _run(f"pp_ckpt_a_{uuid.uuid4().hex[:8]}")
         pq.write_table(
@@ -943,8 +864,6 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sink_b = f"pp_ckpt_b_{uuid.uuid4().hex[:8]}"
         second_in = _run(sink_b)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     final_count = spark.table(sink_b).collect()[-1]["n"]
     exactly_once = (
         first_in == step and second_in == n - step and final_count == n

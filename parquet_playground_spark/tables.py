@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from parquet_playground_spark.session import ensure_session_defaults
+
 
 @atexit.register
 def _cleanup_process_staging() -> None:
@@ -57,43 +59,6 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-_TUNED_MARKER = "spark.pp.session.defaults.applied"
-
-# Dynamic (runtime-settable) confs the engine's correctness depends on.
-# session.get_spark sets these at build time, but the driver harness may
-# hand queries a SparkSession it built itself — these are re-applied
-# once per session so results don't depend on who created the session.
-# All are dynamic SQLConf entries; static confs (classpath, master)
-# cannot be fixed up here and degrade gracefully instead.
-_REQUIRED_DYNAMIC_CONFS = {
-    # oracle determinism (SURVEY §7.3 rule 7)
-    "spark.sql.session.timeZone": "UTC",
-    # events.parquet is timestamp[ns]; Spark 4 errors without this
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # scan pruning + runtime replan, assumed by the plan design
-    "spark.sql.parquet.filterPushdown": "true",
-    "spark.sql.adaptive.enabled": "true",
-    # a foreign session's default 200 shuffle partitions just adds task
-    # overhead at test SFs; AQE coalesces either way, this sets a sane
-    # ceiling matching session.get_spark
-    "spark.sql.shuffle.partitions": "32",
-}
-
-
-def ensure_session_defaults(spark: SparkSession) -> None:
-    """Apply the engine's required dynamic confs to a foreign session."""
-    try:
-        if spark.conf.get(_TUNED_MARKER, "") == "1":
-            return
-    except Exception:  # noqa: BLE001 — conf API unavailable: best effort
-        return
-    for key, value in _REQUIRED_DYNAMIC_CONFS.items():
-        try:
-            spark.conf.set(key, value)
-        except Exception:  # noqa: BLE001 — read-only in this deployment
-            pass
-    spark.conf.set(_TUNED_MARKER, "1")
 
 
 def table_path(sf_dir: str, name: str) -> str:

@@ -490,25 +490,17 @@ def test_documents_text_never_null_or_empty():
 
 
 def test_stream_partition_derivation():
-    """Pin _stream_shuffle_partitions: env var wins; local mode stays
-    at the measured-fast 2; cluster mode derives from parallelism and
-    never collapses to a tiny fixed default (VERDICT r4 item 6)."""
-    from parquet_playground_spark.streaming.stream_queries import (
-        _stream_shuffle_partitions,
-    )
+    """Pin _stream_shuffle_partitions: local mode stays at the
+    measured-fast 2; cluster mode derives from parallelism and never
+    collapses to a tiny fixed default (VERDICT r4 item 6)."""
+    from parquet_playground_spark.session import _stream_shuffle_partitions
 
     f = _stream_shuffle_partitions
-    assert f(None, env="16", master="local[8]") == "16"
-    assert f(None, env=None, master="local[32]") == "2"
-    assert f(None, env=None, master="local[*]") == "2"
-    assert (
-        f(None, env=None, master="spark://host:7077", default_parallelism=4000)
-        == "4000"
-    )
+    assert f("local[32]", 32) == "2"
+    assert f("local[*]", 4) == "2"
+    assert f("spark://host:7077", 4000) == "4000"
     # small cluster: floor of 8, never the local 2
-    assert (
-        f(None, env=None, master="yarn", default_parallelism=4) == "8"
-    )
+    assert f("yarn", 4) == "8"
 
 
 def test_dual_dialect_templates_fail_loudly_on_drift():

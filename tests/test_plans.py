@@ -224,6 +224,7 @@ def test_bloom_runtime_filter_injects_might_contain(spark):
     optimizer must inject a bloom might_contain() predicate on the
     probe side before the shuffle (the conf restore in the query fn
     means the plan must be captured inside the scope)."""
+    from parquet_playground_spark.session import scoped_confs
     from parquet_playground_spark.tables import load_table
     from pyspark.sql import functions as F
 
@@ -233,22 +234,13 @@ def test_bloom_runtime_filter_injects_might_contain(spark):
         "applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, confs):
         li = load_table(spark, SF_DIR, "lineitem")
         o = load_table(spark, SF_DIR, "orders").filter(
             F.col("o_totalprice") > 55000
         )
         plan = formatted_plan(li.join(o, li.l_orderkey == o.o_orderkey))
         assert "might_contain" in plan.lower()
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_topk_per_group_uses_window_group_limit(spark):

@@ -9,7 +9,6 @@ plan and the same rows as a cold one.
 
 from __future__ import annotations
 
-import contextlib
 import itertools
 import re
 
@@ -20,20 +19,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from parquet_playground_spark import registry, tables
+from parquet_playground_spark.session import scoped_confs
 from tests.conftest import SF_DIR
-
-
-@contextlib.contextmanager
-def _conf(spark, key, value):
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 _PROBE_IDS = itertools.count()
@@ -97,12 +84,12 @@ def test_nanos_as_long_toggle_reinfers_events_ts(spark, tmp_path):
         }),
         tmp_path / "events.parquet",
     )
-    with _conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
+    with scoped_confs(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
         df = tables.load_table(spark, str(tmp_path), "events")
         assert dict(df.dtypes)["ts"] == "timestamp"
         got = df.orderBy("event_id").select(F.unix_micros("ts")).collect()
         assert [r[0] for r in got] == [n // 1000 for n in nanos]
-        with _conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "false"):
+        with scoped_confs(spark, {"spark.sql.legacy.parquet.nanosAsLong": "false"}):
             with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
                 tables.load_table(spark, str(tmp_path), "events")
 
@@ -116,7 +103,7 @@ def test_added_file_reinfers_directory_table(spark, tmp_path):
     pq.write_table(
         pa.table({"l_orderkey": [1, 2]}), table_dir / "part-00000.parquet"
     )
-    with _conf(spark, "spark.sql.parquet.mergeSchema", "true"):
+    with scoped_confs(spark, {"spark.sql.parquet.mergeSchema": "true"}):
         before = tables.load_table(spark, str(tmp_path), "lineitem")
         assert before.columns == ["l_orderkey"]
         pq.write_table(

@@ -16,10 +16,12 @@ Spark's int64 under any type-sensitive canon.
 
 --vanilla runs the queries on a bare
 `SparkSession.builder.master("local[8]").getOrCreate()` session instead
-of `get_spark` — the external driver builds exactly such a session, so
-confs injected by get_spark (timezone, AQE, the crypto classpath) are
-absent and every query must self-provision via
-`tables.ensure_session_defaults` / `install_crypto_classloader`.
+of `get_spark` — the external driver builds exactly such a session. It
+lacks `get_spark`'s static confs (driver memory, the crypto classpath);
+every query self-provisions the rest through
+`session.ensure_session_defaults` (the same conf table and
+one-partition-per-core rule `get_spark` applies, so 8 shuffle
+partitions here) and `install_crypto_classloader`.
 --vanilla --strict together are the closest local approximation of the
 official gate.
 
