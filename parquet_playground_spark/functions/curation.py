@@ -38,6 +38,7 @@ from parquet_playground_spark.functions.dedup import (
     _minhash_signatures,
     _MINHASH_ORACLE,
 )
+from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.operators.distrank import (
     global_rank,
     global_running_agg,
@@ -870,15 +871,13 @@ def gdpr_delete_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(7,), (23,), (88,)], ["user_id"]
     )
     survivors = e.join(F.broadcast(requests), "user_id", "left_anti")
-    # value is exactly 2-dp: sum exact cents as DECIMAL(38,0) — the
+    # value is exactly 2-dp: exact_sum of exact cents — the
     # per-type float sum grows with SF past the 4-dp grid (q19 class)
     return survivors.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.count_distinct("user_id").alias("n_users"),
         (
-            F.sum(
-                F.floor(F.col("value") * 100.0 + 0.5).cast("decimal(38,0)")
-            ).cast("double")
+            exact_sum(F.floor(F.col("value") * 100.0 + 0.5)).cast("double")
             / 100.0
         ).alias("value_sum"),
     )

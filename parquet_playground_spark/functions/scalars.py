@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register
 from parquet_playground_spark.tables import load_table
 
@@ -1280,13 +1281,11 @@ def fn_na_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_rows"),
         F.sum((F.col("pr") == "UNKNOWN").cast("long")).alias("n_filled_pr"),
         F.sum((F.col("pr") == "P1").cast("long")).alias("n_p1"),
-        # exact cents as DECIMAL(38,0): the 2dp headroom argument died
+        # exact cents summed by exact_sum: the 2dp headroom argument died
         # at the sf3 screen (~1e12 magnitude drifted in the 2nd
-        # decimal) — q1/q19 pattern instead
+        # decimal)
         (
-            F.sum(
-                F.floor(F.col("tp") * 100.0 + 0.5).cast("decimal(38,0)")
-            ).cast("double")
+            exact_sum(F.floor(F.col("tp") * 100.0 + 0.5)).cast("double")
             / 100.0
         ).alias("sum_filled_tp"),
     )

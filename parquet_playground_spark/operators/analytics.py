@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.operators.distrank import (
     global_prefix_sum,
     global_rank,
@@ -164,52 +165,44 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q5-shaped: 6-table join keeping only orders supplied from
-    the customer's own nation. region/nation broadcast (constant-size
-    dims); supplier is FACT-PROPORTIONAL (sf x 10k rows) so its join is
-    pinned to shuffle with a merge hint — broadcasting it OOMs at 100x
-    scale (same defect class as q9's estimate-driven fact broadcast,
-    fixed in commit 0800661). AQE handles skew on the fact chain. One
-    aggregate of |nations| rows at the end; revenue accumulates exact
-    1e-4-USD integers as DECIMAL(38,0) (q1/q19 pattern — per-nation
-    float sums grow with SF)."""
+    the customer's own nation. Never broadcast a fact-proportional
+    side: region/nation broadcast (constant-size dims) into customer,
+    and that set joins orders; the result, projected to (o_orderkey,
+    c_nationkey, n_name), is the shuffle_hash build side for the
+    lineitem join (the q18 pattern), so lineitem streams through the
+    probe instead of being hash-built. Left to the planner, sf0.1 chose
+    a BroadcastHashJoin that built all 600k lineitem rows in one task.
+    supplier is FACT-PROPORTIONAL too (sf x 10k rows), so its join is
+    shuffle_hash as well: never broadcast (the q9-class OOM at 100x),
+    and hash-building the uniform supplier side skips the sort of both
+    sides a merge join would need. One aggregate of |nations| rows at
+    the end; revenue sums exact 1e-4-USD integers with exact_sum
+    (per-nation float sums grow with SF)."""
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     n = load_table(spark, sf_dir, "nation")
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     s = load_table(spark, sf_dir, "supplier")
-    return (
+    cust_orders = (
         c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .join(o, o.o_custkey == c.c_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
+        .select("o_orderkey", "c_nationkey", "n_name")
+    )
+    rev_4 = F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("bigint") * (
+        100 - F.floor(F.col("l_discount") * 100.0 + 0.5).cast("bigint")
+    )
+    return (
+        li.join(
+            cust_orders.hint("shuffle_hash"), li.l_orderkey == F.col("o_orderkey")
+        )
         .join(
-            # r9: shuffle_hash, not merge — the shuffle pin (never
-            # broadcast a fact-proportional table) stays, but hash-
-            # building the uniform supplier side skips the sort of
-            # BOTH sides (guide §3.1); the fact chain is the big side
-            # and sorting it was the only Sort in the plan.
             s.hint("shuffle_hash"),
-            (s.s_suppkey == li.l_suppkey) & (s.s_nationkey == c.c_nationkey),
+            (s.s_suppkey == li.l_suppkey) & (s.s_nationkey == F.col("c_nationkey")),
         )
         .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            (
-                F.sum(
-                    (
-                        F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
-                        .cast("bigint")
-                        * (
-                            100
-                            - F.floor(
-                                F.col("l_discount") * 100.0 + 0.5
-                            ).cast("bigint")
-                        )
-                    ).cast("decimal(38,0)")
-                ).cast("double")
-                / 10000.0
-            ).alias("revenue")
-        )
+        .agg((exact_sum(rev_4).cast("double") / 10000.0).alias("revenue"))
     )
 
 
@@ -466,8 +459,8 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(n2, c.c_nationkey == n2.c_nkey)
         .filter(F.col("supp_nation") != F.col("cust_nation"))
     )
-    # exact 1e-4-USD integer volume units, DECIMAL(38,0) accumulation
-    # (q1 pattern): the per-pair-year float sum grows with SF
+    # exact 1e-4-USD integer volume units summed by exact_sum: the
+    # per-pair-year float sum grows with SF
     volume_4 = (
         F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("bigint")
         * (100 - F.floor(F.col("l_discount") * 100.0 + 0.5).cast("bigint"))
@@ -482,8 +475,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("supp_nation", "cust_nation", "l_year")
         .agg(
             (
-                F.sum(F.col("volume_4").cast("decimal(38,0)")).cast("double")
-                / 10000.0
+                exact_sum(F.col("volume_4")).cast("double") / 10000.0
             ).alias("revenue")
         )
     )
@@ -659,8 +651,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts. The date filter pushes to the lineitem scan; one scalar
     aggregate — a single narrow pass over the filtered month.
 
-    Both revenue sums accumulate EXACT integer 1e-4-USD units as
-    DECIMAL(38,0) (q1 pattern), so the pct is one deterministic
+    Both revenue sums add EXACT integer 1e-4-USD units with
+    exact_sum, so the pct is one deterministic
     division of identical integers on both engines, portable-rounded
     — the float-sum form is the class the sf3 screen caught in q19."""
     li = load_table(spark, sf_dir, "lineitem").filter(
@@ -681,8 +673,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 F.floor(
                     100.0
-                    * F.sum(promo_4.cast("decimal(38,0)")).cast("double")
-                    / F.sum(rev_4.cast("decimal(38,0)")).cast("double")
+                    * exact_sum(promo_4).cast("double")
+                    / exact_sum(rev_4).cast("double")
                     * 10000.0
                     + 0.5
                 )
@@ -717,8 +709,8 @@ def q19_bracket_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-side implied filters (brand IN (...), quantity <= 40) so the
     scans prune before the join — the OR never forces a nested loop.
 
-    Revenue is EXACT (q1 pattern): per-row integer cents x integer
-    discount points accumulate as DECIMAL(38,0), one final division —
+    Revenue is EXACT: per-row integer cents x integer discount
+    points are summed by exact_sum, one final division —
     the sf3 scale screen caught the float-sum form drifting in the
     4th decimal at ~2.2e10 magnitude (summation-order ULP)."""
     li = load_table(spark, sf_dir, "lineitem")
@@ -747,8 +739,7 @@ def q19_bracket_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (100 - F.floor(F.col("l_discount") * 100.0 + 0.5).cast("bigint"))
     )
     return j.filter(bracket).agg(
-        (F.sum(rev_4.cast("decimal(38,0)")).cast("double") / 10000.0)
-        .alias("revenue"),
+        (exact_sum(rev_4).cast("double") / 10000.0).alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
     )
 
@@ -897,8 +888,8 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates push to the parquet scan (row-group min/max skipping on
     the date); no shuffle at all beyond the final 1-row reduce — the
     cheapest plan shape in the suite and the canonical pushdown test.
-    Revenue accumulates exact cents x discount points as DECIMAL(38,0)
-    (q1 pattern — the global float sum grows with SF and drifts past
+    Revenue sums exact cents x discount points with exact_sum (the
+    global float sum grows with SF and drifts past
     the 4-dp grid, the class the sf3 screen caught in q19)."""
     li = load_table(spark, sf_dir, "lineitem")
     rev_4 = (
@@ -911,9 +902,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_discount").between(0.03, 0.07)
         & (F.col("l_quantity") < 24)
     ).agg(
-        (F.sum(rev_4.cast("decimal(38,0)")).cast("double") / 10000.0).alias(
-            "revenue"
-        )
+        (exact_sum(rev_4).cast("double") / 10000.0).alias("revenue")
     )
 
 
@@ -1345,14 +1334,10 @@ def agg_pivot_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .pivot("o_orderstatus", ["O", "F"])
         .agg(
             F.count(F.lit(1)).alias("n"),
-            # exact cents (q1/q19 pattern): per-cell float sums
+            # exact cents (exact_sum): per-cell float sums
             # drifted at sf1's ~2.5e10 magnitude
             (
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-                        "decimal(38,0)"
-                    )
-                ).cast("double")
+                exact_sum(F.floor(F.col("o_totalprice") * 100.0 + 0.5)).cast("double")
                 / 100.0
             ).alias("total"),
         )
@@ -1835,8 +1820,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("s_nationkey") == F.col("nk2"),
     ).select("s_suppkey", "supp_nation")
-    # exact 1e-4-USD integer volume, DECIMAL(38,0) sums, one final
-    # portable-rounded division (q1/q19 pattern)
+    # exact 1e-4-USD integer volume, exact_sum sums, one final
+    # portable-rounded division
     volume_4 = (
         F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("bigint")
         * (100 - F.floor(F.col("l_discount") * 100.0 + 0.5).cast("bigint"))
@@ -1858,10 +1843,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flat.groupBy("o_year").agg(
         (
             F.floor(
-                F.sum(num_4.cast("decimal(38,0)")).cast("double")
-                / F.sum(F.col("volume_4").cast("decimal(38,0)")).cast(
-                    "double"
-                )
+                exact_sum(num_4).cast("double")
+                / exact_sum(F.col("volume_4")).cast("double")
                 * 10000.0
                 + 0.5
             )
@@ -1960,16 +1943,14 @@ def kpi_yoy_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     and months missing a prior year surface NULL growth (lag(12)
     would silently mis-align across gaps)."""
     o = load_table(spark, sf_dir, "orders")
-    # exact integer cents (q1/q19 pattern — per-month sums reach ~1e11
+    # exact integer cents (exact_sum — per-month sums reach ~1e11
     # at sf10, past the 2-dp double grid); the growth ratio rounds via
     # the portable floor convention (SURVEY §7.3 rule 1b)
-    price_c = F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-        "decimal(38,0)"
-    )
+    price_c = F.floor(F.col("o_totalprice") * 100.0 + 0.5)
     m = o.groupBy(
         F.year("o_orderdate").alias("yr"),
         F.month("o_orderdate").alias("mo"),
-    ).agg(F.sum(price_c).alias("rev_c"))
+    ).agg(exact_sum(price_c).alias("rev_c"))
     a, b = m.alias("a"), m.alias("b")
     j = a.join(
         b,
@@ -2028,16 +2009,14 @@ def customer_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell) and a window over the |cohorts| x |offsets| matrix; the
     customer-sized first-order aggregate joins on the key both sides
     already shuffle on. Revenue accumulates as exact integer cents
-    (q1/q19 pattern — the sf10 sweep caught the twice-summed float
+    (exact_sum — the sf10 sweep caught the twice-summed float
     flipping its 2nd decimal at ~1.9e12 cumulative magnitudes)."""
     o = load_table(spark, sf_dir, "orders")
     yr = F.year("o_orderdate")
-    price_c = F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-        "decimal(38,0)"
-    )
+    price_c = F.floor(F.col("o_totalprice") * 100.0 + 0.5)
     firsts = o.groupBy("o_custkey").agg(F.min(yr).alias("cohort"))
     rev = o.groupBy("o_custkey", yr.alias("yr")).agg(
-        F.sum(price_c).alias("rev_c")
+        exact_sum(price_c).alias("rev_c")
     )
     cell = (
         rev.join(firsts, "o_custkey")
@@ -2884,8 +2863,8 @@ def events_uplift_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = F.col("pre_c").cast("decimal(38,0)")
     glob = per_user.agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(dec).alias("sp"),
-        F.sum(F.col("post_c").cast("decimal(38,0)")).alias("so"),
+        exact_sum(F.col("pre_c")).alias("sp"),
+        exact_sum(F.col("post_c")).alias("so"),
         F.sum(dec * F.col("post_c")).alias("spo"),
         F.sum(dec * F.col("pre_c")).alias("spp"),
     )

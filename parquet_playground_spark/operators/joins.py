@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register
 from parquet_playground_spark.session import scoped_confs
 from parquet_playground_spark.tables import load_table
@@ -35,7 +36,7 @@ from parquet_playground_spark.tables import load_table
 def join_inner_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-dim equi join: dimension broadcast, fact side un-shuffled.
 
-    sum_bal in exact integer cents (q1/q19 pattern): the sf100 screen
+    sum_bal in exact integer cents (exact_sum): the sf100 screen
     caught round(sum(c_acctbal), 4) splitting one ulp at ~2.5e9 per
     group (600k 2dp terms/nation — double-sum order sensitivity
     crosses the 4dp round)."""
@@ -47,11 +48,7 @@ def join_inner_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_customers"),
             (
-                F.sum(
-                    F.floor(F.col("c_acctbal") * 100.0 + 0.5).cast(
-                        "decimal(38,0)"
-                    )
-                ).cast("double")
+                exact_sum(F.floor(F.col("c_acctbal") * 100.0 + 0.5)).cast("double")
                 / 100.0
             ).alias("sum_bal"),
         )
@@ -422,14 +419,12 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_totalprice") > 55000
         )
         joined = li.join(o, li.l_orderkey == o.o_orderkey)
-        # exact cents (q1/q19 pattern — drifted at sf1's ~2.8e11)
+        # exact cents (exact_sum — drifted at sf1's ~2.8e11)
         return joined.agg(
             F.count(F.lit(1)).alias("n_rows"),
             (
-                F.sum(
-                    F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast(
-                        "decimal(38,0)"
-                    )
+                exact_sum(
+                    F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
                 ).cast("double")
                 / 100.0
             ).alias("sum_price"),
@@ -706,16 +701,14 @@ def join_shuffle_hash_hint(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py pins the ShuffledHashJoin node."""
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 0)
-    # exact cents (q1/q19 pattern): the sf10 sweep caught this float
+    # exact cents (exact_sum): the sf10 sweep caught this float
     # sum drifting in the 2nd decimal at ~6.8e11 per group
-    price_c = F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-        "decimal(38,0)"
-    )
+    price_c = F.floor(F.col("o_totalprice") * 100.0 + 0.5)
     return (
         o.join(c.hint("SHUFFLE_HASH"), o.o_custkey == c.c_custkey)
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            (F.sum(price_c).cast("double") / 100.0).alias("total"),
+            (exact_sum(price_c).cast("double") / 100.0).alias("total"),
         )
     )

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.functions.scalars import _round_stable
+from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register
 from parquet_playground_spark.tables import load_table
 
@@ -144,11 +145,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             # exact cents: a float sum drifts in the 2nd decimal at
             # ~4e11 (caught by the r6 sf1 final-HEAD sweep)
             (
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-                        "decimal(38,0)"
-                    )
-                ).cast("double")
+                exact_sum(F.floor(F.col("o_totalprice") * 100.0 + 0.5)).cast("double")
                 / 100.0
             ).alias("price_sum"),
         ).select(F.lit(phase).alias("phase"), "n_files", "n_rows",
@@ -320,13 +317,11 @@ def pipeline_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("o_totalprice") <= 0, 1).otherwise(0)).alias(
             "n_nonpositive"
         ),
-        # exact cents (q1/q19 pattern): the global float sum drifted
+        # exact cents (exact_sum): the global float sum drifted
         # at sf1's ~3.8e11 magnitude; one driver-side division below
-        F.sum(
-            F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-                "decimal(38,0)"
-            )
-        ).alias("total_price_c"),
+        exact_sum(F.floor(F.col("o_totalprice") * 100.0 + 0.5)).alias(
+            "total_price_c"
+        ),
         F.max("o_orderkey").cast("bigint").alias("max_key"),
     )
     # the job's "real" output; materializing it populates the metrics
@@ -569,18 +564,16 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     month = F.date_trunc("month", "o_orderdate").cast("date").alias("month")
     cutoff = F.lit("1997-07-01").cast("timestamp")
-    # partials in exact integer cents (q1/q19 pattern): the merged sum
+    # partials in exact integer cents (exact_sum): the merged sum
     # must match the from-scratch oracle bit-for-bit at every SF, and
     # DECIMAL partials stay additive across the MV merge
-    price_c = F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-        "decimal(38,0)"
-    )
+    price_c = F.floor(F.col("o_totalprice") * 100.0 + 0.5)
     mv_old = (
         o.filter(F.col("o_orderdate") < cutoff)
         .groupBy(month)
         .agg(
             F.count(F.lit(1)).alias("cnt_b"),
-            F.sum(price_c).alias("sum_b"),
+            exact_sum(price_c).alias("sum_b"),
         )
     )
     delta = (
@@ -588,7 +581,7 @@ def mv_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(month)
         .agg(
             F.count(F.lit(1)).alias("cnt_d"),
-            F.sum(price_c).alias("sum_d"),
+            exact_sum(price_c).alias("sum_d"),
         )
     )
     merged = mv_old.join(delta, "month", "full_outer")

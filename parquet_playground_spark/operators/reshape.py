@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register
 from parquet_playground_spark.tables import load_table
 
@@ -43,7 +44,7 @@ def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     The expensive part (the aggregate) shuffles |groups| rows only;
     the melt is a map-side Expand and survives any scale."""
     li = load_table(spark, sf_dir, "lineitem")
-    # sum_price AND sum_disc in exact cents (q1/q19 pattern —
+    # sum_price AND sum_disc in exact cents (exact_sum —
     # sum_price drifted at sf1; sum_disc bit at sf100, where 2e8
     # ~0.05 terms reach 1e7 and the double-sum ulp crosses the 4dp
     # round: 9981450.0 vs .0001). l_discount is 2dp so cents are
@@ -52,19 +53,11 @@ def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = li.groupBy("l_returnflag").agg(
         F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
         (
-            F.sum(
-                F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast(
-                    "decimal(38,0)"
-                )
-            ).cast("double")
+            exact_sum(F.floor(F.col("l_extendedprice") * 100.0 + 0.5)).cast("double")
             / 100.0
         ).alias("sum_price"),
         (
-            F.sum(
-                F.floor(F.col("l_discount") * 100.0 + 0.5).cast(
-                    "decimal(38,0)"
-                )
-            ).cast("double")
+            exact_sum(F.floor(F.col("l_discount") * 100.0 + 0.5)).cast("double")
             / 100.0
         ).alias("sum_disc"),
     )

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register, track_persist
 from parquet_playground_spark.tables import load_table
 
@@ -84,16 +85,14 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = li.join(
         o, (li.l_orderkey == o.o_orderkey) & (li.salt == o.salt), "inner"
     )
-    # exact 1e-4-USD integer units (q1/q19 pattern — the float sum
+    # exact 1e-4-USD integer units (exact_sum — the float sum
     # drifted at the sf3 screen's ~1.8e11 magnitude)
     rev_4 = (
         F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("bigint")
         * (100 - F.floor(F.col("l_discount") * 100.0 + 0.5).cast("bigint"))
     )
     return joined.groupBy("o_orderpriority").agg(
-        (F.sum(rev_4.cast("decimal(38,0)")).cast("double") / 10000.0).alias(
-            "revenue"
-        ),
+        (exact_sum(rev_4).cast("double") / 10000.0).alias("revenue"),
         F.count(F.lit(1)).alias("n_items"),
     )
 

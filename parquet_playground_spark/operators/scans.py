@@ -26,6 +26,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register
 from parquet_playground_spark.tables import load_table, table_path
 
@@ -90,16 +91,12 @@ def write_roundtrip_snappy(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(tempfile.gettempdir(), f"ppspark_roundtrip_orders_{os.getpid()}")
     orders.write.mode("overwrite").option("compression", "snappy").parquet(out)
     back = spark.read.parquet(out)
-    # exact cents (q1/q19 pattern — drifted at the sf3 screen)
+    # exact cents (exact_sum — drifted at the sf3 screen)
     return back.agg(
         F.count("*").alias("n_rows"),
         F.countDistinct("o_orderkey").alias("n_keys"),
         (
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-                    "decimal(38,0)"
-                )
-            ).cast("double")
+            exact_sum(F.floor(F.col("o_totalprice") * 100.0 + 0.5)).cast("double")
             / 100.0
         ).alias("sum_price"),
     )
@@ -190,13 +187,9 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("priority")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            # exact cents (q1/q19 pattern — drifted at sf1)
+            # exact cents (exact_sum — drifted at sf1)
             (
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-                        "decimal(38,0)"
-                    )
-                ).cast("double")
+                exact_sum(F.floor(F.col("o_totalprice") * 100.0 + 0.5)).cast("double")
                 / 100.0
             ).alias("total"),
         )
@@ -238,16 +231,12 @@ def scan_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "*.parquet")
         .parquet(root)
     )
-    # exact cents (q1/q19 pattern — drifted at the sf3 screen)
+    # exact cents (exact_sum — drifted at the sf3 screen)
     return back.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("o_orderkey").cast("bigint").alias("key_sum"),
         (
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-                    "decimal(38,0)"
-                )
-            ).cast("double")
+            exact_sum(F.floor(F.col("o_totalprice") * 100.0 + 0.5)).cast("double")
             / 100.0
         ).alias("price_sum"),
     )

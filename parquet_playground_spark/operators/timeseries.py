@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import (
     register,
     track_persist,
@@ -135,12 +136,12 @@ def ts_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", "ts").alias("hour"),
         "value",
     )
-    # exact integer cents (q1/q19 pattern): the sf10 sweep caught the
+    # exact integer cents (exact_sum): the sf10 sweep caught the
     # grand-total rollup row drifting off the 4-dp grid at ~5e8
-    v_c = F.floor(F.col("value") * 100.0 + 0.5).cast("decimal(38,0)")
+    v_c = F.floor(F.col("value") * 100.0 + 0.5)
     return e.rollup("day", "hour").agg(
         F.count(F.lit(1)).alias("cnt"),
-        (F.sum(v_c).cast("double") / 100.0).alias("sum_value"),
+        (exact_sum(v_c).cast("double") / 100.0).alias("sum_value"),
     )
 
 
@@ -1752,10 +1753,10 @@ def ts_gapfill_interpolate_linear(
     rounds at 6 dp. The final observed minute (no successor) is
     emitted separately so the spine is exactly [min, max]."""
     e = load_table(spark, sf_dir, "events")
-    v_c = F.floor(F.col("value") * 100.0 + 0.5).cast("decimal(38,0)")
+    v_c = F.floor(F.col("value") * 100.0 + 0.5)
     per_min = (
         e.groupBy(F.date_trunc("minute", "ts").alias("minute"))
-        .agg(F.sum(v_c).alias("s_c"), F.count(F.lit(1)).alias("n"))
+        .agg(exact_sum(v_c).alias("s_c"), F.count(F.lit(1)).alias("n"))
         .select(
             "minute",
             (

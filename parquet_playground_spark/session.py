@@ -28,8 +28,10 @@ broadcast demotion); Parquet filter pushdown, nested schema pruning and
 aggregate pushdown, which is how Catalyst does the reference's manual
 footer pruning (MutableParquetMetadata.java:35-115); the INT96 and
 nanosecond timestamp decode the reference does by hand
-(ParquetConverter.java:40-61); Arrow for every pandas exchange; and a
-UTC session time zone for determinism against the DuckDB oracle.
+(ParquetConverter.java:40-61); Arrow for every pandas exchange; ANSI
+overflow checks, which keep ``exact_sum``'s int64 limb sums exact or
+loud; and a UTC session time zone for determinism against the DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -43,6 +45,10 @@ from pyspark.sql import SparkSession
 SESSION_CONFS = {
     # determinism against the oracle
     "spark.sql.session.timeZone": "UTC",
+    # integer overflow raises instead of wrapping; exact_sum's int64
+    # limb sums are exact only under this check (Spark 4's default,
+    # pinned against a session that turned it off)
+    "spark.sql.ansi.enabled": "true",
     # adaptive execution: coalesce shuffles, split skew, demote
     # sort-merge to broadcast at runtime
     "spark.sql.adaptive.enabled": "true",

@@ -17,6 +17,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register
 from parquet_playground_spark.session import scoped_confs
 from parquet_playground_spark.tables import load_table
@@ -48,15 +49,11 @@ def write_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _tmp("orders_partitioned")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     back = spark.read.parquet(out)
-    # exact cents (q1/q19 pattern — drifted at sf1's ~1.2e11)
+    # exact cents (exact_sum — drifted at sf1's ~1.2e11)
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
         (
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-                    "decimal(38,0)"
-                )
-            ).cast("double")
+            exact_sum(F.floor(F.col("o_totalprice") * 100.0 + 0.5)).cast("double")
             / 100.0
         ).alias("total"),
     )
@@ -175,13 +172,9 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count("*").alias("n_orders"),
-            # exact cents (q1/q19 pattern — drifted at sf1)
+            # exact cents (exact_sum — drifted at sf1)
             (
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-                        "decimal(38,0)"
-                    )
-                ).cast("double")
+                exact_sum(F.floor(F.col("o_totalprice") * 100.0 + 0.5)).cast("double")
                 / 100.0
             ).alias("sum_price"),
         )
@@ -321,13 +314,9 @@ def write_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
             # 1e-3-USD integer units: the halved 'F' prices are exact
             # half-cents, so milli-dollars integerize both branches
-            # (q1/q19 pattern — the float sum drifted at sf1)
+            # (exact_sum — the float sum drifted at sf1)
             (
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 1000.0 + 0.5).cast(
-                        "decimal(38,0)"
-                    )
-                ).cast("double")
+                exact_sum(F.floor(F.col("o_totalprice") * 1000.0 + 0.5)).cast("double")
                 / 1000.0
             ).alias("total"),
         )
@@ -351,7 +340,7 @@ def write_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate-pushdown/column-pruning scan path on re-read). The
     oracle checks the re-read aggregate equals the source table, so a
     lossy type mapping would surface as a hash mismatch. sum_bal is
-    exact integer cents (q1/q19 pattern): the sf100 A-category sweep
+    exact integer cents (exact_sum): the sf100 A-category sweep
     caught round(sum(s_acctbal), 4) splitting one ulp at ~4.6e9 (1M
     2dp terms — double-sum order sensitivity crosses the 4dp round)."""
     s = load_table(spark, sf_dir, "supplier")
@@ -362,11 +351,7 @@ def write_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_rows"),
         F.count_distinct("s_suppkey").alias("n_keys"),
         (
-            F.sum(
-                F.floor(F.col("s_acctbal") * 100.0 + 0.5).cast(
-                    "decimal(38,0)"
-                )
-            ).cast("double")
+            exact_sum(F.floor(F.col("s_acctbal") * 100.0 + 0.5)).cast("double")
             / 100.0
         ).alias("sum_bal"),
     )
@@ -527,13 +512,9 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            # exact cents (q1/q19 pattern — drifted at the sf3 screen)
+            # exact cents (exact_sum — drifted at the sf3 screen)
             (
-                F.sum(
-                    F.floor(F.col("o_totalprice") * 100.0 + 0.5).cast(
-                        "decimal(38,0)"
-                    )
-                ).cast("double")
+                exact_sum(F.floor(F.col("o_totalprice") * 100.0 + 0.5)).cast("double")
                 / 100.0
             ).alias("revenue"),
         )

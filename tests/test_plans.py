@@ -8,6 +8,8 @@ hash can't see them, so they get their own tests.
 
 from __future__ import annotations
 
+import re
+
 from parquet_playground_spark.plans.inspect import (
     codegen_stage_count,
     formatted_plan,
@@ -1309,3 +1311,67 @@ def test_cogroup_fact_side_carries_probe_predicate(spark):
         "orders-side probe predicate gone — empty-group callback flood"
     )
     assert has_pushed_filter(df, "c_custkey")
+
+
+def _joins_building(node, table):
+    """Hash joins in an executed (AQE final) plan whose build side reads
+    `table`, as node names. Walks py4j nodes, descending into query
+    stages, whose plan is not among their children."""
+    found = []
+    name = node.nodeName()
+    if name in ("BroadcastHashJoin", "ShuffledHashJoin"):
+        build = node.right() if node.buildSide().toString() == "BuildRight" else node.left()
+        if f"{table}.parquet" in build.treeString():
+            found.append(name)
+    kids = [node.plan()] if "QueryStage" in name else []
+    if name == "AdaptiveSparkPlan":
+        kids = [node.executedPlan()]
+    children = node.children()
+    kids += [children.apply(i) for i in range(children.size())]
+    for kid in kids:
+        found += _joins_building(kid, table)
+    return found
+
+
+def test_q5_streams_lineitem_never_builds_it(spark):
+    """lineitem is q5's fact table: it must be the streamed (probe) side
+    of every join in the final plan, never a hash build or a broadcast.
+    The filtered customer-orders set is the shuffle_hash build side
+    instead (the q18 pattern); left to the planner, sf0.1 broadcast
+    all 600k lineitem rows from one task."""
+    df = _q("q5_local_supplier")(spark, SF_DIR)
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    assert "isFinalPlan=true" in plan.toString()
+    assert _joins_building(plan, "lineitem") == []
+    assert _joins_building(plan, "orders"), "orders side is no longer built"
+
+
+def _partial_sum_args(plan):
+    """The argument of every partial_sum(...) in a formatted plan."""
+    args = []
+    for m in re.finditer(r"partial_sum\(", plan):
+        depth, i = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        args.append(plan[m.end() : i - 1])
+    return args
+
+
+def test_money_sums_stay_off_decimal_buffers(spark):
+    """exact_sum keeps the per-row sums on int64 limbs: no partial
+    aggregate in the final plans of q1 and write_partitioned_parquet
+    sums a DECIMAL(38,0) cast, the per-row BigDecimal work it replaced."""
+    for name in ("q1_pricing_summary", "write_partitioned_parquet"):
+        df = _q(name)(spark, SF_DIR)
+        assert df.collect()
+        plan = formatted_plan(df)
+        assert "isFinalPlan=true" in plan, name
+        args = _partial_sum_args(plan)
+        assert args, name
+        decimal_sums = [
+            a for a in args
+            if a.startswith("cast(") and a.endswith(" as decimal(38,0))")
+        ]
+        assert decimal_sums == [], (name, decimal_sums)

@@ -12,10 +12,16 @@ correctness, not latency, is under test.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+import pytest
+from hypothesis import HealthCheck, example, given, settings, strategies as st
+from pyspark.errors import ArithmeticException
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType
 
+from parquet_playground_spark.operators.aggregates import exact_sum
 from tests.conftest import SF_DIR
+
+LONG_MIN, LONG_MAX = -(1 << 63), (1 << 63) - 1
 
 STATUSES = ["F", "O", "P"]
 PRIORITIES = [
@@ -312,3 +318,69 @@ def test_distrank_equals_single_partition_windows(spark, seed):
     exp = {r["k"]: (r["rn"], r["nt"], r["cs"], r["pm"]) for r in expected.collect()}
     act = {r["k"]: (r["rn"], r["nt"], r["cs"], r["pm"]) for r in got.collect()}
     assert act == exp
+
+
+def _py_sum(values):
+    present = [v for v in values if v is not None]
+    return sum(present) if present else None
+
+
+@settings(
+    max_examples=15,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(0, 3),
+            st.one_of(
+                st.none(),
+                st.integers(LONG_MIN, LONG_MAX),
+                st.sampled_from([LONG_MIN, LONG_MAX, 1 << 62, -(1 << 62), -1]),
+            ),
+        ),
+        max_size=40,
+    )
+)
+@example(rows=[])
+@example(
+    rows=[(0, None), (0, None), (1, LONG_MAX), (1, LONG_MAX), (2, LONG_MIN),
+          (2, LONG_MIN), (3, 1 << 62), (3, -(1 << 62)), (3, None)]
+)
+def test_exact_sum_matches_python_and_decimal_sum(spark, rows):
+    """exact_sum's int64 limbs give Python's exact integer sum, and the
+    value and type of F.sum(cast decimal(38,0)) it replaces, for any
+    int64 mix: negatives, the extremes, NULLs, all-NULL groups and an
+    empty input (one NULL row from a global aggregate)."""
+    df = spark.createDataFrame(rows, "g int, v bigint")
+    new, old = exact_sum(F.col("v")), F.sum(F.col("v").cast("decimal(38,0)"))
+    grouped = df.groupBy("g").agg(new.alias("e"), old.alias("d"))
+    whole = df.agg(new.alias("e"), old.alias("d"))
+    for frame in (grouped, whole):
+        assert frame.schema["e"].dataType == DecimalType(38, 0)
+        assert frame.schema["e"].dataType == frame.schema["d"].dataType
+
+    by_group = {}
+    for g, v in rows:
+        by_group.setdefault(g, []).append(v)
+    expected = {g: _py_sum(vs) for g, vs in by_group.items()}
+    got = {r["g"]: (r["e"], r["d"]) for r in grouped.collect()}
+    assert got == {g: (s, s) for g, s in expected.items()}
+    (w,) = whole.collect()
+    total = _py_sum([v for _, v in rows])
+    assert (w["e"], w["d"]) == (total, total)
+
+
+def test_exact_sum_raises_on_limb_overflow(spark):
+    """2^20 rows of Long.MaxValue are the largest such sum the hi limb
+    holds: exact. One more row overflows it, and ANSI mode raises
+    ARITHMETIC_OVERFLOW instead of returning a wrapped total."""
+
+    def total(n):
+        one = spark.range(n).select(F.lit(LONG_MAX).alias("v"))
+        return one.agg(exact_sum(F.col("v")).alias("s")).collect()[0]["s"]
+
+    assert total(1 << 20) == (1 << 20) * LONG_MAX
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        total((1 << 20) + 1)

@@ -30,7 +30,10 @@ def test_foreign_session_gets_the_whole_table(spark):
     foreign = spark.newSession()
     foreign.conf.set(PARTS, "200")
     foreign.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    foreign.conf.set("spark.sql.ansi.enabled", "false")
     ensure_session_defaults(foreign)
+    # exact_sum raises on limb overflow only under ANSI
+    assert foreign.conf.get("spark.sql.ansi.enabled") == "true"
     for key, value in SESSION_CONFS.items():
         assert foreign.conf.get(key) == value, key
     assert foreign.conf.get(PARTS) == str(spark.sparkContext.defaultParallelism)

@@ -28,7 +28,7 @@ in BENCH_local.md r8 (scd2_dimension_build, ts_window_time_range,
 window_rolling_median, ts_ewma_bounded, window_running_distinct).
 
 Usage:
-  SPARK_GRAFT_VERIFY_SF_DIR=/root/repo/.localdata/sf100 \
+  SPARK_GRAFT_VERIFY_SF_DIR=.localdata/sf100 \
       python tools/fingerprint_check.py name [name ...]
 """
 
@@ -40,7 +40,8 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get(
     "SPARK_GRAFT_VERIFY_SF_DIR", "/root/testdata/sf0.01"

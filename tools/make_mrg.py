@@ -30,7 +30,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/.localdata/sf0.1mrg"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DST = os.path.join(ROOT, ".localdata", "sf0.1mrg")
 
 # files per table: big facts get ~32 shards (one per local core),
 # mid-size tables fewer, tiny dims stay single-file.

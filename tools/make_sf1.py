@@ -16,7 +16,7 @@ which would quadratically inflate LSH bucket pairs BY CONSTRUCTION OF
 THE DATA and make the algorithmic slope unreadable.
 
 Fixed-size dimensions (region, nation) are copied unscaled, as in
-TPC-H. Output: /root/repo/.localdata/sf1/*.parquet (gitignored).
+TPC-H. Output: .localdata/sf1/*.parquet in this checkout (gitignored).
 
 Usage: python tools/make_sf1.py [n_replicas]
 n_replicas defaults to 10 (sf1). Pass 30 for an sf3 point (second
@@ -32,6 +32,7 @@ import sys
 import duckdb
 
 SRC = "/root/testdata/sf0.1"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings".split()
@@ -44,7 +45,7 @@ def main() -> None:
     # label = replicas/10 of the sf0.1 source, exact (%g drops a
     # trailing .0): 10 -> sf1, 30 -> sf3, 100 -> sf10, 12 -> sf1.2 —
     # a non-decade count gets its own dir instead of clobbering sf1
-    DST = f"/root/repo/.localdata/sf{n_rep / 10:g}"
+    DST = os.path.join(ROOT, ".localdata", f"sf{n_rep / 10:g}")
     os.makedirs(DST, exist_ok=True)
     con = duckdb.connect()
     # Row order inside a fixture file is semantically irrelevant (both

@@ -20,9 +20,11 @@ Exit 0 = no unexplained anti-pattern.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -28,10 +28,11 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PLANS_DIR = os.path.join("/root/repo", "plans", "r10")
+PLANS_DIR = os.path.join(ROOT, "plans", "r10")
 
 HEADLINE = [
     "q1_pricing_summary",

@@ -11,7 +11,7 @@ executes without collecting to the driver. A warmup query absorbs
 JVM/codegen startup.
 
 Usage:
-  SPARK_GRAFT_SCREEN_SF_DIR=/root/repo/.localdata/sf10 \
+  SPARK_GRAFT_SCREEN_SF_DIR=.localdata/sf10 \
       python tools/scale_screen.py [--passes N] name [name ...]
 
 Prints one `name seconds` line per query (min over passes) and a
@@ -24,10 +24,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get(
-    "SPARK_GRAFT_SCREEN_SF_DIR", "/root/repo/.localdata/sf1"
+    "SPARK_GRAFT_SCREEN_SF_DIR", os.path.join(ROOT, ".localdata", "sf1")
 )
 
 

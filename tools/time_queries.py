@@ -16,7 +16,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get(
     "SPARK_GRAFT_TIME_SF_DIR", "/root/testdata/sf0.01"

@@ -31,12 +31,14 @@ Usage: python tools/type_sweep.py [query_name ...]
 from __future__ import annotations
 
 import re
+import os
 import sys
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = (

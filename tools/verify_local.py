@@ -51,7 +51,8 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # Override with SPARK_GRAFT_VERIFY_SF_DIR to sweep the oracle suite at
 # another scale point (e.g. sf0.1, or the local sf1 build) — oracle
