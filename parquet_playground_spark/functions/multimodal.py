@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, scratch_path
 
 # synthetic header: magic 'PPSB' + uint32 width + uint32 height
 _MAGIC = b"PPSB"
@@ -78,12 +78,9 @@ def multimodal_binary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary.parquet / R7 write path). The integrity tag is derivable
     from the source text, so the DuckDB oracle can verify the
     roundtrip preserved every byte."""
-    import os
-    import tempfile
-
     d = load_table(spark, sf_dir, "documents")
     media = with_binary_payload(d)
-    out = os.path.join(tempfile.gettempdir(), f"ppspark_media_roundtrip_{os.getpid()}")
+    out = scratch_path("media_roundtrip")
     media.write.mode("overwrite").option("compression", "snappy").parquet(out)
     back = spark.read.parquet(out)
     text_back = F.decode(F.expr("substring(media, 13, length(media) - 12)"), "utf-8")

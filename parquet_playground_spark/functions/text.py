@@ -523,7 +523,8 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumed its per_doc projection twice, and predicate pushdown
     # re-expanded the tokenization into the hits FILTER as well, so
     # each document was re-split in three operators across two full
-    # scans (plans/r10/text_bm25_search_before.txt nodes (2)/(3)/(5)).
+    # scans (`git show e3d5e8c:plans/r10/text_bm25_search_before.txt`
+    # nodes (2)/(3)/(5)).
     # Measured old-r8-form vs r9-form, adjacent processes, min-of-4:
     # sf0.1 0.772 vs 0.768 (parity), sf1 1.561 vs 2.764 — the r9
     # shape LOSES 1.8x at 10x docs; the per-row re-tokenization grows

@@ -563,9 +563,10 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-of-5, results collect-identical). The small hit set then
     joins customer with no re-aggregation. The r8 form scanned and
     shuffled lineitem a second time through the semi-join and
-    re-summed it in a final aggregate (plans/r09/q18_*_before.txt:
-    4 scans, 2 fact exchanges + final-agg exchange); now 1 lineitem
-    scan, no final aggregate. total_qty is bit-identical under
+    re-summed it in a final aggregate (`git show
+    e3d5e8c:plans/r09/q18_large_orders_before.txt`: 4 scans, 2 fact
+    exchanges + final-agg exchange); now 1 lineitem scan, no final
+    aggregate. total_qty is bit-identical under
     either grouping: l_quantity is integer-valued, so the double sum
     is exact in any accumulation order."""
     c = load_table(spark, sf_dir, "customer")
@@ -1118,7 +1119,8 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9: the previous form referenced per_supp twice (filter side +
     # stats side), and Catalyst DUPLICATED the whole lineitem ⋈ orders
     # + aggregate subtree — two fact scans, two fact shuffles, plus a
-    # per_supp ⋈ stats join-back (plans/r09/q21_*_before.txt). When
+    # per_supp ⋈ stats join-back (`git show
+    # e3d5e8c:plans/r09/q21_waiting_supplier_before.txt`). When
     # n_late = 1 the sole late supplier is max(when(late, skey)), so
     # the join-back and the duplicate subtree both collapse into one
     # aggregation pass: 1 fact scan, 1 fact exchange, 0 self-joins.

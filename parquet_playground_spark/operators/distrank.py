@@ -106,7 +106,7 @@ def global_rank(
     input re-runs its whole lineage per reference — chained calls
     (rfm's three metrics, ks_test's nested running aggs) compounded
     this to 30+ copies of the upstream aggregate in one plan (r9;
-    plans/r09/customer_rfm_segments_*).
+    `git show e3d5e8c:plans/r09/customer_rfm_segments_before.txt`).
 
     Persist contract (r9 ADVICE/VERDICT): callers pass REDUCED frames
     (per-key aggregates, value-count tables), never a raw fact table —

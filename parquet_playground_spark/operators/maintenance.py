@@ -24,16 +24,14 @@ data so pruning has something to prune.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.functions.scalars import _round_stable
 from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.session import scoped_confs
+from parquet_playground_spark.tables import load_table, scratch_path
 
 _SEC = "CAST(epoch(date_trunc('second', ts)) AS BIGINT)"
 
@@ -121,19 +119,23 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction is lossless, and the per-phase file count (from the
     `_metadata.file_name` hidden column of the actual re-read) proves
     the file count really dropped 8x. The expected counts are exact:
-    round-robin repartition(32) fills all 32, coalesce(4) merges
-    without shuffle. At 100 TB this is the nightly compaction of a
-    streaming sink's minute-files — coalesce avoids the shuffle;
+    round-robin repartition(32) fills all 32, and coalesce(4) of one
+    read split per small file merges them without shuffle. At 100 TB
+    this is the nightly compaction of a streaming sink's minute-files
+    — coalesce avoids the shuffle;
     repartitionByRange would additionally restore sort order for
     min/max pruning (see zorder_morton_layout)."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    small_dir = os.path.join(tempfile.gettempdir(), f"ppspark_compact_small_{os.getpid()}")
-    big_dir = os.path.join(tempfile.gettempdir(), f"ppspark_compact_big_{os.getpid()}")
+    small_dir, big_dir = scratch_path("compact_small"), scratch_path("compact_big")
     o.repartition(_SMALL_FILES).write.mode("overwrite").parquet(small_dir)
     small = spark.read.parquet(small_dir)
-    small.coalesce(_COMPACTED_FILES).write.mode("overwrite").parquet(big_dir)
+    # coalesce can only merge read splits, and Spark packs small files
+    # into about one split per core; one split per file keeps the
+    # compacted count at _COMPACTED_FILES on any core count
+    with scoped_confs(spark, {"spark.sql.files.minPartitionNum": str(_SMALL_FILES)}):
+        small.coalesce(_COMPACTED_FILES).write.mode("overwrite").parquet(big_dir)
 
     def checksum(df: DataFrame, phase: str) -> DataFrame:
         return df.agg(

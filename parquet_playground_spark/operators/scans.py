@@ -21,14 +21,14 @@ from reading 100 TB.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register
-from parquet_playground_spark.tables import load_table, table_path
+from parquet_playground_spark.sources.corpus import CORPUS_DIR
+from parquet_playground_spark.tables import load_table, scratch_path, table_path
 
 
 @register(
@@ -88,7 +88,7 @@ def write_roundtrip_snappy(spark: SparkSession, sf_dir: str) -> DataFrame:
     InMemoryOutputFile.java:9-46, a single-node ceiling this removes).
     """
     orders = load_table(spark, sf_dir, "orders")
-    out = os.path.join(tempfile.gettempdir(), f"ppspark_roundtrip_orders_{os.getpid()}")
+    out = scratch_path("roundtrip_orders")
     orders.write.mode("overwrite").option("compression", "snappy").parquet(out)
     back = spark.read.parquet(out)
     # exact cents (exact_sum — drifted at the sf3 screen)
@@ -165,7 +165,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (per-file footers stay authoritative; no rewrite of old
     data). Even/odd orderkey halves stand in for the two snapshots."""
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(tempfile.gettempdir(), f"ppspark_schema_evo_{os.getpid()}")
+    out = scratch_path("schema_evo")
     old = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
     )
@@ -221,7 +221,7 @@ def scan_recursive_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
     the files (it is here: partitionBy writes it into the path, and we
     re-derive nothing from it)."""
     o = load_table(spark, sf_dir, "orders")
-    root = os.path.join(tempfile.gettempdir(), f"ppspark_lake_tree_{os.getpid()}")
+    root = scratch_path("lake_tree")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(root)
     # decoy the glob must skip
     with open(os.path.join(root, "manifest.json"), "w") as fh:
@@ -283,7 +283,7 @@ def scan_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint")
         % _META_BUCKETS
     )
-    root = os.path.join(tempfile.gettempdir(), f"ppspark_meta_buckets_{os.getpid()}")
+    root = scratch_path("meta_buckets")
     with_b = o.withColumn("b", bucket)
     with_b.repartition(_META_BUCKETS, F.col("b")).write.partitionBy(
         "b"
@@ -363,13 +363,12 @@ def scan_ignore_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference tie: README.md:19 'fail cleanly' corpus theme,
     parquet-files-testing_bad_data_PARQUET-1481.parquet."""
     import shutil
-    import tempfile
 
-    stage = os.path.join(tempfile.gettempdir(), f"ppspark_corrupt_mix_{os.getpid()}")
+    stage = scratch_path("corrupt_mix")
     os.makedirs(stage, exist_ok=True)
     shutil.copy(table_path(sf_dir, "nation"), os.path.join(stage, "good.parquet"))
     shutil.copy(
-        "/root/reference/parquet-files-testing_bad_data_PARQUET-1481.parquet",
+        os.path.join(CORPUS_DIR, "parquet-files-testing_bad_data_PARQUET-1481.parquet"),
         os.path.join(stage, "bad.parquet"),
     )
     # The fuzz file's FOOTER parses (one column, `Handle`), so schema
@@ -408,11 +407,8 @@ def scan_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     penalty. The aggregate matches the source table exactly because
     int32→int64 and float32(1.5x of small ints)→float64 are lossless
     for these values."""
-    import os
-    import tempfile
-
     n = load_table(spark, sf_dir, "nation")
-    out = os.path.join(tempfile.gettempdir(), f"ppspark_narrow_types_{os.getpid()}")
+    out = scratch_path("narrow_types")
     (
         n.select(
             F.col("n_nationkey").cast("int").alias("n_nationkey"),

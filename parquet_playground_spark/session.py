@@ -79,12 +79,15 @@ _ROCKSDB_PROVIDER = (
 
 def get_spark(app_name: str = "parquet-playground-spark") -> SparkSession:
     """Create (or fetch) the engine's SparkSession."""
+    from parquet_playground_spark.tables import scratch_path
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        # bucketed-table warehouse outside the repo tree
-        .config("spark.sql.warehouse.dir", "/tmp/ppspark_warehouse")
+        # managed (bucketed) tables go to this process's own scratch
+        # dir, outside the repo tree and apart from concurrent sessions
+        .config("spark.sql.warehouse.dir", scratch_path("warehouse"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

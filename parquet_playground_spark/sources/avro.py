@@ -11,11 +11,15 @@ top of it.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 from parquet_playground_spark.registry import register
+from parquet_playground_spark.sources.corpus import CORPUS_DIR
+from parquet_playground_spark.tables import scratch_path
 
-REFERENCE_AVRO = "/root/reference/3records.1.AVRO"
+REFERENCE_AVRO = os.path.join(CORPUS_DIR, "3records.1.AVRO")
 
 
 class AvroUnavailableError(RuntimeError):
@@ -76,12 +80,9 @@ def avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     nullable string array), so a decoder bug — wrong zigzag, bad union
     branch, snappy CRC skipped — fails the value hash, not just a
     count."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    out = os.path.join(tempfile.gettempdir(), f"ppspark_avro_ingest_{os.getpid()}")
+    out = scratch_path("avro_ingest")
     avro_to_parquet(spark, REFERENCE_AVRO, out)
     back = spark.read.parquet(out)
     return back.select("id", F.array_join("id2", ",").alias("id2_joined"))

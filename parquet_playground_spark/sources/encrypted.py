@@ -28,8 +28,8 @@ from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register
 from parquet_playground_spark.session import ensure_session_defaults
+from parquet_playground_spark.sources.corpus import CORPUS_DIR
 
-CORPUS_DIR = "/root/reference"
 FACTORY_CLASS = "pp.PlaygroundDecryptionFactory"
 CRYPTO_JAR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -202,9 +202,7 @@ def write_encrypted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hadoop conf, so a 1000-executor write encrypts in parallel with no
     extra shuffle or driver coordination.
     """
-    import tempfile
-
-    from parquet_playground_spark.tables import load_table
+    from parquet_playground_spark.tables import load_table, scratch_path
 
     ensure_session_defaults(spark)
     install_crypto_classloader(spark)
@@ -214,7 +212,7 @@ def write_encrypted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_orderkey", "l_extendedprice", "l_discount")
     )
     records = []
-    base = os.path.join(tempfile.gettempdir(), f"ppspark_encrypted_write_{os.getpid()}")
+    base = scratch_path("encrypted_write")
     for variant, plaintext_footer, aad, ctr, no_aad_store in _WRITE_VARIANTS:
         try:
             records.append(

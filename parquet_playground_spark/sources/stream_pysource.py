@@ -291,13 +291,12 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
     import shutil
-    import tempfile
 
-    from parquet_playground_spark.tables import load_table
+    from parquet_playground_spark.tables import load_table, scratch_path
 
     ensure_session_defaults(spark)
     spark.dataSource.register(make_sink_datasource())
-    out = os.path.join(tempfile.gettempdir(), f"ppspark_pysink_{os.getpid()}")
+    out = scratch_path("pysink")
     shutil.rmtree(out, ignore_errors=True)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"

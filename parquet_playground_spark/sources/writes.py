@@ -12,7 +12,6 @@ interchange.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,15 +19,7 @@ from pyspark.sql import functions as F
 from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register
 from parquet_playground_spark.session import scoped_confs
-from parquet_playground_spark.tables import load_table
-
-
-def _tmp(name: str) -> str:
-    # Per-process suffix: two concurrent harness sessions (e.g. pytest
-    # next to a verify sweep) must not overwrite each other's staging
-    # dirs mid-read. Stable within a process so per-session caching
-    # still works.
-    return os.path.join(tempfile.gettempdir(), f"ppspark_{name}_{os.getpid()}")
+from parquet_playground_spark.tables import load_table, scratch_path
 
 
 @register(
@@ -46,7 +37,7 @@ def write_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition pruning available to downstream filters. At 100 TB,
     partition columns are the first-line data-skipping mechanism."""
     o = load_table(spark, sf_dir, "orders")
-    out = _tmp("orders_partitioned")
+    out = scratch_path("orders_partitioned")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     back = spark.read.parquet(out)
     # exact cents (exact_sum — drifted at sf1's ~1.2e11)
@@ -75,7 +66,7 @@ def write_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
     frames = []
     for codec in ["snappy", "gzip", "zstd", "lz4", "none"]:
-        out = _tmp(f"supplier_{codec}")
+        out = scratch_path(f"supplier_{codec}")
         s.write.mode("overwrite").option("compression", codec).parquet(out)
         frames.append(
             spark.read.parquet(out)
@@ -99,9 +90,7 @@ def _ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> None:
     # LOCATION_ALREADY_EXISTS from a previous session's leftovers
     import shutil
 
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "/tmp/ppspark_warehouse"
-    ).removeprefix("file:")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     for tbl in ("pp_orders_bucketed", "pp_customer_bucketed"):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
         shutil.rmtree(os.path.join(warehouse, tbl), ignore_errors=True)
@@ -194,7 +183,7 @@ def write_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interchange formats: parquet -> CSV -> JSON -> parquet, fidelity
     checked against the original table."""
     n = load_table(spark, sf_dir, "nation")
-    csv_out, json_out = _tmp("nation_csv"), _tmp("nation_json")
+    csv_out, json_out = scratch_path("nation_csv"), scratch_path("nation_json")
     n.write.mode("overwrite").option("header", "true").csv(csv_out)
     csv_back = spark.read.option("header", "true").schema(n.schema).csv(csv_out)
     csv_back.write.mode("overwrite").json(json_out)
@@ -229,7 +218,7 @@ def write_sorted_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrip query on the original table: the rewrite must be
     content-preserving."""
     e = load_table(spark, sf_dir, "events")
-    out = _tmp("events_sorted")
+    out = scratch_path("events_sorted")
     (
         e.repartitionByRange(8, "user_id")
         .sortWithinPartitions("user_id", "ts")
@@ -259,7 +248,7 @@ def write_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    out = _tmp("nation_xml")
+    out = scratch_path("nation_xml")
     (
         n.write.mode("overwrite")
         .format("xml")
@@ -300,7 +289,7 @@ def write_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
     )
-    path = _tmp("part_overwrite")
+    path = scratch_path("part_overwrite")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     refresh = o.filter(F.col("o_orderstatus") == "F").withColumn(
         "o_totalprice", F.col("o_totalprice") * 0.5
@@ -344,7 +333,7 @@ def write_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     caught round(sum(s_acctbal), 4) splitting one ulp at ~4.6e9 (1M
     2dp terms — double-sum order sensitivity crosses the 4dp round)."""
     s = load_table(spark, sf_dir, "supplier")
-    path = _tmp("orc_roundtrip")
+    path = scratch_path("orc_roundtrip")
     s.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.agg(
@@ -394,7 +383,7 @@ def source_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("value")
     )
-    path = _tmp("corrupt_jsonl")
+    path = scratch_path("corrupt_jsonl")
     lines.coalesce(1).write.mode("overwrite").text(path)
     parsed = (
         spark.read.schema("k long, p double, _corrupt_record string")
@@ -434,7 +423,7 @@ def write_max_records_per_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil(rows/cap), which the oracle states from the row count. The
     content checksum proves the split is lossless."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    out = _tmp("orders_capped")
+    out = scratch_path("orders_capped")
     o.coalesce(1).write.mode("overwrite").option(
         "maxRecordsPerFile", _MAX_RECORDS
     ).parquet(out)
@@ -468,7 +457,7 @@ def write_json_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
-    out = _tmp("orders_json_gz")
+    out = scratch_path("orders_json_gz")
     o.write.mode("overwrite").option("compression", "gzip").json(out)
     back = spark.read.schema("o_orderkey long, o_orderstatus string").json(out)
     return back.groupBy("o_orderstatus").agg(
@@ -500,7 +489,7 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     list the other directories'. Oracle states the post-pruning
     result."""
     o = load_table(spark, sf_dir, "orders")
-    out = _tmp("orders_partitioned")
+    out = scratch_path("orders_partitioned")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
     fact = spark.read.parquet(out)
     dim = spark.createDataFrame(
@@ -549,7 +538,7 @@ def write_nested_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
             )
         ).alias("lines")
     )
-    out = _tmp("lineitem_nested")
+    out = scratch_path("lineitem_nested")
     nested.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     flat = back.select(
@@ -587,7 +576,7 @@ def write_bloom_filter_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side over file metadata only (bytes per file, not data).
     """
     p = load_table(spark, sf_dir, "part")
-    out = _tmp("part_bloom")
+    out = scratch_path("part_bloom")
     (
         p.repartition(4)
         .write.mode("overwrite")
@@ -698,7 +687,7 @@ def write_object_store_committer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") <= 2000)
         .select("o_orderkey", "o_totalprice", "o_orderdate")
     )
-    out = _tmp("orders_object_store")
+    out = scratch_path("orders_object_store")
     writer = o.write.mode("overwrite")
     for k, v in _OBJECT_STORE_CONF:
         writer = writer.option(k, v)
@@ -746,7 +735,7 @@ def scan_row_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") <= 4000)
         .select("o_orderkey", "o_totalprice")
     )
-    out = _tmp("orders_rg_stats")
+    out = scratch_path("orders_rg_stats")
     (
         o.coalesce(1)
         .sortWithinPartitions("o_orderkey")

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import time
 import uuid
 
@@ -29,7 +28,7 @@ from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register, track_temp_view
 from parquet_playground_spark.session import ensure_session_defaults, stream_confs
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, scratch_path
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -81,9 +80,7 @@ def _stage_events(
     cached = _STAGED.get(key)
     if cached and os.path.isdir(cached):
         return cached
-    out = os.path.join(
-        tempfile.gettempdir(), f"ppspark_stream_{kind}{n_chunks}_{os.getpid()}"
-    )
+    out = scratch_path(f"stream_{kind}{n_chunks}")
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
     t = _events_arrow(sf_dir)
@@ -181,10 +178,7 @@ def _run_to_table(
     spark = stream_df.sparkSession
     with stream_confs(spark):
         if sink == "files":
-            out_dir = os.path.join(
-                tempfile.gettempdir(),
-                f"ppspark_sinkout_{uuid.uuid4().hex[:12]}_{os.getpid()}",
-            )
+            out_dir = scratch_path(f"sinkout_{uuid.uuid4().hex[:12]}")
             write_mode = "overwrite" if mode == "complete" else "append"
 
             def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -703,7 +697,8 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     staged = _stage_events(spark, sf_dir)
     src = _read_stream(spark, staged)
-    state_root = tempfile.mkdtemp(prefix="pp_fb_state_")
+    state_root = scratch_path("fb_state")
+    shutil.rmtree(state_root, ignore_errors=True)
     version = {"n": 0}
     w_latest = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")
@@ -836,8 +831,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _events_arrow(sf_dir)
     n = t.num_rows
     step = n // 2 + 1
-    src = os.path.join(tempfile.gettempdir(), f"ppspark_ckpt_src_{os.getpid()}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"ppspark_ckpt_cp_{os.getpid()}")
+    src, ckpt = scratch_path("ckpt_src"), scratch_path("ckpt_cp")
     shutil.rmtree(src, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     os.makedirs(src)

@@ -32,17 +32,23 @@ from pyspark.sql.types import StructType
 from parquet_playground_spark.session import ensure_session_defaults
 
 
+def scratch_path(name: str) -> str:
+    """This process's scratch path for `name`: ``ppspark_<name>_<pid>``
+    under the temp dir. Every staging dir, sink, checkpoint and the
+    session warehouse goes through here.
+
+    The pid suffix keeps concurrent sessions (e.g. pytest next to a
+    verify sweep) from overwriting each other's files mid-read; the
+    path is stable within a process, so per-session caching still
+    works, and ``_cleanup_process_staging`` removes it at exit."""
+    return os.path.join(tempfile.gettempdir(), f"ppspark_{name}_{os.getpid()}")
+
+
 @atexit.register
 def _cleanup_process_staging() -> None:
-    """Remove this process's pid-suffixed staging dirs on exit.
-
-    Staging paths carry os.getpid() so concurrent harness sessions
-    can't clobber each other (sources/writes.py _tmp et al.); the
-    flip side is that every process would otherwise leak its own tree
-    in /tmp. Scoped strictly to this pid's dirs — other live sessions
-    are untouched."""
-    pat = os.path.join(tempfile.gettempdir(), f"ppspark_*_{os.getpid()}")
-    for d in _glob.glob(pat):
+    """Remove this process's scratch paths on exit. Scoped strictly to
+    this pid's paths: other live sessions are untouched."""
+    for d in _glob.glob(scratch_path("*")):
         shutil.rmtree(d, ignore_errors=True)
 
 TABLES = (

@@ -148,10 +148,10 @@ def test_partitioned_layout_prunes_partitions(spark):
     """A filter on the Hive partition column must become a
     PartitionFilter (directory pruning — zero I/O for other statuses),
     not a post-scan filter."""
-    from parquet_playground_spark.sources.writes import _tmp
+    from parquet_playground_spark.tables import scratch_path
 
     _q("write_partitioned_parquet")(spark, SF_DIR).collect()  # materialize dir
-    back = spark.read.parquet(_tmp("orders_partitioned")).filter(
+    back = spark.read.parquet(scratch_path("orders_partitioned")).filter(
         "o_orderstatus = 'F'"
     )
     plan = formatted_plan(back)
@@ -285,7 +285,7 @@ def test_bm25_single_pass_no_token_shuffle(spark):
     broadcast. (The r9 per-row array-filter form re-tokenized each
     document in three operators across two scans and measured 1.8x
     slower at sf1; the r8 form shuffle-joined a doc-proportional dl
-    table. plans/r10/text_bm25_search_{before,after}.txt.)"""
+    table. `git show e3d5e8c:plans/r10/text_bm25_search_{before,after}.txt`.)"""
     plan = formatted_plan(_q("text_bm25_search")(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
     # the only join is the 1-row stats broadcast (nested-loop cross)
@@ -339,10 +339,10 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark):
     dynamicpruning subquery on the fact's partition column — at scale
     this is what turns 'scan all partitions then join' into 'scan only
     the partitions the dim filter selects'."""
-    from parquet_playground_spark.sources.writes import _tmp
+    from parquet_playground_spark.tables import scratch_path
 
     _q("write_partitioned_parquet")(spark, SF_DIR).collect()  # materialize dir
-    fact = spark.read.parquet(_tmp("orders_partitioned"))
+    fact = spark.read.parquet(scratch_path("orders_partitioned"))
     from pyspark.sql import functions as F
 
     dim = spark.createDataFrame(

@@ -6,6 +6,9 @@ with the same confs, and no query may leave a conf changed behind it.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 
 from parquet_playground_spark import registry
@@ -14,7 +17,7 @@ from parquet_playground_spark.session import (
     ensure_session_defaults,
     scoped_confs,
 )
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, scratch_path
 from tests.conftest import SF_DIR
 
 PARTS = "spark.sql.shuffle.partitions"
@@ -77,3 +80,20 @@ def test_query_leaves_session_confs_as_it_found_them(spark, name, keys):
     before = {k: fresh.conf.get(k, None) for k in keys}
     assert registry.QUERIES[name](fresh, SF_DIR).collect()
     assert {k: fresh.conf.get(k, None) for k in keys} == before
+
+
+def test_warehouse_is_this_process_scratch_dir(spark):
+    """Managed tables land in a pid-scoped dir under the temp dir, so two
+    processes running join_bucketed_colocated never share table dirs."""
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    assert warehouse == scratch_path("warehouse")
+    assert os.path.dirname(warehouse) == tempfile.gettempdir()
+    assert warehouse.endswith(f"_{os.getpid()}")
+
+
+def test_compaction_file_count_does_not_follow_the_core_count(spark):
+    """compact_small_files must write 4 files however many cores Spark
+    packs the 32 small files' read splits for."""
+    with scoped_confs(spark, {"spark.sql.leafNodeDefaultParallelism": "2"}):
+        rows = registry.QUERIES["compact_small_files"](spark, SF_DIR).collect()
+    assert {r["phase"]: r["n_files"] for r in rows} == {"small": 32, "compacted": 4}

@@ -11,9 +11,9 @@ LOCAL copy: same rows, same order, same schema, split into contiguous
 per-table file shards sized so Spark's split packing (openCostInBytes
 4 MB, minPartitionNum = defaultParallelism) actually parallelizes the
 scans. Nothing in the bench protocol changes; this directory is only
-ever passed to tools/profile_r10.py via SPARK_GRAFT_SF_DIR to check
-that a plan claim (parallel scan, AQE coalesce, skew split) holds when
-scans have real task parallelism.
+ever passed to `tools/time_queries.py --sf .localdata/sf0.1mrg` to
+check that a plan claim (parallel scan, AQE coalesce, skew split) holds
+when scans have real task parallelism.
 
 Row order is preserved (contiguous slices), so the copy is
 row-for-row identical to the source — verified by a full-table
