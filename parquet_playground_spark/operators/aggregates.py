@@ -48,6 +48,17 @@ def exact_sum(v: Column) -> Column:
     return (hi * F.lit(Decimal(1 << _LIMB_BITS)) + lo).cast("decimal(38,0)")
 
 
+def exact_sum_sql(expr: str) -> str:
+    """``exact_sum`` as Spark SQL text, for queries written as SQL:
+    the same two int64 limb sums of the bigint-valued ``expr``,
+    recombined as DECIMAL(38,0) once per group, in place of a per-row
+    ``sum(CAST(expr AS DECIMAL(38, 0)))``."""
+    return (
+        f"CAST(sum(shiftright({expr}, {_LIMB_BITS})) * {1 << _LIMB_BITS}BD"
+        f" + sum(({expr}) & {(1 << _LIMB_BITS) - 1}) AS DECIMAL(38, 0))"
+    )
+
+
 @register(
     "q1_pricing_summary",
     oracle="""

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from parquet_playground_spark.operators.aggregates import exact_sum
+from parquet_playground_spark.operators.aggregates import exact_sum, exact_sum_sql
 from parquet_playground_spark.operators.distrank import (
     global_prefix_sum,
     global_rank,
@@ -814,13 +814,12 @@ def sql_modern_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("param_orders")
     spark.sql("DECLARE OR REPLACE VARIABLE pp_price_thr DOUBLE DEFAULT 0.0")
     spark.sql("SET VARIABLE pp_price_thr = 30000.0")
+    total_c = exact_sum_sql("floor(o_totalprice * 100.0 + 0.5)")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority AS priority,
                count(*) AS n,
-               CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5)
-                             AS DECIMAL(38, 0))) AS DOUBLE) / 100.0
-                   AS total
+               CAST({total_c} AS DOUBLE) / 100.0 AS total
         FROM IDENTIFIER(:tbl)
         WHERE o_totalprice > pp_price_thr AND o_orderstatus = :status
         GROUP BY ALL
@@ -1048,16 +1047,15 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelates into an aggregate joined back on partkey; the brand
     filter broadcasts. The per-part averages are exact in double (small
     integer quantities), so the threshold compare is engine-stable.
-    The revenue sum accumulates exact cents as DECIMAL(38,0) with one
+    The revenue sum adds exact cents (``exact_sum_sql``) with one
     portable-rounded final division (q1/q19 pattern — the global
     float sum grows with SF)."""
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("q17_lineitem")
     load_table(spark, sf_dir, "part").createOrReplaceTempView("q17_part")
+    price_c = exact_sum_sql("floor(l.l_extendedprice * 100.0 + 0.5)")
     return spark.sql(
-        """
-        SELECT CAST(floor(CAST(sum(CAST(floor(l.l_extendedprice * 100.0
-                                         + 0.5) AS DECIMAL(38, 0)))
-                               AS DOUBLE)
+        f"""
+        SELECT CAST(floor(CAST({price_c} AS DOUBLE)
                           / 100.0 / 7.0 * 10000.0 + 0.5) AS DOUBLE)
                    / 10000.0 AS avg_yearly
         FROM q17_lineitem l JOIN q17_part p ON p.p_partkey = l.l_partkey
@@ -1191,18 +1189,17 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the date-filtered orders scan. Balance values sit ~0.01
     apart while cross-engine average drift is ~1e-10 relative, so the
     raw-average threshold compare is stable. The balance total sums
-    exact cents as DECIMAL(38,0) (q1/q19 pattern — the per-segment
+    exact cents with ``exact_sum_sql`` (q1/q19 pattern — the per-segment
     float sum grows with customer count; floor(x*100+0.5) rounds
     half-up toward +inf identically on both engines for the negative
     balances too)."""
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("q22_customer")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("q22_orders")
+    bal_c = exact_sum_sql("floor(c.c_acctbal * 100.0 + 0.5)")
     return spark.sql(
-        """
+        f"""
         SELECT c.c_mktsegment, count(*) AS numcust,
-               CAST(sum(CAST(floor(c.c_acctbal * 100.0 + 0.5)
-                             AS DECIMAL(38, 0))) AS DOUBLE) / 100.0
-                   AS totacctbal
+               CAST({bal_c} AS DOUBLE) / 100.0 AS totacctbal
         FROM q22_customer c
         WHERE c.c_acctbal > (SELECT avg(c2.c_acctbal) FROM q22_customer c2
                              WHERE c2.c_acctbal > 0)
@@ -1550,11 +1547,11 @@ def sql_inline_values_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     LocalRelation as a broadcast build side automatically; the fact
     scan is the only I/O."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("iv_orders")
+    total_c = exact_sum_sql("floor(o.o_totalprice * 100.0 + 0.5)")
     return spark.sql(
-        """
+        f"""
         SELECT v.label, count(*) AS n,
-               CAST(sum(CAST(floor(o.o_totalprice * 100.0 + 0.5)
-                             AS DECIMAL(38, 0))) AS DOUBLE) / 100.0 AS total
+               CAST({total_c} AS DOUBLE) / 100.0 AS total
         FROM iv_orders o
         JOIN VALUES ('O', 'open'), ('F', 'finished'), ('P', 'pending')
              AS v(code, label)
@@ -1910,12 +1907,11 @@ def sql_create_replace_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         """CREATE OR REPLACE TEMPORARY VIEW pp_hot_orders AS
            SELECT * FROM pp_view_src WHERE o_totalprice > 200000"""
     )
+    total_c = exact_sum_sql("floor(o_totalprice * 100.0 + 0.5)")
     return spark.sql(
-        """SELECT o_orderpriority, count(*) AS n,
-                  CAST(sum(CAST(floor(o_totalprice * 100.0 + 0.5)
-                                AS DECIMAL(38, 0))) AS DOUBLE) / 100.0
-                      AS total
-           FROM pp_hot_orders GROUP BY o_orderpriority"""
+        f"""SELECT o_orderpriority, count(*) AS n,
+                   CAST({total_c} AS DOUBLE) / 100.0 AS total
+            FROM pp_hot_orders GROUP BY o_orderpriority"""
     )
 
 

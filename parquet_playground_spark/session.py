@@ -5,8 +5,9 @@ Every dynamic SQL conf the engine relies on lives in ``SESSION_CONFS``.
 session from ``get_spark`` and a session someone else built (the
 external driver's bare ``local[8]``, ``tools/verify_local.py
 --vanilla``) run with the same confs. ``get_spark`` puts only the
-static confs (master, driver memory, warehouse dir, UI, classpath) in
-the builder and then goes through the same call.
+static confs (master, driver memory, warehouse dir, UI, classpath,
+Python worker daemon) in the builder and then goes through the same
+call.
 
   * ``spark.sql.shuffle.partitions`` is the context's
     ``defaultParallelism``: one post-shuffle partition per core, e.g. 8
@@ -32,6 +33,17 @@ nanosecond timestamp decode the reference does by hand
 overflow checks, which keep ``exact_sum``'s int64 limb sums exact or
 loud; and a UTC session time zone for determinism against the DuckDB
 oracle.
+
+``get_spark`` also forks its Python workers from the engine's daemon,
+``pyworker.py`` (``spark.python.daemon.module``, found through
+``spark.executorEnv.PYTHONPATH``). Before each task a stock worker
+re-reads the central directory of every zip on its path, pyspark.zip,
+py4j and the spark-core jar, through ``importlib.invalidate_caches()``:
+on a 4-core host each Python task of a ``get_spark`` session spent
+130-250 ms in worker init (PythonRunner ``Times: ... init=``), where a
+JVM-only job takes ~50 ms end to end. The daemon re-reads an archive
+only when it has changed. A foreign session keeps the stock daemon:
+its results are the same, only its Python tasks are slower.
 """
 
 from __future__ import annotations
@@ -72,6 +84,8 @@ SESSION_CONFS = {
 
 _APPLIED_MARKER = "spark.pp.session.defaults.applied"
 
+_PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
+
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -90,14 +104,16 @@ def get_spark(app_name: str = "parquet-playground-spark") -> SparkSession:
         .config("spark.sql.warehouse.dir", scratch_path("warehouse"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Python workers fork from the engine's daemon (pyworker.py),
+        # which the worker's Python finds on this package's parent dir
+        .config("spark.python.daemon.module", "parquet_playground_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(_PACKAGE_DIR))
     )
     # Parquet modular-encryption factory (sources/encrypted.py): the
     # pp-crypto.jar holds PlaygroundDecryptionFactory with the corpus's
     # published keys; classpath entries only apply at JVM launch, so an
     # already-running session simply leaves the encrypted reads gated.
-    crypto_jar = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "java", "pp-crypto.jar"
-    )
+    crypto_jar = os.path.join(_PACKAGE_DIR, "java", "pp-crypto.jar")
     if os.path.exists(crypto_jar):
         builder = builder.config("spark.driver.extraClassPath", crypto_jar)
     spark = builder.getOrCreate()

@@ -15,11 +15,26 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register
 from parquet_playground_spark.session import scoped_confs
 from parquet_playground_spark.tables import load_table, scratch_path
+
+
+def _write_read_partitioned(
+    spark: SparkSession, df: DataFrame, part_col: str, out: str
+) -> DataFrame:
+    """Write `df` to `out` partitioned by `part_col` and read it back
+    with the schema just written, the partition column last as
+    partition discovery places it. Handing the schema over skips the
+    footer-inference job `spark.read.parquet(out)` runs on every call
+    (sf0.1 orders, 4 cores: 0.13-0.15 s, against 0.03-0.06 s)."""
+    df.write.mode("overwrite").partitionBy(part_col).parquet(out)
+    fields = [f for f in df.schema.fields if f.name != part_col]
+    schema = StructType(fields + [df.schema[part_col]])
+    return spark.read.schema(schema).parquet(out)
 
 
 @register(
@@ -38,8 +53,7 @@ def write_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition columns are the first-line data-skipping mechanism."""
     o = load_table(spark, sf_dir, "orders")
     out = scratch_path("orders_partitioned")
-    o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    back = spark.read.parquet(out)
+    back = _write_read_partitioned(spark, o, "o_orderstatus", out)
     # exact cents (exact_sum — drifted at sf1's ~1.2e11)
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("n"),
@@ -489,9 +503,8 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     list the other directories'. Oracle states the post-pruning
     result."""
     o = load_table(spark, sf_dir, "orders")
-    out = scratch_path("orders_partitioned")
-    o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    fact = spark.read.parquet(out)
+    out = scratch_path("orders_partitioned_dpp")
+    fact = _write_read_partitioned(spark, o, "o_orderstatus", out)
     dim = spark.createDataFrame(
         [("F", "finished"), ("O", "open"), ("P", "pending")],
         ["status", "label"],

@@ -18,7 +18,7 @@ from pyspark.errors import ArithmeticException
 from pyspark.sql import functions as F
 from pyspark.sql.types import DecimalType
 
-from parquet_playground_spark.operators.aggregates import exact_sum
+from parquet_playground_spark.operators.aggregates import exact_sum, exact_sum_sql
 from tests.conftest import SF_DIR
 
 LONG_MIN, LONG_MAX = -(1 << 63), (1 << 63) - 1
@@ -352,14 +352,18 @@ def test_exact_sum_matches_python_and_decimal_sum(spark, rows):
     """exact_sum's int64 limbs give Python's exact integer sum, and the
     value and type of F.sum(cast decimal(38,0)) it replaces, for any
     int64 mix: negatives, the extremes, NULLs, all-NULL groups and an
-    empty input (one NULL row from a global aggregate)."""
+    empty input (one NULL row from a global aggregate). Its SQL text
+    form, exact_sum_sql, gives the same on the same rows."""
     df = spark.createDataFrame(rows, "g int, v bigint")
     new, old = exact_sum(F.col("v")), F.sum(F.col("v").cast("decimal(38,0)"))
-    grouped = df.groupBy("g").agg(new.alias("e"), old.alias("d"))
-    whole = df.agg(new.alias("e"), old.alias("d"))
+    text = F.expr(exact_sum_sql("v"))
+    grouped = df.groupBy("g").agg(new.alias("e"), old.alias("d"), text.alias("t"))
+    whole = df.agg(new.alias("e"), old.alias("d"), text.alias("t"))
     for frame in (grouped, whole):
         assert frame.schema["e"].dataType == DecimalType(38, 0)
         assert frame.schema["e"].dataType == frame.schema["d"].dataType
+        assert frame.schema["t"].dataType == frame.schema["d"].dataType
+        assert all(r["t"] == r["e"] for r in frame.collect())
 
     by_group = {}
     for g, v in rows:

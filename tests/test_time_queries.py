@@ -1,7 +1,7 @@
 """tools/time_queries.py, the per-query timing tool, on the sf0.001 tables.
 
-It must report every requested query with construction + planning +
-execution spans that add up to the run's wall time, keep sweeping
+It must report every requested query with construction + stream +
+planning + execution spans that add up to the run's wall time, keep sweeping
 past a query that raises, and reject an unknown name before any query
 runs.
 """
@@ -32,9 +32,11 @@ def test_every_name_is_reported_with_spans_that_add_up(spark, capsys, tmp_path):
     assert tq.main(argv) == 0
     rows = _rows(capsys.readouterr().out)
     for name in names:
-        wall, construct, plan, exec_ = map(float, rows[name].split()[1:5])
+        wall, construct, stream, plan, exec_ = map(float, rows[name].split()[1:6])
         assert wall > 0, name
-        assert abs(construct + plan + exec_ - wall) <= 0.05 * wall, rows[name]
+        assert abs(construct + stream + plan + exec_ - wall) <= 0.05 * wall, rows[name]
+        # a stream's run is its own span, not construction
+        assert (stream > 0) == name.startswith("stream_"), rows[name]
         assert (tmp_path / f"{name}.txt").read_text().startswith("== Physical Plan ==")
     assert "queries=3 errors=0" in rows["TOTAL"]
     assert "isFinalPlan=true" in (tmp_path / "q1_pricing_summary.txt").read_text()

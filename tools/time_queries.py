@@ -5,10 +5,13 @@ Each query is materialized with a noop-format write (as bench.py does),
 so the whole plan executes without collecting to the driver. Runs go in
 passes over the query list, and each query keeps its fastest run:
 shared hosts drift and stall, so the per-query MIN is the signal. The fastest
-run is also split into three spans, the same way perfbench/worker.py
-traces them: construction (the Python query function building its
-DataFrame), planning (Catalyst producing the executed plan) and
-execution (the noop write).
+run is also split into spans, as perfbench/worker.py traces them:
+construction (the Python query function building its DataFrame),
+planning (Catalyst producing the executed plan) and execution (the
+noop write). Streaming keys run their stream inside the query
+function; the wall time of the streaming queries started there, from a
+StreamingQueryListener's started/terminated events, is reported as
+`stream` and left out of construction.
 
 Usage:
   python tools/time_queries.py [--sf DIR] [--runs N] [--plans DIR]
@@ -52,6 +55,7 @@ class Timing:
     name: str
     wall_s: float = math.inf
     construct_s: float = 0.0
+    stream_s: float = 0.0
     plan_s: float = 0.0
     exec_s: float = 0.0
     error: str = ""
@@ -71,7 +75,51 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     return ns
 
 
-def run_once(spark, fn, sf_dir: str, t: Timing):
+class StreamSpans:
+    """Start and end times of streaming queries, from a
+    StreamingQueryListener. `onQueryStarted` runs inside `start()`;
+    `onQueryTerminated` arrives on the listener bus a little later."""
+
+    def __init__(self, spark) -> None:
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        self.spark = spark
+        self.started: dict[str, float] = {}
+        self.ended: dict[str, float] = {}
+        spans = self
+
+        class Listener(StreamingQueryListener):
+            def onQueryStarted(self, event):
+                spans.started[str(event.id)] = time.perf_counter()
+
+            def onQueryProgress(self, event):
+                pass
+
+            def onQueryIdle(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                spans.ended[str(event.id)] = time.perf_counter()
+
+        self.listener = Listener()
+        spark.streams.addListener(self.listener)
+
+    def seconds(self, t0: float, t1: float) -> float:
+        """Wall time within [t0, t1] covered by streams started there."""
+        if any(t0 <= s <= t1 for s in self.started.values()):
+            self.spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        covered, edge = 0.0, t0
+        for start, qid in sorted((s, q) for q, s in self.started.items() if t0 <= s <= t1):
+            end = min(self.ended.get(qid, t1), t1)
+            covered += max(0.0, end - max(start, edge))
+            edge = max(edge, end)
+        return covered
+
+    def close(self) -> None:
+        self.spark.streams.removeListener(self.listener)
+
+
+def run_once(spark, fn, sf_dir: str, t: Timing, streams: StreamSpans):
     """One noop-write run of `fn`, kept in `t` if it is the fastest;
     returns the run's DataFrame."""
     t0 = time.perf_counter()
@@ -82,7 +130,9 @@ def run_once(spark, fn, sf_dir: str, t: Timing):
     df.write.format("noop").mode("overwrite").save()
     t3 = time.perf_counter()
     if t3 - t0 < t.wall_s:
-        t.wall_s, t.construct_s, t.plan_s, t.exec_s = t3 - t0, t1 - t0, t2 - t1, t3 - t2
+        stream_s = streams.seconds(t0, t1)
+        t.wall_s, t.construct_s, t.stream_s = t3 - t0, t1 - t0 - stream_s, stream_s
+        t.plan_s, t.exec_s = t2 - t1, t3 - t2
     return df
 
 
@@ -105,35 +155,40 @@ def sweep(
     from parquet_playground_spark import registry
 
     timings = [Timing(name) for name in names]
-    for i in range(runs):
-        for t in timings:
-            if t.error:
-                continue
-            spark.sparkContext.setJobDescription(f"time_queries: {t.name}")
-            try:
-                df = run_once(spark, registry.QUERIES[t.name], sf_dir, t)
-                if plans and i == runs - 1:
-                    with open(os.path.join(plans, f"{t.name}.txt"), "w") as fh:
-                        fh.write(final_plan(df))
-            except Exception as exc:  # noqa: BLE001 — report and keep sweeping
-                traceback.print_exc(limit=4)
-                t.error = (str(exc).strip().splitlines() or [type(exc).__name__])[0][:120]
-    spark.sparkContext.setJobDescription(None)
+    streams = StreamSpans(spark)
+    try:
+        for i in range(runs):
+            for t in timings:
+                if t.error:
+                    continue
+                spark.sparkContext.setJobDescription(f"time_queries: {t.name}")
+                try:
+                    df = run_once(spark, registry.QUERIES[t.name], sf_dir, t, streams)
+                    if plans and i == runs - 1:
+                        with open(os.path.join(plans, f"{t.name}.txt"), "w") as fh:
+                            fh.write(final_plan(df))
+                except Exception as exc:  # noqa: BLE001 — report and keep sweeping
+                    traceback.print_exc(limit=4)
+                    t.error = (str(exc).strip().splitlines() or [type(exc).__name__])[0][:120]
+    finally:
+        spark.sparkContext.setJobDescription(None)
+        streams.close()
     return timings
 
 
 def report(timings: list[Timing], sf_dir: str, runs: int) -> None:
-    print(f"{'query':36s} {'wall':>8s} {'construct':>9s} {'plan':>7s} {'exec':>8s}")
+    print(f"{'query':36s} {'wall':>8s} {'construct':>9s} {'stream':>7s} "
+          f"{'plan':>7s} {'exec':>8s}")
     for t in timings:
         if t.error:
             print(f"{t.name:36s} ERROR {t.error}")
         else:
             print(f"{t.name:36s} {t.wall_s:8.3f} {t.construct_s:9.3f} "
-                  f"{t.plan_s:7.3f} {t.exec_s:8.3f}")
+                  f"{t.stream_s:7.3f} {t.plan_s:7.3f} {t.exec_s:8.3f}")
     ok = [t for t in timings if not t.error]
     print(f"{'TOTAL':36s} {sum(t.wall_s for t in ok):8.3f} "
-          f"{sum(t.construct_s for t in ok):9.3f} {sum(t.plan_s for t in ok):7.3f} "
-          f"{sum(t.exec_s for t in ok):8.3f}  "
+          f"{sum(t.construct_s for t in ok):9.3f} {sum(t.stream_s for t in ok):7.3f} "
+          f"{sum(t.plan_s for t in ok):7.3f} {sum(t.exec_s for t in ok):8.3f}  "
           f"queries={len(ok)} errors={len(timings) - len(ok)} "
           f"runs={runs} sf_dir={sf_dir}")
 
