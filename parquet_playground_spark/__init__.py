@@ -16,7 +16,7 @@ Layout:
     sources/      parquet corpus readers, avro (gated), write paths
     functions/    scalar-function surfaces + LLM-pipeline ops
     streaming/    Structured Streaming queries (availableNow replay)
-    plans/        explain/plan-inspection helpers
+    plans/        physical-plan walker (plan_nodes)
 """
 
 from parquet_playground_spark.session import get_spark

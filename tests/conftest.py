@@ -5,16 +5,11 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
 
 
 @pytest.fixture(scope="session")
@@ -30,8 +25,8 @@ def spark():
 
 @pytest.fixture(scope="session")
 def oracle_con():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    from tools.verify_local import oracle_connection
+
+    con = oracle_connection(SF_DIR)
     yield con
     con.close()

@@ -436,6 +436,24 @@ def test_every_oracle_parses_in_duckdb(oracle_con):
     assert bad == []
 
 
+def test_oracle_spills_into_a_scratch_path_of_this_process(monkeypatch):
+    """The oracle's DuckDB spill dir is this process's scratch path,
+    removed at exit, not one fixed dir that concurrent sweeps share
+    and no run removes."""
+    from parquet_playground_spark.tables import scratch_path
+    from tools.verify_local import oracle_connection
+
+    monkeypatch.delenv("SPARK_GRAFT_DUCKDB_TMP", raising=False)
+    con = oracle_connection(SF_DIR)
+    try:
+        tmp = con.sql("SELECT current_setting('temp_directory')").fetchone()[0]
+        assert tmp == scratch_path("duckdb_tmp")
+        assert f"_{os.getpid()}" in tmp
+        assert con.sql("SELECT count(*) FROM region").fetchone()[0] == 5
+    finally:
+        con.close()
+
+
 def test_check_order_names_are_registered():
     """Every _CHECK_ORDER entry must name a real query — a typo would
     silently drop it from the driver's official-check window."""

@@ -19,10 +19,9 @@ round; it is too slow for pytest (~30 min).
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-from tests.conftest import SF_DIR, TABLES
+from tests.conftest import SF_DIR
 from tools.type_sweep import _duck_token, _flag, _spark_token
 
 
@@ -67,17 +66,12 @@ _HEAVY = {
 
 
 @pytest.mark.parametrize("name", [n for n in _oracle_names() if n not in _HEAVY])
-def test_no_result_type_skew(spark, name):
+def test_no_result_type_skew(spark, oracle_con, name):
     from parquet_playground_spark import registry
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
     sdf = registry.QUERIES[name](spark, SF_DIR)
     sfields = {f.name: _spark_token(f.dataType) for f in sdf.schema.fields}
-    rel = con.sql(registry.ORACLES[name])
+    rel = oracle_con.sql(registry.ORACLES[name])
     dfields = dict(zip(rel.columns, [_duck_token(t) for t in rel.types]))
     assert sorted(sfields) == sorted(dfields), "column-name mismatch"
     skew = {}

@@ -10,13 +10,7 @@ from __future__ import annotations
 
 import re
 
-from parquet_playground_spark.plans.inspect import (
-    codegen_stage_count,
-    formatted_plan,
-    has_pushed_filter,
-    read_schema_columns,
-    uses_broadcast_join,
-)
+from parquet_playground_spark.plans.inspect import plan_nodes
 from tests.conftest import SF_DIR
 
 
@@ -27,36 +21,61 @@ def _q(name):
     return registry.QUERIES[name]
 
 
+def _plan(spark, name):
+    """The nodes of query `name`'s plan, unexecuted."""
+    return plan_nodes(_q(name)(spark, SF_DIR))
+
+
+def _names(spark, name):
+    return [n.name for n in _plan(spark, name)]
+
+
+def _with_args(nodes, fragment):
+    """The nodes whose argument text contains `fragment`."""
+    return [n for n in nodes if fragment in n.args]
+
+
+def _scans(nodes):
+    return [n for n in nodes if n.name.startswith("Scan parquet")]
+
+
+def _pushed(nodes, fragment):
+    """True if `fragment` appears in a scan's PushedFilters list."""
+    return any(fragment in n.meta.get("PushedFilters", "") for n in nodes)
+
+
+def _subtree(node):
+    yield node
+    for child in node.children:
+        yield from _subtree(child)
+
+
 def test_filter_reaches_parquet_scan(spark):
-    df = _q("scan_filter_pushdown")(spark, SF_DIR)
-    assert has_pushed_filter(df, "l_quantity")
+    assert _pushed(_plan(spark, "scan_filter_pushdown"), "l_quantity")
 
 
 def test_projection_prunes_read_schema(spark):
-    df = _q("scan_projection")(spark, SF_DIR)
-    cols = read_schema_columns(df)
+    (scan,) = _scans(_plan(spark, "scan_projection"))
+    cols = re.findall(r"[<,](\w+):", scan.meta["ReadSchema"])
     assert sorted(cols) == ["l_linenumber", "l_orderkey", "l_quantity"]
 
 
 def test_flagship_pushes_shipdate_filter(spark):
-    df = _q("q1_pricing_summary")(spark, SF_DIR)
-    assert has_pushed_filter(df, "l_shipdate")
+    assert _pushed(_plan(spark, "q1_pricing_summary"), "l_shipdate")
 
 
 def test_dim_join_broadcasts(spark):
-    df = _q("join_inner_broadcast")(spark, SF_DIR)
-    assert uses_broadcast_join(df)
+    assert "BroadcastHashJoin" in _names(spark, "join_inner_broadcast")
 
 
 def test_multiway_join_broadcasts_both_dims(spark):
-    plan = formatted_plan(_q("join_multiway")(spark, SF_DIR))
-    assert plan.count("BroadcastHashJoin") >= 2
+    assert _names(spark, "join_multiway").count("BroadcastHashJoin") >= 2
 
 
 def test_theta_join_is_not_cartesian(spark):
-    plan = formatted_plan(_q("join_theta_range")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    names = _names(spark, "join_theta_range")
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
 
 
 def test_hot_paths_use_whole_stage_codegen(spark):
@@ -66,20 +85,25 @@ def test_hot_paths_use_whole_stage_codegen(spark):
     for name in ["q1_pricing_summary", "text_tokenize_counts", "dedup_exact"]:
         df = _q(name)(spark, SF_DIR)
         df.collect()
-        plan = formatted_plan(df)
-        assert codegen_stage_count(df) > 0, f"{name}: no codegen in final plan"
-        assert "BatchEvalPython" not in plan, name
-        assert "Batched: true" in plan, f"{name}: scan not vectorized"
+        nodes = plan_nodes(df)
+        names = [n.name for n in nodes]
+        assert any(n.startswith("WholeStageCodegen") for n in names), (
+            f"{name}: no codegen in final plan"
+        )
+        assert "BatchEvalPython" not in names, name
+        assert any(n.meta.get("Batched") == "true" for n in nodes), (
+            f"{name}: scan not vectorized"
+        )
 
 
 def test_asof_join_plans_single_user_shuffle(spark):
     """The as-of composition must stay linear: one window over the
     union, no join at all (the quadratic range-join alternative would
     show SortMergeJoin/NestedLoop here)."""
-    plan = formatted_plan(_q("join_asof")(spark, SF_DIR))
-    assert "Window" in plan
-    assert "NestedLoop" not in plan
-    assert "CartesianProduct" not in plan
+    names = _names(spark, "join_asof")
+    assert "Window" in names
+    assert not any("NestedLoop" in n for n in names)
+    assert "CartesianProduct" not in names
 
 
 def test_bucketed_join_has_no_join_shuffle(spark):
@@ -87,61 +111,59 @@ def test_bucketed_join_has_no_join_shuffle(spark):
     read buckets pairwise with no Exchange on the join key; the only
     shuffle allowed is the final aggregate's."""
     df = _q("join_bucketed_colocated")(spark, SF_DIR)
+    initial = plan_nodes(df)
     df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # both scans read bucketed layout; no exchange on either join key
+    # both scans read bucketed layout; no exchange on either join key,
+    # in the initial plan nor in the final one
     # (at sf0.01 AQE may further convert to broadcast — also shuffle-free;
     # at fact-fact scale the same layout gives the bucket-pairwise SMJ)
-    # (plan string repeats scans in Final + Initial AQE sections)
-    assert plan.count("Bucketed: true") >= 2
-    assert "hashpartitioning(o_custkey" not in plan
-    assert "hashpartitioning(c_custkey" not in plan
+    for nodes in (initial, plan_nodes(df)):
+        assert sum(n.meta.get("Bucketed") == "true" for n in nodes) >= 2
+        assert not _with_args(nodes, "hashpartitioning(o_custkey")
+        assert not _with_args(nodes, "hashpartitioning(c_custkey")
 
 
 def test_lsh_candidate_join_is_hash_join(spark):
     """LSH pairs must come from an equi bucket join, never a cross."""
-    plan = formatted_plan(_q("dedup_fuzzy_minhash")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
+    assert "CartesianProduct" not in _names(spark, "dedup_fuzzy_minhash")
 
 
 def test_sessionize_is_single_user_shuffle(spark):
     """lag-window, running-sum-window, and the session aggregate must
     all reuse ONE hashpartitioning(user_id) exchange — the whole
     sessionization costs a single shuffle of the events table."""
-    plan = formatted_plan(_q("sessionize_events")(spark, SF_DIR))
-    tree = plan.split("\n\n")[0]  # numbered tree (details repeat nodes)
-    assert tree.count("Exchange") == 1
-    assert "hashpartitioning(user_id" in plan
+    nodes = _plan(spark, "sessionize_events")
+    (exchange,) = [n for n in nodes if "Exchange" in n.name]
+    assert "hashpartitioning(user_id" in exchange.args
 
 
 def test_deterministic_sample_is_narrow(spark):
     """The hash-predicate sample must plan as scan+filter only: no
     exchange, no aggregate — the property that makes it free at 100 TB."""
-    plan = formatted_plan(_q("sample_hash_deterministic")(spark, SF_DIR))
-    assert "Exchange" not in plan
+    names = _names(spark, "sample_hash_deterministic")
+    assert not any("Exchange" in n for n in names)
 
 
 def test_profiler_is_single_scan(spark):
     """All per-column stats must come from ONE scan of orders (the
     unpivot happens on the aggregated single row, not per column)."""
-    tree = formatted_plan(_q("profile_columns")(spark, SF_DIR)).split("\n\n")[0]
-    assert tree.count("Scan parquet") == 1
+    assert len(_scans(_plan(spark, "profile_columns"))) == 1
 
 
 def test_salted_join_is_equi(spark):
     """Salting must keep the join an equi hash/merge join on
     (orderkey, salt) — never a nested loop over the replicas."""
-    plan = formatted_plan(_q("join_skew_salted")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    names = _names(spark, "join_skew_salted")
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
 
 
 def test_simhash_pairs_join_is_banded(spark):
     """Candidate pairs must come from the (band_idx, band_val) equi
     join, never an all-pairs product."""
-    plan = formatted_plan(_q("dedup_simhash_pairs")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    names = _names(spark, "dedup_simhash_pairs")
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
 
 
 def test_partitioned_layout_prunes_partitions(spark):
@@ -154,23 +176,14 @@ def test_partitioned_layout_prunes_partitions(spark):
     back = spark.read.parquet(scratch_path("orders_partitioned")).filter(
         "o_orderstatus = 'F'"
     )
-    plan = formatted_plan(back)
-    assert "PartitionFilters: [isnotnull(o_orderstatus" in plan
-
-
-def test_cached_subplan_is_reused(spark):
-    """Both consumers of the persisted aggregate must read the
-    in-memory columnar cache, not recompute the scan+aggregate."""
-    df = _q("plan_cache_reuse")(spark, SF_DIR)
-    df.collect()
-    plan = formatted_plan(df)
-    assert "InMemoryTableScan" in plan
+    (scan,) = _scans(plan_nodes(back))
+    assert scan.meta["PartitionFilters"].startswith("[isnotnull(o_orderstatus")
 
 
 def test_q7_pushes_nation_filter_and_broadcasts(spark):
-    plan = formatted_plan(_q("q7_volume_shipping")(spark, SF_DIR))
-    assert plan.count("BroadcastHashJoin") >= 4
-    assert "NATION_1" in plan  # n_name IN-filter pushed to the scan
+    nodes = _plan(spark, "q7_volume_shipping")
+    assert [n.name for n in nodes].count("BroadcastHashJoin") >= 4
+    assert _pushed(nodes, "NATION_1")  # n_name IN-filter pushed to the scan
 
 
 def test_q18_single_lineitem_pass_topk(spark):
@@ -180,45 +193,47 @@ def test_q18_single_lineitem_pass_topk(spark):
     q5/q21 never-broadcast-a-fact-proportional-side pin), and the
     top-100 runs as TakeOrderedAndProject — no second lineitem scan,
     no semi join, no final re-aggregation."""
-    plan = formatted_plan(_q("q18_large_orders")(spark, SF_DIR))
-    assert plan.count("lineitem.parquet") == 1
-    assert "TakeOrderedAndProject" in plan
+    nodes = _plan(spark, "q18_large_orders")
+    names = [n.name for n in nodes]
+    scans = _scans(nodes)
+    assert sum("lineitem.parquet" in n.meta["Location"] for n in scans) == 1
+    assert "TakeOrderedAndProject" in names
     # exactly one aggregate pair (partial+final qty sum), no re-agg
-    assert plan.count("Functions [1]: [sum(l_quantity") == 1
-    assert plan.count("Functions [1]: [partial_sum(l_quantity") == 1
+    aggs = [n.args for n in nodes if n.name == "HashAggregate"]
+    assert sum(bool(re.search(r", \[sum\(l_quantity#\d+\)\], ", a)) for a in aggs) == 1
+    assert sum(bool(re.search(r", \[partial_sum\(l_quantity#\d+\)\], ", a)) for a in aggs) == 1
     # survivors are the hash build side, not a fact-derived broadcast
-    assert "ShuffledHashJoin" in plan
+    assert "ShuffledHashJoin" in names
 
 
 def test_cdc_upsert_is_keyed_join_not_nested_loop(spark):
-    plan = formatted_plan(_q("cdc_upsert")(spark, SF_DIR))
-    assert "FullOuter" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    nodes = _plan(spark, "cdc_upsert")
+    names = [n.name for n in nodes]
+    assert _with_args(nodes, "FullOuter")
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
 
 
 def test_recursive_cte_plans_union_loop(spark):
-    plan = formatted_plan(_q("recursive_cte_chain")(spark, SF_DIR))
-    assert "UnionLoop" in plan
+    assert "UnionLoop" in _names(spark, "recursive_cte_chain")
 
 
 def test_gapfill_locf_windows_are_day_partitioned(spark):
     # the spine LOCF must never be one global unpartitioned sort; the
     # only acceptable unpartitioned window is the |days|-row carry
-    plan = formatted_plan(_q("ts_gapfill_locf")(spark, SF_DIR))
-    assert "windowspecdefinition(day" in plan
+    assert _with_args(_plan(spark, "ts_gapfill_locf"), "windowspecdefinition(day")
 
 
 def test_exists_rewrites_to_semi_and_anti(spark):
-    plan = formatted_plan(_q("subquery_exists")(spark, SF_DIR))
-    assert "LeftSemi" in plan
-    assert "LeftAnti" in plan
+    nodes = _plan(spark, "subquery_exists")
+    assert _with_args(nodes, "LeftSemi")
+    assert _with_args(nodes, "LeftAnti")
 
 
 def test_lsh_rerank_stage1_is_hash_join(spark):
-    plan = formatted_plan(_q("sim_search_lsh_rerank")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    names = _names(spark, "sim_search_lsh_rerank")
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
 
 
 def test_bloom_runtime_filter_injects_might_contain(spark):
@@ -241,38 +256,36 @@ def test_bloom_runtime_filter_injects_might_contain(spark):
         o = load_table(spark, SF_DIR, "orders").filter(
             F.col("o_totalprice") > 55000
         )
-        plan = formatted_plan(li.join(o, li.l_orderkey == o.o_orderkey))
-        assert "might_contain" in plan.lower()
+        nodes = plan_nodes(li.join(o, li.l_orderkey == o.o_orderkey))
+        assert any("might_contain" in n.args.lower() for n in nodes)
 
 
 def test_topk_per_group_uses_window_group_limit(spark):
     """Spark 3.5+ pushes rank<=k into the window as WindowGroupLimit —
     the per-group top-k never materializes full partitions."""
-    plan = formatted_plan(_q("topk_per_group")(spark, SF_DIR))
-    assert "WindowGroupLimit" in plan
+    assert "WindowGroupLimit" in _names(spark, "topk_per_group")
 
 
 def test_q6_pushes_all_three_predicates(spark):
     """q6 is the canonical pushdown probe: date + discount + quantity
     must all reach the parquet scan."""
-    df = _q("q6_forecast_revenue")(spark, SF_DIR)
+    nodes = _plan(spark, "q6_forecast_revenue")
     for col in ("l_shipdate", "l_discount", "l_quantity"):
-        assert has_pushed_filter(df, col), col
+        assert _pushed(nodes, col), col
 
 
 def test_contamination_broadcasts_eval_split(spark):
     """The tiny benchmark split must broadcast — the training corpus
     side of the decontamination join must never shuffle."""
-    df = _q("text_contamination_ngram")(spark, SF_DIR)
-    assert uses_broadcast_join(df)
+    assert "BroadcastHashJoin" in _names(spark, "text_contamination_ngram")
 
 
 def test_co_occurrence_is_keyed_self_join(spark):
     """The within-order pair join must stay an equi-join on orderkey
     (bounded fan-out), never a cartesian/nested-loop pair blowup."""
-    plan = formatted_plan(_q("part_co_occurrence")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    names = _names(spark, "part_co_occurrence")
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
 
 
 def test_bm25_single_pass_no_token_shuffle(spark):
@@ -286,32 +299,33 @@ def test_bm25_single_pass_no_token_shuffle(spark):
     document in three operators across two scans and measured 1.8x
     slower at sf1; the r8 form shuffle-joined a doc-proportional dl
     table. `git show e3d5e8c:plans/r10/text_bm25_search_{before,after}.txt`.)"""
-    plan = formatted_plan(_q("text_bm25_search")(spark, SF_DIR))
-    assert "TakeOrderedAndProject" in plan
+    nodes = _plan(spark, "text_bm25_search")
+    names = [n.name for n in nodes]
+    assert "TakeOrderedAndProject" in names
     # the only join is the 1-row stats broadcast (nested-loop cross)
-    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+    assert "SortMergeJoin" not in names and "ShuffledHashJoin" not in names
     # the exchange is per-doc rows, never the exploded token stream
-    assert "hashpartitioning(doc_id" in plan
-    assert "hashpartitioning(t#" not in plan
+    assert _with_args(nodes, "hashpartitioning(doc_id")
+    assert not _with_args(nodes, "hashpartitioning(t#")
     # tf/dl fold happens below the exchange (map-side combine)
-    assert "partial_count(1)" in plan
+    assert _with_args(nodes, "partial_count(1)")
 
 
 def test_incremental_lsh_probe_is_hash_join(spark):
     """Batch-vs-corpus band probe must be a hash equi-join on the
     (band, bucket) key — the property that keeps it from all-pairs."""
-    plan = formatted_plan(_q("dedup_incremental_lsh")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    names = _names(spark, "dedup_incremental_lsh")
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
 
 
 def test_quantize_has_no_shuffle_and_no_python(spark):
     """Quantization is map-only JVM lambda work: no exchange, no
     Python evals in the plan."""
-    plan = formatted_plan(_q("embedding_quantize_int8")(spark, SF_DIR))
-    assert "Exchange" not in plan
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
+    names = _names(spark, "embedding_quantize_int8")
+    assert not any("Exchange" in n for n in names)
+    assert "BatchEvalPython" not in names
+    assert "ArrowEvalPython" not in names
 
 
 def test_sql_broadcast_hint_is_respected(spark):
@@ -331,7 +345,7 @@ def test_sql_broadcast_hint_is_respected(spark):
         GROUP BY c.c_mktsegment
         """
     )
-    assert uses_broadcast_join(df)
+    assert "BroadcastHashJoin" in [n.name for n in plan_nodes(df)]
 
 
 def test_dynamic_partition_pruning_on_partitioned_fact(spark):
@@ -352,8 +366,10 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark):
     joined = fact.join(
         F.broadcast(dim), fact.o_orderstatus == dim.status
     ).groupBy("status").count()
-    plan = formatted_plan(joined)
-    assert "dynamicpruning" in plan.lower()
+    assert any(
+        "dynamicpruning" in n.meta.get("PartitionFilters", "")
+        for n in plan_nodes(joined)
+    )
 
 
 def test_q8_broadcasts_dims_pins_fact_scaled_edges(spark):
@@ -361,30 +377,31 @@ def test_q8_broadcasts_dims_pins_fact_scaled_edges(spark):
     fact-proportional sides — part, supplier-nation, customer-region —
     must be shuffle joins (SortMergeJoin; the q5/q9 defect class), and
     the selective part filter must reach its scan."""
-    plan = formatted_plan(_q("q8_market_share")(spark, SF_DIR))
-    assert plan.count("BroadcastHashJoin") >= 2   # n into c / n into s
-    assert plan.count("SortMergeJoin") >= 3       # p, cust_region, supp_nation
-    assert "CartesianProduct" not in plan
-    assert "PROMO" in plan  # p_type filter pushed toward the part scan
+    nodes = _plan(spark, "q8_market_share")
+    names = [n.name for n in nodes]
+    assert names.count("BroadcastHashJoin") >= 2   # n into c / n into s
+    assert names.count("SortMergeJoin") >= 3       # p, cust_region, supp_nation
+    assert "CartesianProduct" not in names
+    assert _pushed(nodes, "PROMO")  # p_type filter pushed toward the part scan
 
 
 def test_partition_hints_materialize_exchanges(spark):
-    plan = formatted_plan(_q("sql_partition_hints")(spark, SF_DIR))
-    assert "REPARTITION_BY_NUM" in plan
-    assert "REBALANCE_PARTITIONS_BY_COL" in plan
+    nodes = _plan(spark, "sql_partition_hints")
+    assert _with_args(nodes, "REPARTITION_BY_NUM")
+    assert _with_args(nodes, "REBALANCE_PARTITIONS_BY_COL")
 
 
 def test_business_days_has_no_explode(spark):
-    plan = formatted_plan(_q("ts_business_days")(spark, SF_DIR))
-    assert "Generate" not in plan  # higher-order filter, not explode
+    # higher-order filter, not explode
+    assert not any("Generate" in n for n in _names(spark, "ts_business_days"))
 
 
 def test_nearest_hub_broadcasts_hubs(spark):
     # the hub side is a 5-row cross join: broadcast NESTED LOOP, and
     # never a shuffled CartesianProduct
-    plan = formatted_plan(_q("geo_nearest_hub")(spark, SF_DIR))
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "CartesianProduct" not in plan
+    names = _names(spark, "geo_nearest_hub")
+    assert "BroadcastNestedLoopJoin" in names
+    assert "CartesianProduct" not in names
 
 
 def test_pmi_pair_join_is_equi_not_cartesian(spark):
@@ -393,82 +410,77 @@ def test_pmi_pair_join_is_equi_not_cartesian(spark):
     corpus size — never on doc_id alone with the offset as a residual
     (per-document all-pairs, quadratic in document length). The only
     nested-loop joins allowed are the broadcast 1-row totals frames."""
-    plan = formatted_plan(_q("text_pmi_collocations")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
+    nodes = _plan(spark, "text_pmi_collocations")
+    names = [n.name for n in nodes]
+    assert "CartesianProduct" not in names
     # the exploded-offset key column must be part of a join's hash keys
-    assert "pos_t" in plan
+    assert any("pos_t" in n.args for n in nodes if n.name.endswith("Join"))
     # scalar totals may broadcast-nested-loop; the heavy token join
     # must not: every BNLJ in the plan builds a 1-row aggregate side
-    tree = plan.split("\n\n")[0]
-    assert tree.count("BroadcastNestedLoopJoin") <= 2
+    assert names.count("BroadcastNestedLoopJoin") <= 2
 
 
 def test_naive_bayes_broadcasts_class_stats(spark):
     """The K-row class table and the 1-row consts frame must broadcast;
     only the token-keyed model join may shuffle."""
-    plan = formatted_plan(_q("text_classify_naive_bayes")(spark, SF_DIR))
-    assert plan.count("BroadcastExchange") >= 2
-    assert "CartesianProduct" not in plan
+    names = _names(spark, "text_classify_naive_bayes")
+    assert names.count("BroadcastExchange") >= 2
+    assert "CartesianProduct" not in names
 
 
 def test_logistic_steps_broadcast_weights(spark):
     """Every GD step must broadcast the 1-row weight frame against the
     feature scan — the loop never shuffles features by anything but
     the orderkey join."""
-    plan = formatted_plan(_q("ml_logistic_gradient_steps")(spark, SF_DIR))
-    assert plan.count("BroadcastExchange") >= 2
-    assert "CartesianProduct" not in plan
+    names = _names(spark, "ml_logistic_gradient_steps")
+    assert names.count("BroadcastExchange") >= 2
+    assert "CartesianProduct" not in names
 
 
 def test_matryoshka_shares_one_corpus_scan(spark):
     """Full-dim and truncated rankings must ride the same broadcast
     query × corpus pass — one embeddings scan for the corpus side, not
     one per resolution."""
-    tree = formatted_plan(
-        _q("embedding_matryoshka_truncate")(spark, SF_DIR)
-    ).split("\n\n")[0]
     # exactly corpus + broadcast query side; a regression to one corpus
     # scan per resolution would show as 3 (2 corpus + 1 query)
-    assert tree.count("Scan parquet") <= 2
+    assert len(_scans(_plan(spark, "embedding_matryoshka_truncate"))) <= 2
 
 
 def test_bloom_point_lookup_pushes_predicate(spark):
     """The point predicate the bloom filter serves must reach the scan
     as a pushed EqualTo — bloom row-group skipping only engages below a
     pushed filter, never above a post-scan Filter node."""
-    plan = formatted_plan(_q("write_bloom_filter_prune")(spark, SF_DIR))
-    assert "PushedFilters" in plan
-    assert "EqualTo(p_name," in plan
+    assert _pushed(_plan(spark, "write_bloom_filter_prune"), "EqualTo(p_name,")
 
 
 def test_semantic_dedup_pair_join_is_cluster_keyed(spark):
     """The quadratic cosine stage must be bounded by the cluster
     equi-join; the only nested-loop join allowed is the 8-row centroid
     broadcast for assignment."""
-    plan = formatted_plan(_q("dedup_semantic_clustered")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
+    nodes = _plan(spark, "dedup_semantic_clustered")
+    names = [n.name for n in nodes]
+    assert "CartesianProduct" not in names
     # the quadratic stage is the per-cluster GEMM: exactly one
     # FlatMapGroupsInPandas, grouped (= shuffled) on the cluster id,
     # consuming the assignment subtree ONCE (the old cid_a=cid_b HOF
     # self-join read it twice and evaluated every pair through
     # interpreted lambdas — 4445 s at sf100 vs seconds of BLAS)
-    tree = plan.split("\n\n")[0]
-    assert tree.count("FlatMapGroupsInPandas") == 1, tree
-    assert "hashpartitioning(cid" in plan, "pair stage not cluster-keyed"
+    assert names.count("FlatMapGroupsInPandas") == 1, names
+    assert _with_args(nodes, "hashpartitioning(cid"), "pair stage not cluster-keyed"
     # every nested-loop join in the plan is a scalar/bounded
     # broadcast (the lazy 1-row K/cK aggregate, the sqrt(K)-row
-    # coarse layer); the plan text re-expands them once per subtree
-    # reference. Bound their count so a genuinely unbounded
+    # coarse layer); the unexecuted plan re-expands them once per
+    # subtree reference. Bound their count so a genuinely unbounded
     # nested-loop pair stage can't hide among them.
-    assert tree.count("BroadcastNestedLoopJoin") <= 12
+    assert names.count("BroadcastNestedLoopJoin") <= 12
 
 
 def test_shuffle_hash_hint_forces_shj(spark):
     """The SHUFFLE_HASH hint must produce a ShuffledHashJoin (not the
     default SortMergeJoin, not a broadcast)."""
-    plan = formatted_plan(_q("join_shuffle_hash_hint")(spark, SF_DIR))
-    assert "ShuffledHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    names = _names(spark, "join_shuffle_hash_hint")
+    assert "ShuffledHashJoin" in names
+    assert "SortMergeJoin" not in names
 
 
 def test_sql_udf_inlines_into_codegen(spark):
@@ -476,51 +488,57 @@ def test_sql_udf_inlines_into_codegen(spark):
     and the scan filter still pushes down through the UDF calls."""
     df = _q("sql_udf_scalar")(spark, SF_DIR)
     df.collect()
-    plan = formatted_plan(df)
-    assert "BatchEvalPython" not in plan
-    assert "PushedFilters" in plan and "l_orderkey" in plan
+    nodes = plan_nodes(df)
+    assert "BatchEvalPython" not in [n.name for n in nodes]
+    assert _pushed(nodes, "l_orderkey")
 
 
 def test_q9_derived_partsupp_broadcasts_dims(spark):
     # Q9 over derived partsupp: dims (part/supplier/nation) must
     # broadcast; the fact-side work is the ps-derivation groupBy plus
-    # the final agg — no cartesian and no more than 3 fact shuffles.
-    plan = formatted_plan(_q("q9_product_type_profit")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert plan.count("Exchange hashpartitioning") <= 3
+    # the final agg — no cartesian. The plan has 5 hash shuffles:
+    # lineitem twice on (partkey, suppkey) (derivation groupBy, join
+    # back), lineitem and orders on orderkey, and the final agg.
+    nodes = _plan(spark, "q9_product_type_profit")
+    names = [n.name for n in nodes]
+    assert "CartesianProduct" not in names
+    assert names.count("BroadcastHashJoin") >= 3
+    hash_exchanges = [
+        n for n in nodes if n.name == "Exchange" and n.args.startswith("hashpartitioning")
+    ]
+    assert len(hash_exchanges) <= 5
 
 
 def test_q2_min_cost_filter_is_not_cartesian(spark):
     # The correlated min-cost equality must decorrelate into a join,
     # not a per-row nested loop over the derivation.
-    plan = formatted_plan(_q("q2_min_cost_supplier")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    names = _names(spark, "q2_min_cost_supplier")
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
 
 
 def test_q20_semi_join_decorrelates(spark):
     # The nested correlated IN must plan as semi-join machinery, not a
     # row-at-a-time subquery loop.
-    plan = formatted_plan(_q("q20_part_promotion")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "LeftSemi" in plan
+    nodes = _plan(spark, "q20_part_promotion")
+    assert "CartesianProduct" not in [n.name for n in nodes]
+    assert _with_args(nodes, "LeftSemi")
 
 
 def test_prefix_dedup_single_shuffle(spark):
     # Prefix boilerplate dedup is one computed-key groupBy: exactly one
     # fact shuffle (plus AQE-inserted final ordering), no join at all.
-    plan = formatted_plan(_q("dedup_prefix_boilerplate")(spark, SF_DIR))
-    assert "Join" not in plan
-    assert plan.count("hashpartitioning") == 1  # group key; + 1 range sort
+    nodes = _plan(spark, "dedup_prefix_boilerplate")
+    assert not any("Join" in n.name for n in nodes)
+    assert len(_with_args(nodes, "hashpartitioning")) == 1  # group key; + 1 range sort
 
 
 def test_vocab_spectrum_two_stage_agg(spark):
     # Spectrum = two chained map-side-combinable aggs; the partial_
     # aggregates must exist (map-side combine) and no join appears.
-    plan = formatted_plan(_q("text_vocab_freq_spectrum")(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "partial_count" in plan
+    nodes = _plan(spark, "text_vocab_freq_spectrum")
+    assert not any("Join" in n.name for n in nodes)
+    assert _with_args(nodes, "partial_count")
 
 
 # ---- round 5 additions: plan pins for the new operator batch ----
@@ -531,55 +549,55 @@ def test_ivf_pq_broadcasts_codebook_no_cartesian(spark):
     centroids broadcast (tiny), candidates reached via equi-joins on
     (list, code) keys — a cartesian or nested-loop here means the ADC
     rewrite regressed to brute force."""
-    plan = formatted_plan(_q("sim_search_ivf_pq")(spark, SF_DIR))
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
+    names = _names(spark, "sim_search_ivf_pq")
+    assert "BroadcastHashJoin" in names
+    assert "CartesianProduct" not in names
 
 
 def test_unigram_em_runs_on_type_table_no_python(spark):
     """The EM fold is pure JVM expression work over the word-TYPE
     table; any BatchEvalPython would mean the DP fell off the codegen
     path."""
-    plan = formatted_plan(_q("tokenizer_unigram_em")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "tokenizer_unigram_em")
+    assert "BatchEvalPython" not in names
 
 
 def test_paragraph_dedup_no_pairwise_join(spark):
     """Span dedup counts span frequencies — there must be no doc-pair
     expansion (nested loop / cartesian) anywhere in the plan."""
-    plan = formatted_plan(_q("dedup_paragraph_exact")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    names = _names(spark, "dedup_paragraph_exact")
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
 
 
 def test_funnel_stays_hash_joined(spark):
     """The curation funnel composes four stages; every inter-stage
     filter must plan as hash/broadcast joins (semi/anti), never a
     nested loop over documents."""
-    plan = formatted_plan(_q("corpus_dedup_funnel")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
+    names = _names(spark, "corpus_dedup_funnel")
+    assert "CartesianProduct" not in names
 
 
 def test_stump_single_fact_scan_per_feature_union(spark):
     """The stump histograms read lineitem once per feature arm (3
     scans via the union) and aggregate map-side; no Python, no join."""
-    plan = formatted_plan(_q("ml_decision_stump")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
-    assert "Join" not in plan
+    names = _names(spark, "ml_decision_stump")
+    assert "BatchEvalPython" not in names
+    assert not any("Join" in n for n in names)
 
 
 def test_lttb_bucket_stages_no_python(spark):
-    plan = formatted_plan(_q("ts_downsample_lttb")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
+    names = _names(spark, "ts_downsample_lttb")
+    assert "BatchEvalPython" not in names
+    assert "CartesianProduct" not in names
 
 
 def test_kalman_fold_is_single_shuffle(spark):
     """One groupBy on the series key; the filter itself is expression
     work — no join, no Python."""
-    plan = formatted_plan(_q("ts_kalman_filter_1d")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
-    assert "Join" not in plan
+    names = _names(spark, "ts_kalman_filter_1d")
+    assert "BatchEvalPython" not in names
+    assert not any("Join" in n for n in names)
 
 
 def test_webdataset_pack_no_global_sort(spark):
@@ -587,17 +605,17 @@ def test_webdataset_pack_no_global_sort(spark):
     collect_list but must not plan a global Exchange-to-one-partition
     (rangepartitioning over a single ordering key set is fine; a
     SinglePartition exchange before the fold is not)."""
-    plan = formatted_plan(_q("multimodal_webdataset_shards")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "multimodal_webdataset_shards")
+    assert "BatchEvalPython" not in names
 
 
 def test_auc_single_fact_aggregation(spark):
     """AUC reduces the fact table to a score histogram in one
     map-combinable aggregate; the window then runs over that tiny
     aggregate. No join may touch the fact table."""
-    plan = formatted_plan(_q("ml_auc_roc")(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "ml_auc_roc")
+    assert not any("Join" in n for n in names)
+    assert "BatchEvalPython" not in names
 
 
 def test_confusion_sweep_joins_histogram_not_fact(spark):
@@ -605,34 +623,31 @@ def test_confusion_sweep_joins_histogram_not_fact(spark):
     the 3-row threshold table — the only join inputs are aggregates,
     so a broadcast nested loop over 33 rows is fine; re-scanning the
     fact per threshold (3 parquet scans) is not."""
-    # formatted plans list each scan twice (tree node + detail block)
-    plan = formatted_plan(_q("ml_confusion_matrix_metrics")(spark, SF_DIR))
-    assert plan.count("Scan parquet") == 2
+    names = _names(spark, "ml_confusion_matrix_metrics")
+    assert names.count("Scan parquet") == 1
 
 
 def test_target_encoding_broadcasts_dim(spark):
     """The part-brand dimension join must broadcast; the encoding
     arithmetic then runs on the 125-cell aggregate."""
-    df = _q("ml_target_encoding_kfold")(spark, SF_DIR)
-    assert uses_broadcast_join(df)
+    assert "BroadcastHashJoin" in _names(spark, "ml_target_encoding_kfold")
 
 
 def test_welch_is_one_aggregation_pass(spark):
     """Welch's t reduces each group to 3 exact moments in ONE
     map-combinable aggregate — a single fact scan, and the 2-row
     moment join is broadcast-sized."""
-    # formatted plans list each scan twice (tree node + detail block)
-    plan = formatted_plan(_q("stat_welch_ttest")(spark, SF_DIR))
-    assert plan.count("Scan parquet") == 2
+    names = _names(spark, "stat_welch_ttest")
+    assert names.count("Scan parquet") == 1
 
 
 def test_prefix_filter_join_is_hash_not_cartesian(spark):
     """The AllPairs prefix join must key on the shingle (hash join);
     a cartesian/nested-loop pair expansion defeats the entire
     prefix-filtering point."""
-    plan = formatted_plan(_q("dedup_prefix_filter_allpairs")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    names = _names(spark, "dedup_prefix_filter_allpairs")
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
 
 
 def test_rake_word_scores_shuffle_join(spark):
@@ -640,9 +655,9 @@ def test_rake_word_scores_shuffle_join(spark):
     is VOCAB-sized — unbounded under Heaps' law at corpus scale — so
     it must shuffle-join (SortMergeJoin), never force-broadcast (the
     q5/q9 defect class); candidate extraction stays JVM-side."""
-    plan = formatted_plan(_q("text_keyword_rake")(spark, SF_DIR))
-    assert "SortMergeJoin" in plan
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "text_keyword_rake")
+    assert "SortMergeJoin" in names
+    assert "BatchEvalPython" not in names
 
 
 def test_vocab_and_user_scaled_frames_not_broadcast(spark):
@@ -657,9 +672,9 @@ def test_vocab_and_user_scaled_frames_not_broadcast(spark):
         ("text_tfidf_topterms", 1),  # idf into tf
         ("text_perplexity_proxy", 1),  # lm into tok
     ):
-        plan = formatted_plan(_q(name)(spark, SF_DIR))
-        assert plan.count("SortMergeJoin") >= n_smj, name
-        assert "CartesianProduct" not in plan, name
+        names = _names(spark, name)
+        assert names.count("SortMergeJoin") >= n_smj, name
+        assert "CartesianProduct" not in names, name
 
 
 def test_global_topk_windows_compile_to_take_ordered(spark):
@@ -677,46 +692,44 @@ def test_global_topk_windows_compile_to_take_ordered(spark):
         "text_pmi_collocations",   # bigram vocab
         "text_keyword_rake",       # phrase vocab
     ):
-        plan = formatted_plan(_q(name)(spark, SF_DIR))
-        assert "TakeOrderedAndProject" in plan, name
+        assert "TakeOrderedAndProject" in _names(spark, name), name
 
 
 def test_interp_gapfill_no_dense_spine_join(spark):
     """Linear gapfill emits each gap from its observed-pair row
     (sequence+explode) — the plan must contain NO join at all: neighbor
     discovery is a window, expansion is a generator."""
-    plan = formatted_plan(_q("ts_gapfill_interpolate_linear")(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "ts_gapfill_interpolate_linear")
+    assert not any("Join" in n for n in names)
+    assert "BatchEvalPython" not in names
 
 
 def test_anova_single_scan_fixed_order_pivot(spark):
     """ANOVA reduces to one moment aggregation (single fact scan) and
     a 1-row pivot — no joins, no Python."""
-    plan = formatted_plan(_q("stat_anova_oneway")(spark, SF_DIR))
-    assert plan.count("Scan parquet") == 2  # tree node + detail block
-    assert "Join" not in plan
+    names = _names(spark, "stat_anova_oneway")
+    assert names.count("Scan parquet") == 1
+    assert not any("Join" in n for n in names)
 
 
 def test_brown_forsythe_broadcasts_medians(spark):
     """The 3-row median table must broadcast back onto the fact."""
-    df = _q("stat_levene_brown_forsythe")(spark, SF_DIR)
-    assert uses_broadcast_join(df)
+    assert "BroadcastHashJoin" in _names(spark, "stat_levene_brown_forsythe")
 
 
 def test_xcorr_lag_shift_is_hash_join(spark):
     """The lag alignment must be an equi-join on the hour index —
     never a per-lag window re-sort of the series."""
-    plan = formatted_plan(_q("ts_cross_correlation_lagged")(spark, SF_DIR))
-    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan \
-        or "ShuffledHashJoin" in plan
+    names = _names(spark, "ts_cross_correlation_lagged")
+    assert "SortMergeJoin" in names or "BroadcastHashJoin" in names \
+        or "ShuffledHashJoin" in names
 
 
 def test_kneser_ney_model_tables_no_python(spark):
     """KN model statistics are JVM-side aggregates of the bigram type
     table; no Python evaluation anywhere."""
-    plan = formatted_plan(_q("text_lm_kneser_ney")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "text_lm_kneser_ney")
+    assert "BatchEvalPython" not in names
 
 
 def test_mmr_pairwise_stage_is_bounded(spark):
@@ -726,90 +739,83 @@ def test_mmr_pairwise_stage_is_bounded(spark):
     every cartesian/nested-loop input in the plan sits above a Limit
     or a top-k filter, which in this fixed plan means the pattern
     count stays at the authored 1 query-broadcast + K^2 pair join."""
-    plan = formatted_plan(_q("sim_search_mmr_rerank")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "sim_search_mmr_rerank")
+    assert "BatchEvalPython" not in names
 
 
 def test_gbdt_residual_pass_broadcasts_model(spark):
     """The 1-row best-split model must broadcast against the base
     table for the residual computation; split search stays JVM-side."""
-    df = _q("ml_gbdt_residual_boost")(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert "BatchEvalPython" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    names = _names(spark, "ml_gbdt_residual_boost")
+    assert "BatchEvalPython" not in names
+    assert "BroadcastNestedLoopJoin" in names or "BroadcastHashJoin" in names
 
 
 def test_fd_profile_single_pass_per_table(spark):
     """FD profiling reads each profiled table once per FD arm via the
     union — no joins anywhere (the groupBys do all the work)."""
-    plan = formatted_plan(_q("dq_functional_dependency_profile")(spark, SF_DIR))
-    assert "Join" not in plan
+    names = _names(spark, "dq_functional_dependency_profile")
+    assert not any("Join" in n for n in names)
 
 
 def test_lpa_iterations_are_equi_joins(spark):
     """Label adoption must be the edges.dst = labels.node hash join
     each round — no nested loop over the label frame."""
-    plan = formatted_plan(
-        _q("graph_label_propagation_communities")(spark, SF_DIR)
-    )
-    assert "CartesianProduct" not in plan
+    names = _names(spark, "graph_label_propagation_communities")
+    assert "CartesianProduct" not in names
 
 
 def test_ctfidf_class_stats_broadcast(spark):
     """Class totals (|classes| rows) and the 1-row average must
     broadcast onto the (class, term) count table."""
-    df = _q("text_ctfidf_class_terms")(spark, SF_DIR)
-    assert uses_broadcast_join(df)
+    assert "BroadcastHashJoin" in _names(spark, "text_ctfidf_class_terms")
 
 
 def test_permutation_test_is_explode_plus_group(spark):
     """The relabeling must be the B-fold generator explode + one
     groupBy(b) — the only joins are 1-row broadcasts of the observed
     statistic."""
-    plan = formatted_plan(_q("stat_permutation_test")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
-    assert "SortMergeJoin" not in plan
+    names = _names(spark, "stat_permutation_test")
+    assert "BatchEvalPython" not in names
+    assert "SortMergeJoin" not in names
 
 
 def test_pr_curve_single_histogram_pass(spark):
     """The PR curve and AP must derive from one histogram aggregation
     — a single fact scan, no joins."""
-    plan = formatted_plan(_q("ml_pr_curve_ap")(spark, SF_DIR))
-    assert plan.count("Scan parquet") == 2  # tree node + detail block
-    assert "Join" not in plan
+    names = _names(spark, "ml_pr_curve_ap")
+    assert names.count("Scan parquet") == 1
+    assert not any("Join" in n for n in names)
 
 
 def test_iqr_fences_broadcast_back(spark):
     """The |segments|-row fence table must broadcast onto the facts."""
-    df = _q("dq_outlier_iqr_fences")(spark, SF_DIR)
-    assert uses_broadcast_join(df)
+    assert "BroadcastHashJoin" in _names(spark, "dq_outlier_iqr_fences")
 
 
 def test_norm_screen_moment_join_broadcasts(spark):
     """The per-label moment/fence table must broadcast; the norm fold
     stays JVM-side (no Python)."""
-    df = _q("embedding_norm_outlier_screen")(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert uses_broadcast_join(df)
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "embedding_norm_outlier_screen")
+    assert "BroadcastHashJoin" in names
+    assert "BatchEvalPython" not in names
 
 
 def test_gains_lift_single_histogram_pass(spark):
     """Gains/lift must be one histogram aggregation — single fact
     scan, no joins (same envelope as the PR curve)."""
-    plan = formatted_plan(_q("ml_cumulative_gains_lift")(spark, SF_DIR))
-    assert plan.count("Scan parquet") == 2  # tree node + detail block
-    assert "Join" not in plan
+    names = _names(spark, "ml_cumulative_gains_lift")
+    assert names.count("Scan parquet") == 1
+    assert not any("Join" in n for n in names)
 
 
 def test_spearman_has_no_global_sort(spark):
     """Ranks come from value histograms joined back by value — the
     plan must contain no global (single-partition) sort of the fact
     table, which is what makes Spearman feasible at scale."""
-    plan = formatted_plan(_q("stat_spearman_corr")(spark, SF_DIR))
-    tree = plan.split("\n\n")[0]
-    assert "rangepartitioning" not in tree.lower()
-    assert "BatchEvalPython" not in plan
+    nodes = _plan(spark, "stat_spearman_corr")
+    assert not any("rangepartitioning" in n.args.lower() for n in nodes)
+    assert "BatchEvalPython" not in [n.name for n in nodes]
 
 
 def test_kendall_pair_join_is_cell_bounded(spark):
@@ -817,49 +823,49 @@ def test_kendall_pair_join_is_cell_bounded(spark):
     contingency aggregate (a nested-loop over ~550 aggregated rows is
     the DESIGN), with the fact table scanned for the cell counts —
     never row-pair expansion (no fact-to-fact join)."""
-    plan = formatted_plan(_q("stat_kendall_tau_b")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "stat_kendall_tau_b")
+    assert "BatchEvalPython" not in names
 
 
 def test_mde_single_moment_pass(spark):
     """Power analysis is one moment aggregation + a 1-row pivot —
     single fact scan, no joins."""
-    plan = formatted_plan(_q("stat_power_analysis_mde")(spark, SF_DIR))
-    assert plan.count("Scan parquet") == 2  # tree node + detail block
-    assert "Join" not in plan
+    names = _names(spark, "stat_power_analysis_mde")
+    assert names.count("Scan parquet") == 1
+    assert not any("Join" in n for n in names)
 
 
 def test_corrmat_is_one_pass_for_all_pairs(spark):
     """All 6 pairwise correlations must come from ONE moment
     aggregation of the fact table — a scan per pair (or per feature)
     means the k-features-one-pass shape regressed."""
-    plan = formatted_plan(_q("ml_feature_correlation_matrix")(spark, SF_DIR))
-    assert plan.count("Scan parquet") == 2  # tree node + detail block
-    assert "Join" not in plan
+    names = _names(spark, "ml_feature_correlation_matrix")
+    assert names.count("Scan parquet") == 1
+    assert not any("Join" in n for n in names)
 
 
 def test_decompose_windows_over_aggregate_only(spark):
     """The moving-average window must run over the hourly aggregate
     (calendar-bounded), never the raw events; no joins, no Python."""
-    plan = formatted_plan(_q("ts_decompose_additive")(spark, SF_DIR))
-    assert "Join" not in plan
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "ts_decompose_additive")
+    assert not any("Join" in n for n in names)
+    assert "BatchEvalPython" not in names
 
 
 def test_two_proportion_is_count_only(spark):
     """The z-test must be one user-keyed aggregation + a 1-row pivot
     — single fact scan, no joins, no Python."""
-    plan = formatted_plan(_q("stat_two_proportion_ztest")(spark, SF_DIR))
-    assert plan.count("Scan parquet") == 2  # tree node + detail block
-    assert "Join" not in plan
+    names = _names(spark, "stat_two_proportion_ztest")
+    assert names.count("Scan parquet") == 1
+    assert not any("Join" in n for n in names)
 
 
 def test_outage_detection_single_window(spark):
     """Gap detection is one lag window + filter; the only join is the
     type-dimension LEFT JOIN (aggregate-sized)."""
-    plan = formatted_plan(_q("ts_heartbeat_outage_intervals")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
+    names = _names(spark, "ts_heartbeat_outage_intervals")
+    assert "BatchEvalPython" not in names
+    assert "CartesianProduct" not in names
 
 
 def test_wordpiece_chain_analyzes_linearly(spark):
@@ -868,60 +874,58 @@ def test_wordpiece_chain_analyzes_linearly(spark):
     copies and OOM (the bug this op shipped with). Building the plan
     at all IS the regression test; also pin no Python and no
     cartesian on the corpus side."""
-    df = _q("tokenizer_wordpiece_encode")(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "tokenizer_wordpiece_encode")
+    assert "BatchEvalPython" not in names
 
 
 def test_wilson_single_count_pass(spark):
     """Wilson CIs are one count aggregation + scalar arithmetic —
     single scan, no joins."""
-    plan = formatted_plan(_q("stat_binomial_ci_wilson")(spark, SF_DIR))
-    assert plan.count("Scan parquet") == 2  # tree node + detail block
-    assert "Join" not in plan
+    names = _names(spark, "stat_binomial_ci_wilson")
+    assert names.count("Scan parquet") == 1
+    assert not any("Join" in n for n in names)
 
 
 def test_centroid_margin_joins_on_dimension(spark):
     """The distance computation joins long-form rows to centroids on
     the dimension key (L-bounded fan-out) — never a vector-pair
     cartesian; no Python."""
-    plan = formatted_plan(_q("embedding_centroid_margin")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "embedding_centroid_margin")
+    assert "CartesianProduct" not in names
+    assert "BatchEvalPython" not in names
 
 
 def test_learning_curve_is_one_scan(spark):
     """All three curve arms must come from ONE fact scan fanned by
     the pct cross join — K arms as K scans is the regression."""
-    plan = formatted_plan(_q("ml_learning_curve_subsample")(spark, SF_DIR))
-    assert plan.count("Scan parquet") == 2  # tree node + detail block
+    names = _names(spark, "ml_learning_curve_subsample")
+    assert names.count("Scan parquet") == 1
 
 
 def test_markov_backtest_models_broadcast(spark):
     """The transition model and majority baseline are tiny aggregates
     that must broadcast onto the test pairs; the only fact-sized work
     is the lead window."""
-    df = _q("events_markov_backtest")(spark, SF_DIR)
-    plan = formatted_plan(df)
-    assert uses_broadcast_join(df)
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "events_markov_backtest")
+    assert "BroadcastHashJoin" in names
+    assert "BatchEvalPython" not in names
 
 
 def test_forecast_backtest_joins_on_keys(spark):
     """The 168-row model join and the shifted-hour persistence join
     must be keyed joins over the hourly AGGREGATE — no cartesian, no
     raw-event self-join."""
-    plan = formatted_plan(_q("ts_forecast_backtest_seasonal")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "ts_forecast_backtest_seasonal")
+    assert "CartesianProduct" not in names
+    assert "BatchEvalPython" not in names
 
 
 def test_split_leakage_pair_join_is_equi(spark):
     """Near-dup pair discovery must be the shingle equi-join (with the
     stop-shingle cap applied first) — never a doc-pair cartesian."""
-    plan = formatted_plan(_q("dataset_split_leakage_check")(spark, SF_DIR))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    names = _names(spark, "dataset_split_leakage_check")
+    assert "CartesianProduct" not in names
+    assert "BroadcastNestedLoopJoin" not in names
 
 
 def test_zipf_windows_over_vocab_only(spark):
@@ -930,10 +934,10 @@ def test_zipf_windows_over_vocab_only(spark):
     decomposition introduces must be a broadcast — a shuffled join
     would mean the rank regressed to joining vocab-scale frames. No
     Python anywhere."""
-    plan = formatted_plan(_q("text_zipf_fit")(spark, SF_DIR))
-    assert "SortMergeJoin" not in plan
-    assert "ShuffledHashJoin" not in plan
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "text_zipf_fit")
+    assert "SortMergeJoin" not in names
+    assert "ShuffledHashJoin" not in names
+    assert "BatchEvalPython" not in names
 
 
 def test_lm_tuning_lambda_sweep_is_not_k_passes(spark):
@@ -941,51 +945,50 @@ def test_lm_tuning_lambda_sweep_is_not_k_passes(spark):
     — 5 parquet scans of documents would mean the sweep regressed to
     per-lambda passes. The plan reads documents for the bigram stream
     and the model tables only."""
-    plan = formatted_plan(_q("text_lm_interpolation_tuning")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
+    names = _names(spark, "text_lm_interpolation_tuning")
+    assert "BatchEvalPython" not in names
     # one logical source re-read per model table + heldout stream is
     # acceptable; 5x that count would indicate per-lambda scans
-    assert plan.count("Scan parquet") <= 12
+    assert names.count("Scan parquet") <= 6
 
 
 def test_decay_score_is_map_side_then_user_agg(spark):
     """Scoring is a projection against the 1-row anchor broadcast;
     the only shuffle carries per-user partial sums."""
-    plan = formatted_plan(_q("events_decay_engagement_score")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
-    assert "SortMergeJoin" not in plan
+    names = _names(spark, "events_decay_engagement_score")
+    assert "BatchEvalPython" not in names
+    assert "SortMergeJoin" not in names
 
 
 def test_burst_baseline_broadcasts(spark):
     """The 168-row hour-of-week baseline must broadcast onto the
     hourly counts."""
-    df = _q("events_anomaly_burst_poisson")(spark, SF_DIR)
-    assert uses_broadcast_join(df)
+    assert "BroadcastHashJoin" in _names(spark, "events_anomaly_burst_poisson")
 
 
 def test_content_hash_shuffles_digests_not_blobs(spark):
     """The dedup groupBy must key on the md5 digest — the shuffle
     carries 32-char fingerprints, never media blobs; no Python."""
-    plan = formatted_plan(_q("multimodal_dedup_content_hash")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
-    assert "Join" not in plan
+    names = _names(spark, "multimodal_dedup_content_hash")
+    assert "BatchEvalPython" not in names
+    assert not any("Join" in n for n in names)
 
 
 def test_group_by_all_plans_as_explicit_keys(spark):
     """GROUP BY ALL must resolve at analysis time to a plain keyed
     aggregate — one scan, no joins."""
-    plan = formatted_plan(_q("sql_group_order_by_all")(spark, SF_DIR))
-    assert plan.count("Scan parquet") == 2  # tree node + detail block
-    assert "Join" not in plan
+    names = _names(spark, "sql_group_order_by_all")
+    assert names.count("Scan parquet") == 1
+    assert not any("Join" in n for n in names)
 
 
 def test_peak_detection_bounded_window(spark):
     """Peaks come from the +-3-row window over the hourly AGGREGATE
     with a |series|-row median broadcast — no joins beyond it, no
     Python."""
-    plan = formatted_plan(_q("ts_peak_detection_local_maxima")(spark, SF_DIR))
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
+    names = _names(spark, "ts_peak_detection_local_maxima")
+    assert "BatchEvalPython" not in names
+    assert "CartesianProduct" not in names
 
 
 # ---- r6: global-window rewrites + shuffle-payload pins ----------------
@@ -997,22 +1000,17 @@ def test_q5_supplier_edge_not_broadcast(spark):
     fact is the q9-class OOM-at-100x defect fixed in commit 0800661
     (VERDICT r5 item 3). The constant dims (nation, region) may still
     broadcast freely."""
-    plan = formatted_plan(_q("q5_local_supplier")(spark, SF_DIR))
-    # Section-scan the formatted detail blocks: every join section that
-    # mentions s_suppkey as a key must be a merge join.
-    sections = plan.split("\n\n")
+    # every keyed join that mentions s_suppkey must be a shuffle join
     supplier_joins = [
-        s
-        for s in sections
-        if "s_suppkey" in s and ("Left keys" in s or "Right keys" in s)
+        n.name
+        for n in _with_args(_plan(spark, "q5_local_supplier"), "s_suppkey")
+        if n.name in ("BroadcastHashJoin", "ShuffledHashJoin", "SortMergeJoin")
     ]
     assert supplier_joins, "expected a keyed join on s_suppkey"
-    for s in supplier_joins:
-        # r9: shuffle_hash replaces merge (same shuffle pin, no sort
-        # of the fact chain) — either shuffle strategy satisfies the
-        # never-broadcast invariant this test exists for.
-        head = s.splitlines()[0]
-        assert "SortMergeJoin" in head or "ShuffledHashJoin" in head, head
+    # r9: shuffle_hash replaces merge (same shuffle pin, no sort of the
+    # fact chain) — either shuffle strategy satisfies the
+    # never-broadcast invariant this test exists for.
+    assert "BroadcastHashJoin" not in supplier_joins, supplier_joins
 
 
 def test_incremental_lsh_band_join_is_narrow(spark):
@@ -1023,30 +1021,31 @@ def test_incremental_lsh_band_join_is_narrow(spark):
     signature columns are re-fetched AFTER dedup (VERDICT r5 item 2;
     the old plan dragged both signatures through the band join and
     .distinct()'d the wide rows)."""
-    import re
-
-    plan = formatted_plan(_q("dedup_incremental_lsh")(spark, SF_DIR))
-    assert re.search(
-        r"Output \[2\]: \[doc_id#\d+L AS batch_doc#\d+L, "
-        r"doc_id#\d+L AS corpus_doc#\d+L\]",
-        plan,
+    nodes = _plan(spark, "dedup_incremental_lsh")
+    assert any(
+        n.name == "Project"
+        and re.fullmatch(
+            r"\[doc_id#\d+L AS batch_doc#\d+L, doc_id#\d+L AS corpus_doc#\d+L\]", n.args
+        )
+        for n in nodes
     ), "band join must project exactly (batch_doc, corpus_doc)"
-    assert re.search(
-        r"Keys \[2\]: \[batch_doc#\d+L, corpus_doc#\d+L\]", plan
+    assert any(
+        "Aggregate" in n.name
+        and re.search(r"\bfalse, \[batch_doc#\d+L, corpus_doc#\d+L\], ", n.args)
+        for n in nodes
     ), "pair dedup must aggregate on the narrow 2-column key"
     # no signature column may sit below the band-bucket exchange
-    for section in plan.split("\n\n"):
-        if "Left keys [2]: [band#" in section:
-            assert "mh" not in section, section
+    for n in nodes:
+        if n.name.endswith("Join") and n.args.startswith("[band#"):
+            assert "mh" not in n.args, n.args
 
 
-def _single_partition_window_frames(plan):
+def _single_partition_window_frames(nodes):
     """Columns each unpartitioned window orders by (the frames that
     would serialize on one task at scale)."""
-    import re
-
     frames = []
-    for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
+    windows = (m for n in nodes for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", n.args))
+    for m in windows:
         args = m.group(1)
         # partitioned windows list partition cols BEFORE the first
         # "col ASC/DESC" ordering token; a single-partition window's
@@ -1063,10 +1062,10 @@ def test_rfm_quartiles_have_no_customer_scale_global_window(spark):
     row_number window is partitioned by a bucket column, and the only
     unpartitioned windows left run over the <=64-row bucket-offset
     frames (__dr_cnt sums)."""
-    plan = formatted_plan(_q("customer_rfm_segments")(spark, SF_DIR))
-    assert "ntile" not in plan.lower()
-    assert "__bkt___rk_r" in plan and "__bkt___rk_m" in plan
-    for frame in _single_partition_window_frames(plan):
+    nodes = _plan(spark, "customer_rfm_segments")
+    assert not any("ntile" in n.args.lower() for n in nodes)
+    assert _with_args(nodes, "__bkt___rk_r") and _with_args(nodes, "__bkt___rk_m")
+    for frame in _single_partition_window_frames(nodes):
         assert "__bkt" in frame, (
             "unpartitioned window over a non-bucket-offset frame: "
             + frame
@@ -1078,9 +1077,9 @@ def test_pareto_prefix_sum_is_bucket_decomposed(spark):
     (within-bucket running sum + broadcast bucket-mass offsets), in
     exact DECIMAL cents; the only unpartitioned window is over the
     <=64-row bucket sums (VERDICT r5 item 4)."""
-    plan = formatted_plan(_q("pareto_abc_classes")(spark, SF_DIR))
-    assert "__bkt___cum" in plan
-    for frame in _single_partition_window_frames(plan):
+    nodes = _plan(spark, "pareto_abc_classes")
+    assert _with_args(nodes, "__bkt___cum")
+    for frame in _single_partition_window_frames(nodes):
         assert "__bkt" in frame, frame
 
 
@@ -1088,9 +1087,9 @@ def test_gini_rank_is_bucket_decomposed(spark):
     """Exact Gini needs a global rank; it must come from the distrank
     two-pass, not a single-partition row_number over all customers
     (VERDICT r5 item 4)."""
-    plan = formatted_plan(_q("stat_gini_concentration")(spark, SF_DIR))
-    assert "__bkt_i" in plan
-    for frame in _single_partition_window_frames(plan):
+    nodes = _plan(spark, "stat_gini_concentration")
+    assert _with_args(nodes, "__bkt_i")
+    for frame in _single_partition_window_frames(nodes):
         assert "__bkt" in frame, frame
 
 
@@ -1099,23 +1098,20 @@ def test_dataset_global_shuffle_limits_before_window(spark):
     BELOW the row_number window, so the single-partition window sees
     only the 100 survivors — not the whole corpus (the pre-r6 plan
     sorted every doc on one task)."""
-    plan = formatted_plan(_q("dataset_global_shuffle")(spark, SF_DIR))
-    tree = plan.split("\n\n")[0]
-    lines = [ln for ln in tree.splitlines()]
-    win = next(i for i, l in enumerate(lines) if "Window" in l)
-    take = next(
-        i for i, l in enumerate(lines) if "TakeOrderedAndProject" in l
+    nodes = _plan(spark, "dataset_global_shuffle")
+    win = next(n for n in nodes if "Window" in n.name)
+    assert "TakeOrderedAndProject" in [n.name for n in _subtree(win)], (
+        "TakeOrdered must be a CHILD of (below) the window"
     )
-    assert take > win, "TakeOrdered must be a CHILD of (below) the window"
 
 
 def test_skyline_running_max_is_bucket_decomposed(spark):
     """The sort-scan running max must be the distrank two-pass: the
     only unpartitioned window runs over the <=64-row bucket-offset
     frame, never over all orders."""
-    plan = formatted_plan(_q("skyline_dominance")(spark, SF_DIR))
-    assert "__bkt_best_date_so_far" in plan
-    for frame in _single_partition_window_frames(plan):
+    nodes = _plan(spark, "skyline_dominance")
+    assert _with_args(nodes, "__bkt_best_date_so_far")
+    for frame in _single_partition_window_frames(nodes):
         assert "__bkt" in frame, frame
 
 
@@ -1123,16 +1119,16 @@ def test_curriculum_and_perplexity_tiles_have_no_global_ntile(spark):
     """Equal-frequency tiles derive from distrank + arithmetic ntile;
     the ntile window function must be gone from both plans."""
     for name in ("curriculum_quality_stages", "corpus_perplexity_buckets"):
-        plan = formatted_plan(_q(name)(spark, SF_DIR))
-        assert "ntile" not in plan.lower(), name
-        for frame in _single_partition_window_frames(plan):
+        nodes = _plan(spark, name)
+        assert not any("ntile" in n.args.lower() for n in nodes), name
+        for frame in _single_partition_window_frames(nodes):
             assert "__bkt" in frame, (name, frame)
 
 
 def test_token_budget_prefix_sum_is_bucket_decomposed(spark):
-    plan = formatted_plan(_q("corpus_token_budget_pack")(spark, SF_DIR))
-    assert "__bkt_cum_tok" in plan
-    for frame in _single_partition_window_frames(plan):
+    nodes = _plan(spark, "corpus_token_budget_pack")
+    assert _with_args(nodes, "__bkt_cum_tok")
+    for frame in _single_partition_window_frames(nodes):
         assert "__bkt" in frame, frame
 
 
@@ -1140,9 +1136,9 @@ def test_ks_ecdf_is_bucket_decomposed(spark):
     """Both ECDF cumulative counts must come from the distrank
     two-pass — the distinct-price frame is order-scaled, so the
     textbook single-partition KS window would serialize it."""
-    plan = formatted_plan(_q("stat_ks_test")(spark, SF_DIR))
-    assert "__bkt_c1" in plan and "__bkt_c2" in plan
-    for frame in _single_partition_window_frames(plan):
+    nodes = _plan(spark, "stat_ks_test")
+    assert _with_args(nodes, "__bkt_c1") and _with_args(nodes, "__bkt_c2")
+    for frame in _single_partition_window_frames(nodes):
         assert "__bkt" in frame, frame
 
 
@@ -1151,8 +1147,7 @@ def test_vocab_ranks_are_bucket_decomposed(spark):
     via distrank — a web-scale vocab never collapses onto one sort
     task."""
     for name in ("tokenizer_vocab_build", "text_zipf_fit"):
-        plan = formatted_plan(_q(name)(spark, SF_DIR))
-        for frame in _single_partition_window_frames(plan):
+        for frame in _single_partition_window_frames(_plan(spark, name)):
             assert "__bkt" in frame, (name, frame)
 
 
@@ -1163,10 +1158,9 @@ def test_approx_count_distinct_avoids_hll_expand_plan(spark):
     measured 21 min/task at 60M rows. The split form (two single-row
     jobs cross-joined) keeps both aggregates partial/final; this pin
     fails if the Expand pathology ever comes back."""
-    plan = formatted_plan(_q("agg_approx_count_distinct")(spark, SF_DIR))
-    tree = plan.split("\n\n")[0]
-    assert "Expand" not in tree, tree
-    assert "BroadcastNestedLoopJoin" in tree  # the 1-row x 1-row join
+    names = _names(spark, "agg_approx_count_distinct")
+    assert "Expand" not in names, names
+    assert "BroadcastNestedLoopJoin" in names  # the 1-row x 1-row join
 
 
 def test_semantic_dedup_assignment_is_aggregated_narrow(spark):
@@ -1175,11 +1169,9 @@ def test_semantic_dedup_assignment_is_aggregated_narrow(spark):
     the embedding array through an n*K-row shuffle (~50 GB at sf10).
     The only windows allowed in this plan are the <= n-row keeper
     ranking (partitioned by kb) downstream of the pair join."""
-    plan = formatted_plan(_q("dedup_semantic_clustered")(spark, SF_DIR))
-    # expression details (min_by) live in the detail section, not the
-    # node-summary tree
-    assert "min_by" in plan, plan.split("\n\n")[0]
-    for frame in _single_partition_window_frames(plan.split("\n\n")[0]):
+    nodes = _plan(spark, "dedup_semantic_clustered")
+    assert _with_args(nodes, "min_by"), [n.name for n in nodes]
+    for frame in _single_partition_window_frames(nodes):
         raise AssertionError(f"unexpected global window: {frame}")
 
 
@@ -1192,18 +1184,17 @@ def test_semantic_dedup_assignment_runs_at_core_parallelism(spark):
     on ~2 cores. Every vec_id repartition in the plan must be an
     explicit REPARTITION_BY_NUM at >= defaultParallelism partitions,
     and at least one must sit upstream of the cross-join."""
-    import re
-
-    plan = formatted_plan(_q("dedup_semantic_clustered")(spark, SF_DIR))
+    nodes = _plan(spark, "dedup_semantic_clustered")
     dp = spark.sparkContext.defaultParallelism
     widths = [
         int(m)
+        for n in nodes
         for m in re.findall(
             r"hashpartitioning\(vec_id#\d+L?, (\d+)\), REPARTITION_BY_NUM",
-            plan,
+            n.args,
         )
     ]
-    assert widths, f"vec_id repartition gone from plan:\n{plan[:2000]}"
+    assert widths, f"vec_id repartition gone from plan: {[n.name for n in nodes]}"
     assert all(w >= dp for w in widths), (widths, dp)
 
 
@@ -1290,11 +1281,9 @@ def test_semantic_dedup_assignment_subtree_reused_at_runtime(spark):
     the reuse; this catches it."""
     df = _q("dedup_semantic_clustered")(spark, "/root/testdata/sf0.001")
     assert len(df.collect()) > 0
-    plan = formatted_plan(df)
-    tree = plan.split("\n\n")[0]
-    assert tree.count("ReusedExchange") >= 4, (
-        f"AQE exchange reuse gone — assignment subtree replayed:\n"
-        f"{tree[:3000]}"
+    names = [n.name for n in plan_nodes(df)]
+    assert names.count("ReusedExchange") >= 4, (
+        f"AQE exchange reuse gone — assignment subtree replayed: {names}"
     )
 
 
@@ -1306,30 +1295,23 @@ def test_cogroup_fact_side_carries_probe_predicate(spark):
     to emit an empty frame — measured at sf100: 11.5M empty-group
     callbacks, 1138 s wall vs 8 s with the mirrored filter. Both
     scans must show the pushed key predicate."""
-    df = _q("udf_cogrouped_pandas")(spark, SF_DIR)
-    assert has_pushed_filter(df, "o_custkey"), (
+    nodes = _plan(spark, "udf_cogrouped_pandas")
+    assert _pushed(nodes, "o_custkey"), (
         "orders-side probe predicate gone — empty-group callback flood"
     )
-    assert has_pushed_filter(df, "c_custkey")
+    assert _pushed(nodes, "c_custkey")
 
 
-def _joins_building(node, table):
-    """Hash joins in an executed (AQE final) plan whose build side reads
-    `table`, as node names. Walks py4j nodes, descending into query
-    stages, whose plan is not among their children."""
+def _joins_building(nodes, table):
+    """Hash joins among `nodes` whose build side reads `table`, as node
+    names."""
     found = []
-    name = node.nodeName()
-    if name in ("BroadcastHashJoin", "ShuffledHashJoin"):
-        build = node.right() if node.buildSide().toString() == "BuildRight" else node.left()
-        if f"{table}.parquet" in build.treeString():
-            found.append(name)
-    kids = [node.plan()] if "QueryStage" in name else []
-    if name == "AdaptiveSparkPlan":
-        kids = [node.executedPlan()]
-    children = node.children()
-    kids += [children.apply(i) for i in range(children.size())]
-    for kid in kids:
-        found += _joins_building(kid, table)
+    for n in nodes:
+        if n.name in ("BroadcastHashJoin", "ShuffledHashJoin"):
+            left, right = n.children
+            build = right if "BuildRight" in n.args.split(", ") else left
+            if any(f"{table}.parquet" in b.meta.get("Location", "") for b in _subtree(build)):
+                found.append(n.name)
     return found
 
 
@@ -1341,21 +1323,21 @@ def test_q5_streams_lineitem_never_builds_it(spark):
     all 600k lineitem rows from one task."""
     df = _q("q5_local_supplier")(spark, SF_DIR)
     assert df.collect()
-    plan = df._jdf.queryExecution().executedPlan()
-    assert "isFinalPlan=true" in plan.toString()
-    assert _joins_building(plan, "lineitem") == []
-    assert _joins_building(plan, "orders"), "orders side is no longer built"
+    nodes = plan_nodes(df)
+    assert nodes[0].args == "isFinalPlan=true"
+    assert _joins_building(nodes, "lineitem") == []
+    assert _joins_building(nodes, "orders"), "orders side is no longer built"
 
 
-def _partial_sum_args(plan):
-    """The argument of every partial_sum(...) in a formatted plan."""
+def _partial_sum_args(text):
+    """The argument of every partial_sum(...) in a node's argument text."""
     args = []
-    for m in re.finditer(r"partial_sum\(", plan):
+    for m in re.finditer(r"partial_sum\(", text):
         depth, i = 1, m.end()
         while depth:
-            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            depth += {"(": 1, ")": -1}.get(text[i], 0)
             i += 1
-        args.append(plan[m.end() : i - 1])
+        args.append(text[m.end() : i - 1])
     return args
 
 
@@ -1366,12 +1348,56 @@ def test_money_sums_stay_off_decimal_buffers(spark):
     for name in ("q1_pricing_summary", "write_partitioned_parquet"):
         df = _q(name)(spark, SF_DIR)
         assert df.collect()
-        plan = formatted_plan(df)
-        assert "isFinalPlan=true" in plan, name
-        args = _partial_sum_args(plan)
+        nodes = plan_nodes(df)
+        assert nodes[0].args == "isFinalPlan=true", name
+        args = [a for n in nodes for a in _partial_sum_args(n.args)]
         assert args, name
         decimal_sums = [
             a for a in args
             if a.startswith("cast(") and a.endswith(" as decimal(38,0))")
         ]
         assert decimal_sums == [], (name, decimal_sums)
+
+
+def test_plan_walker_descends_each_plan_once(spark):
+    """plan_nodes' descent rules on three shapes: a scalar subquery's
+    plan follows the main tree once, however many expressions hold it,
+    and its Subquery wrapper is no node; a persisted frame's cached
+    plan is walked once, under the first InMemoryTableScan; and after
+    collect() the walk is of AQE's final plan only, where a
+    ReusedExchange is a leaf and every codegen span is one node."""
+    from parquet_playground_spark.session import scoped_confs
+    from parquet_playground_spark.tables import load_table
+
+    q22 = _plan(spark, "q22_idle_rich_customers")
+    names = [n.name for n in q22]
+    assert names.count("AdaptiveSparkPlan") == 2, names
+    assert q22[names.index("AdaptiveSparkPlan", 1)] not in list(_subtree(q22[0]))
+    assert not any("Subquery" in n for n in names), names
+    assert sum("customer.parquet" in n.meta["Location"] for n in _scans(q22)) == 2
+
+    # both consumers of the persisted aggregate read the in-memory
+    # columnar cache, not a recomputed scan+aggregate
+    cached = _q("plan_cache_reuse")(spark, SF_DIR)
+    cached.collect()
+    nodes = plan_nodes(cached)
+    scans = [n for n in nodes if n.name == "InMemoryTableScan"]
+    assert len(scans) == 2
+    assert [len(n.children) for n in scans] == [1, 0]
+    assert len(_scans(nodes)) == 1
+
+    agg = load_table(spark, SF_DIR, "orders").groupBy("o_custkey").count()
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+        df = agg.join(agg.withColumnRenamed("count", "n"), "o_custkey")
+        initial = [n.name for n in plan_nodes(df)]
+        df.collect()
+        final = plan_nodes(df)
+    assert initial.count("Exchange") == 2
+    assert not any(n.startswith("WholeStageCodegen") for n in initial)
+    names = [n.name for n in final]
+    assert names.count("AdaptiveSparkPlan") == 1 and final[0].args == "isFinalPlan=true"
+    assert names.count("Exchange") == 1 and names.count("ReusedExchange") == 1
+    assert next(n for n in final if n.name == "ReusedExchange").children == []
+    assert len(_scans(final)) == 1
+    spans = [n for n in names if n.startswith("WholeStageCodegen")]
+    assert spans and len(spans) == len(set(spans)), spans

@@ -38,18 +38,10 @@ import os
 import sys
 import time
 
-import duckdb
-
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-SF_DIR = os.environ.get(
-    "SPARK_GRAFT_VERIFY_SF_DIR", "/root/testdata/sf0.01"
-)
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
+from tools.verify_local import SF_DIR, oracle_connection  # noqa: E402
 
 
 def spark_fp_exprs(df):
@@ -180,19 +172,7 @@ def main() -> int:
     names = sys.argv[1:]
     registry.load_all()
     spark = get_spark("fingerprint-check")
-    con = duckdb.connect()
-    duck_mem = os.environ.get("SPARK_GRAFT_DUCKDB_MEM", "48GB")
-    if duck_mem and duck_mem.lower() != "off":
-        con.execute(f"SET memory_limit = '{duck_mem}'")
-        tmp = os.environ.get(
-            "SPARK_GRAFT_DUCKDB_TMP", "/tmp/ppspark_duck_tmp"
-        )
-        os.makedirs(tmp, exist_ok=True)
-        con.execute(f"SET temp_directory = '{tmp}'")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = oracle_connection(SF_DIR)
 
     n_fail = 0
     for name in names:

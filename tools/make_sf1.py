@@ -33,10 +33,9 @@ import duckdb
 
 SRC = "/root/testdata/sf0.1"
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
+sys.path.insert(0, ROOT)
+
+from parquet_playground_spark.tables import TABLES  # noqa: E402
 
 
 def main() -> None:

@@ -35,16 +35,12 @@ import os
 import sys
 import traceback
 
-import duckdb
-
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from tools.verify_local import oracle_connection  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
 
 INT_FAMILY = {
     "TINYINT", "SMALLINT", "INTEGER", "BIGINT",
@@ -139,11 +135,7 @@ def main() -> int:
 
     registry.load_all()
     spark = get_spark("type-sweep")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = oracle_connection(SF_DIR)
 
     names = args or sorted(registry.ORACLES)
     n_clean = n_flagged = n_err = 0

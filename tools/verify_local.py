@@ -54,6 +54,8 @@ import duckdb
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from parquet_playground_spark import tables  # noqa: E402
+
 # Override with SPARK_GRAFT_VERIFY_SF_DIR to sweep the oracle suite at
 # another scale point (e.g. sf0.1, or the local sf1 build) — oracle
 # agreement at multiple SFs is evidence the determinism rules hold as
@@ -61,10 +63,34 @@ sys.path.insert(0, ROOT)
 SF_DIR = os.environ.get(
     "SPARK_GRAFT_VERIFY_SF_DIR", "/root/testdata/sf0.01"
 )
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings".split()
-)
+
+
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """The DuckDB oracle: an in-memory connection with one view per
+    fixture table of `sf_dir`.
+
+    Deployment settings: SPARK_GRAFT_DUCKDB_THREADS caps DuckDB's
+    thread pool, so parallel chunked sweeps don't each claim every
+    core (4x32 threads thrashes the host into 60%+ sys time; the sf10
+    sweep is where this bit). SPARK_GRAFT_DUCKDB_MEM caps its memory
+    (default 48GB, "off" for DuckDB's own 80% of RAM): with no cap, a
+    big oracle intermediate (e.g. part_co_occurrence's ~1e9-pair hash
+    aggregate at sf100) grows until the kernel OOM-kills the process
+    instead of spilling (measured: anon-rss 101 GB on a 125 GB host).
+    Spills go to SPARK_GRAFT_DUCKDB_TMP, by default this process's
+    `tables.scratch_path("duckdb_tmp")`, removed at exit."""
+    con = duckdb.connect()
+    threads = os.environ.get("SPARK_GRAFT_DUCKDB_THREADS")
+    if threads:
+        con.execute(f"SET threads = {int(threads)}")
+    mem = os.environ.get("SPARK_GRAFT_DUCKDB_MEM", "48GB")
+    if mem and mem.lower() != "off":
+        con.execute(f"SET memory_limit = '{mem}'")
+    tmp = os.environ.get("SPARK_GRAFT_DUCKDB_TMP") or tables.scratch_path("duckdb_tmp")
+    con.execute(f"SET temp_directory = '{tmp}'")
+    for t in tables.TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
 
 
 def canon_value(v) -> str:
@@ -217,32 +243,7 @@ def main() -> int:
     else:
         spark = get_spark("verify-local")
 
-    con = duckdb.connect()
-    # Parallel chunked sweeps: cap DuckDB's thread pool so N processes
-    # don't each claim every core (4x32 threads thrashes the host into
-    # 60%+ sys time; the sf10 sweep is where this bit).
-    duck_threads = os.environ.get("SPARK_GRAFT_DUCKDB_THREADS")
-    if duck_threads:
-        con.execute(f"SET threads = {int(duck_threads)}")
-    # High-SF sweeps: DuckDB's default memory_limit is 80% of RAM with
-    # no temp_directory on an in-memory connection, so a big oracle
-    # intermediate (e.g. part_co_occurrence's ~1e9-pair hash aggregate
-    # at sf100) grows until the kernel OOM-kills the whole process
-    # instead of spilling. Cap it and give it a spill dir; both
-    # env-overridable. The kill this guards against was measured:
-    # anon-rss 101 GB on a 125 GB host at sf100.
-    duck_mem = os.environ.get("SPARK_GRAFT_DUCKDB_MEM", "48GB")
-    if duck_mem and duck_mem.lower() != "off":
-        con.execute(f"SET memory_limit = '{duck_mem}'")
-        tmp = os.environ.get(
-            "SPARK_GRAFT_DUCKDB_TMP", "/tmp/ppspark_duck_tmp"
-        )
-        os.makedirs(tmp, exist_ok=True)
-        con.execute(f"SET temp_directory = '{tmp}'")
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
+    con = oracle_connection(SF_DIR)
 
     names = args or sorted(registry.QUERIES)
     n_pass = n_fail = n_rows_only = n_big = 0
