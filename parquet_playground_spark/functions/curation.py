@@ -45,7 +45,7 @@ from parquet_playground_spark.operators.distrank import (
     ntile_from_rank,
 )
 from parquet_playground_spark.registry import register, track_persist
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, sql_on_tables
 
 # ---------------------------------------------------------------------------
 # text_pii_redaction
@@ -1648,7 +1648,7 @@ def corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Spark-SQL twin of dedup._SHINGLES_SQL (same K, same distinct-shingle
 # contract) so the leakage audit can share one SQL template across
-# engines; {doc} is the document source relation.
+# engines; {documents} is the document source relation.
 _SLC_SHINGLES_DUCK = """
         SELECT doc_id, shingle
         FROM (
@@ -1658,7 +1658,7 @@ _SLC_SHINGLES_DUCK = """
                        FOR i IN range(1, len(toks) - 1)
                    ])) AS shingle
             FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS toks
-                  FROM {doc})
+                  FROM {documents})
         )
 """
 
@@ -1671,7 +1671,7 @@ _SLC_SHINGLES_SPARK = """
                        i -> array_join(slice(toks, i + 1, 3), ' ')
                    ))) AS shingle
             FROM (SELECT doc_id, split(lower(text), '\\\\s+') AS toks
-                  FROM {doc})
+                  FROM {documents})
         )
 """
 
@@ -1706,7 +1706,7 @@ _SLC_SQL = """
                        {hex_head}substr(md5(concat('split:',
                             CAST(doc_id AS {str_t}))), 1, 8){hex_tail}
                        % 100 AS b
-                FROM {doc}) t
+                FROM {documents}) t
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS da, b.doc_id AS db,
@@ -1750,8 +1750,8 @@ _SLC_SQL = """
 @register(
     "dataset_split_leakage_check",
     oracle=_SLC_SQL.format(
-        shingles=_SLC_SHINGLES_DUCK.format(doc="documents"),
-        doc="documents",
+        shingles=_SLC_SHINGLES_DUCK.format(documents="documents"),
+        documents="documents",
         str_t="VARCHAR",
         hex_head="CAST(concat('0x', ",
         hex_tail=") AS BIGINT)",
@@ -1787,22 +1787,25 @@ def dataset_split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     on doc_id; the readout is a <= 6-row crosstab. The same audit
     composes with MinHash-LSH candidates when even the exact prefix
     path is too hot."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "slc_documents"
-    )
     # The SQL references the shingle stream ~5x (df cap, sizes,
     # ranking, and both verification sides); materialize it once so
     # Spark doesn't re-run the explode per reference. sh0 here is the
     # raw shingle stream; the SQL's own sh0 CTE becomes a passthrough.
-    track_persist(
-        spark.sql(_SLC_SHINGLES_SPARK.format(doc="slc_documents"))
-    ).createOrReplaceTempView("slc_shingles")
-    return spark.sql(
+    shingles = sql_on_tables(spark, sf_dir, _SLC_SHINGLES_SPARK)
+    out = sql_on_tables(
+        spark,
+        sf_dir,
         _SLC_SQL.format(
-            shingles="SELECT doc_id, shingle FROM slc_shingles",
-            doc="slc_documents",
+            shingles="SELECT doc_id, shingle FROM {shingles}",
+            documents="{documents}",
             str_t="STRING",
             hex_head="CAST(conv(",
             hex_tail=", 16, 10) AS BIGINT)",
-        )
+        ),
+        shingles=shingles,
     )
+    # Persist only now: spark.sql drops the view it bound `shingles`
+    # to before returning, and dropping a view uncaches the data its
+    # plan matches. The cache is substituted when `out` is planned.
+    track_persist(shingles)
+    return out

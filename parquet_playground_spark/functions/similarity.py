@@ -1771,17 +1771,14 @@ def embedding_centroid_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector UDFs, no pairwise joins; the fan-out factor is |labels|,
     not corpus size."""
     emb = load_table(spark, sf_dir, "embeddings")
-    emb.select(
+    src = emb.select(
         "vec_id",
         "label",
         F.posexplode(F.col("embedding").cast("array<double>")).alias(
             "pos0", "val"
         ),
-    ).select(
-        "vec_id", "label", (F.col("pos0") + 1).alias("pos"), "val"
-    ).createOrReplaceTempView("margin_longv_src")
+    ).select("vec_id", "label", (F.col("pos0") + 1).alias("pos"), "val")
     return spark.sql(
-        _MARGIN_SQL.format(
-            explode="SELECT vec_id, label, pos, val FROM margin_longv_src"
-        )
+        _MARGIN_SQL.format(explode="SELECT vec_id, label, pos, val FROM {src}"),
+        src=src,
     )

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from parquet_playground_spark.functions.dedup import _fanout
 from parquet_playground_spark.operators.distrank import global_rank
 from parquet_playground_spark.registry import register, track_persist
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, sql_on_tables
 
 
 @register(
@@ -1452,7 +1452,7 @@ _BPE_SPARK = """
         WITH vocab AS (
             SELECT tok AS word, count(*) AS freq
             FROM (SELECT explode(split(lower(text), '\\\\s+')) AS tok
-                  FROM bpe_documents)
+                  FROM {documents})
             WHERE tok <> ''
             GROUP BY tok
         ),
@@ -1557,16 +1557,13 @@ def tokenizer_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     never rescanning the corpus. Each iteration is one explode +
     map-combinable count + 1-row broadcast of the winning pair.
     Integer counts end-to-end: zero float exposure."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "bpe_documents"
-    )
-    return spark.sql(_BPE_SPARK)
+    return sql_on_tables(spark, sf_dir, _BPE_SPARK)
 
 
 _JSD_SQL = """
         WITH tok AS (
             SELECT source, tok, count(*) AS c
-            FROM (SELECT source, {unnest} AS tok FROM {docs})
+            FROM (SELECT source, {unnest} AS tok FROM {documents})
             WHERE tok <> ''
               AND source IN ('src0', 'src1')
             GROUP BY source, tok
@@ -1605,7 +1602,7 @@ _JSD_SQL = """
 @register(
     "corpus_source_divergence_jsd",
     oracle=_JSD_SQL.format(
-        docs="documents",
+        documents="documents",
         unnest="unnest(string_split_regex(lower(text), '\\s+'))",
     ),
 )
@@ -1619,14 +1616,13 @@ def corpus_source_divergence_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     term) count, 2-row totals, vocab-sized pivot, scalar readout —
     scan-bound. 6-dp rounding absorbs ln/summation drift on these
     O(1) magnitudes."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "jsd_documents"
-    )
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         _JSD_SQL.format(
-            docs="jsd_documents",
+            documents="{documents}",
             unnest="explode(split(lower(text), '\\\\s+'))",
-        )
+        ),
     )
 
 
@@ -1669,7 +1665,7 @@ _NOVELTY_SPARK_BIGGEN = """
                 i -> concat(element_at(t, i), ' ', element_at(t, i + 1))
             )) AS bg
             FROM (SELECT doc_id, split(lower(text), '\\\\s+') AS t
-                  FROM novelty_documents)
+                  FROM {documents})
             WHERE size(t) >= 2
 """
 
@@ -1687,10 +1683,9 @@ def text_ngram_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, bigram) count, a per-bigram min-doc window (the one
     bigram-keyed shuffle), then a per-doc readout. Integer counts +
     one final ratio at 6 dp."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "novelty_documents"
+    return sql_on_tables(
+        spark, sf_dir, _NOVELTY_SQL.format(biggen=_NOVELTY_SPARK_BIGGEN)
     )
-    return spark.sql(_NOVELTY_SQL.format(biggen=_NOVELTY_SPARK_BIGGEN))
 
 
 # ---------------------------------------------------------------------------
@@ -1874,14 +1869,11 @@ def tokenizer_unigram_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-combinable usage count. The per-word DP is O(len x
     max_piece) inside whole-stage codegen. Integer counts and ranks
     end-to-end: zero float exposure."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "uem_documents"
-    )
-    return spark.sql(f"""
+    return sql_on_tables(spark, sf_dir, f"""
         WITH words AS (
             SELECT tok AS word, CAST(count(*) AS BIGINT) AS freq
             FROM (SELECT explode(split(lower(text), '\\\\s+')) AS tok
-                  FROM uem_documents)
+                  FROM {{documents}})
             WHERE tok RLIKE '^[a-z]+$' AND length(tok) <= {_UEM_MAX_WLEN}
             GROUP BY tok
         ),
@@ -2475,7 +2467,7 @@ _WP_WORDS_DUCK = """
 _WP_WORDS_SPARK = """
             SELECT tok AS word, count(*) AS freq
             FROM (SELECT explode(split(lower(text), '\\\\s+')) AS tok
-                  FROM wp_documents)
+                  FROM {documents})
             WHERE tok <> ''
             GROUP BY tok
 """
@@ -2521,10 +2513,11 @@ def tokenizer_wordpiece_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache-fill jobs plus per-step InMemoryTableScan overhead. The
     single-statement form stays; formatted-plan scan counts overstate
     executed work for this plan class."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "wp_documents"
+    return sql_on_tables(
+        spark,
+        sf_dir,
+        _wp_sql(_WP_WORDS_SPARK, "STRING").format(idiv="div", documents="{documents}"),
     )
-    return spark.sql(_wp_sql(_WP_WORDS_SPARK, "STRING").format(idiv="div"))
 
 
 @register(
@@ -2665,7 +2658,7 @@ _LMTUNE_SQL = """
                             CAST(doc_id AS {str_t}))), 1, 8){hex_tail}
                         % 100 < 80
                         THEN 1 ELSE 0 END AS is_train
-            FROM {doc}
+            FROM {documents}
         ),
         toks AS (
             SELECT doc_id, is_train, t FROM (
@@ -2731,7 +2724,7 @@ _LMTUNE_SQL = """
 @register(
     "text_lm_interpolation_tuning",
     oracle=_LMTUNE_SQL.format(
-        doc="documents",
+        documents="documents",
         str_t="VARCHAR",
         hex_head="CAST(concat('0x', ",
         hex_tail=") AS BIGINT)",
@@ -2772,12 +2765,11 @@ def text_lm_interpolation_tuning(
     table, three LEFT JOINs back onto the held-out stream (AQE
     broadcast-or-shuffle), and the 5-lambda sweep is a cross join on
     the SCORED stream — K mixture candidates never cost K passes."""
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "lmtune_documents"
-    )
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         _LMTUNE_SQL.format(
-            doc="lmtune_documents",
+            documents="{documents}",
             str_t="STRING",
             hex_head="CAST(conv(",
             hex_tail=", 16, 10) AS BIGINT)",
@@ -2792,5 +2784,5 @@ def text_lm_interpolation_tuning(
             w2_of_bg="split(bg, ' ')[1]",
             w1_of_b="split(b.bg, ' ')[0]",
             w2_of_b="split(b.bg, ' ')[1]",
-        )
+        ),
     )

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType
 
 from parquet_playground_spark.functions.scalars import _round_stable
-from parquet_playground_spark.registry import register
+from parquet_playground_spark.registry import register, track_drop
 from parquet_playground_spark.tables import load_table
 
 
@@ -149,12 +149,13 @@ def udtf_split_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield doc_id, tok
 
         spark.udtf.register("pp_split_rows", SplitRows)
-        d.createOrReplaceTempView("udtf_docs")
+        track_drop(spark, "DROP TEMPORARY FUNCTION IF EXISTS pp_split_rows")
         return spark.sql(
             """
             SELECT s.doc_id, s.token
-            FROM udtf_docs, LATERAL pp_split_rows(doc_id, text) s
-            """
+            FROM {src}, LATERAL pp_split_rows(doc_id, text) s
+            """,
+            src=d,
         )
     except Exception:
         return d.select(
@@ -334,19 +335,21 @@ def udtf_analyze_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     unpack = udtf(UnpackDelimited, useArrow=True)
     spark.udtf.register("pp_unpack_delimited", unpack)
+    track_drop(spark, "DROP TEMPORARY FUNCTION IF EXISTS pp_unpack_delimited")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 2000)
-    o.select(
+    src = o.select(
         "o_orderkey",
         F.concat_ws(
             "|", "o_orderstatus", "o_orderpriority",
             F.col("o_custkey").cast("string"),
         ).alias("line"),
-    ).createOrReplaceTempView("udtf_dyn_src")
+    )
     return spark.sql(
         """
-        SELECT t.* FROM udtf_dyn_src,
+        SELECT t.* FROM {src},
         LATERAL pp_unpack_delimited(o_orderkey, line, 3) t
-        """
+        """,
+        src=src,
     )
 
 

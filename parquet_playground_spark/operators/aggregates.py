@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from parquet_playground_spark.operators.distrank import exact_percentiles
 from parquet_playground_spark.registry import register
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, sql_on_tables
 
 _LIMB_BITS = 20
 
@@ -367,30 +367,19 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "agg_grouping_sets",
-    oracle="""
+_GROUPING_SETS_SQL = """
         SELECT l_returnflag, l_linestatus,
                grouping(l_returnflag) AS g_flag,
                grouping(l_linestatus) AS g_status,
                count(*) AS n
-        FROM lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-    """,
-)
+"""
+
+
+@register("agg_grouping_sets", oracle=_GROUPING_SETS_SQL.format(lineitem="lineitem"))
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("gs_lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               grouping(l_returnflag) AS g_flag,
-               grouping(l_linestatus) AS g_status,
-               count(*) AS n
-        FROM gs_lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _GROUPING_SETS_SQL)
 
 
 @register(
@@ -708,18 +697,18 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITHIN GROUP (ORDER BY) makes the concatenation deterministic, so
     it oracles exactly — unlike bare collect_list. Map-side partials
     hold sorted runs; one shuffle of |groups| rows."""
-    load_table(spark, sf_dir, "customer").filter(
-        F.col("c_custkey") <= 200
-    ).createOrReplaceTempView("la_customer")
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         """
         SELECT c_nationkey,
                listagg(c_name, ',') WITHIN GROUP (ORDER BY c_name)
                    AS names_csv,
                count(*) AS n
-        FROM la_customer
+        FROM {customer}
+        WHERE c_custkey <= 200
         GROUP BY c_nationkey
-        """
+        """,
     )
 
 
@@ -997,19 +986,19 @@ def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     and DuckDB's multi-arg GROUPING). Downstream consumers route on
     the bitmask, not on fragile NULL checks. Same single-Expand
     single-shuffle plan as agg_grouping_sets."""
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("orders_gid")
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         """
         SELECT o_orderpriority, o_orderstatus,
                CAST(grouping(o_orderpriority) AS BIGINT) AS g_pri,
                CAST(grouping(o_orderstatus) AS BIGINT) AS g_st,
                grouping_id() AS gid,
                count(*) AS n
-        FROM orders_gid
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderpriority, o_orderstatus),
                                 (o_orderpriority), ())
-        """
+        """,
     )
 
 
@@ -1034,8 +1023,9 @@ def agg_percentile_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB you'd reach for approx_percentile (registered separately)
     when groups no longer fit, and this stays the per-group-exact
     reference."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("pwg_orders")
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         """
         SELECT o_orderpriority,
                round(percentile_disc(0.5) WITHIN GROUP (ORDER BY o_totalprice),
@@ -1044,9 +1034,9 @@ def agg_percentile_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
                      4) AS p50_cont,
                round(percentile_disc(0.9) WITHIN GROUP (ORDER BY o_totalprice),
                      4) AS p90_disc
-        FROM pwg_orders
+        FROM {orders}
         GROUP BY o_orderpriority
-        """
+        """,
     )
 
 

@@ -19,9 +19,14 @@ from parquet_playground_spark.operators.distrank import (
     global_running_agg,
     ntile_from_rank,
 )
-from parquet_playground_spark.registry import register, track_persist
+from parquet_playground_spark.registry import (
+    register,
+    track_drop,
+    track_persist,
+    track_temp_view,
+)
 from parquet_playground_spark.session import scoped_confs
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, sql_on_tables
 
 
 @register(
@@ -48,52 +53,38 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "subquery_scalar",
-    oracle="""
+_SUBQUERY_SCALAR_SQL = """
         SELECT o_orderkey, o_totalprice
-        FROM orders
-        WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM orders)
-    """,
-)
+        FROM {orders}
+        WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM {orders})
+"""
+
+
+@register("subquery_scalar", oracle=_SUBQUERY_SCALAR_SQL.format(orders="orders"))
 def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery: Catalyst plans the inner aggregate
     once and broadcasts the scalar — no per-row re-evaluation."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sq_orders")
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_totalprice
-        FROM sq_orders
-        WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM sq_orders)
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _SUBQUERY_SCALAR_SQL)
+
+
+_SUBQUERY_CORRELATED_SQL = """
+        SELECT c_custkey,
+               (SELECT round(max(o_totalprice), 4) FROM {orders}
+                WHERE o_custkey = c_custkey) AS max_order
+        FROM {customer}
+        WHERE c_custkey <= 500
+"""
 
 
 @register(
     "subquery_correlated",
-    oracle="""
-        SELECT c_custkey,
-               (SELECT round(max(o_totalprice), 4) FROM orders
-                WHERE o_custkey = c_custkey) AS max_order
-        FROM customer
-        WHERE c_custkey <= 500
-    """,
+    oracle=_SUBQUERY_CORRELATED_SQL.format(orders="orders", customer="customer"),
 )
 def subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery: Catalyst decorrelates into a
     left-outer aggregate join on the correlation key — linear, one
     shuffle, never a per-row nested loop."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sqc_orders")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("sqc_customer")
-    return spark.sql(
-        """
-        SELECT c_custkey,
-               (SELECT round(max(o_totalprice), 4) FROM sqc_orders
-                WHERE o_custkey = c_custkey) AS max_order
-        FROM sqc_customer
-        WHERE c_custkey <= 500
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _SUBQUERY_CORRELATED_SQL)
 
 
 @register(
@@ -326,17 +317,20 @@ def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "join_lateral_topn",
-    oracle="""
+_JOIN_LATERAL_TOPN_SQL = """
         SELECT o.o_orderkey, t.l_linenumber,
                round(t.l_extendedprice, 4) AS l_extendedprice
-        FROM orders o,
-        LATERAL (SELECT l_linenumber, l_extendedprice FROM lineitem
+        FROM {orders} o,
+        LATERAL (SELECT l_linenumber, l_extendedprice FROM {lineitem}
                  WHERE l_orderkey = o.o_orderkey
                  ORDER BY l_extendedprice DESC, l_linenumber LIMIT 2) t
         WHERE o.o_orderkey <= 1000
-    """,
+"""
+
+
+@register(
+    "join_lateral_topn",
+    oracle=_JOIN_LATERAL_TOPN_SQL.format(orders="orders", lineitem="lineitem"),
 )
 def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery with per-row LIMIT — top-2 lineitems
@@ -345,38 +339,28 @@ def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan topk_per_group builds by hand), so the per-row subquery never
     executes row-at-a-time; deterministic tie-break on l_linenumber
     keeps both engines' top-2 identical."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("lat_orders")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lat_lineitem")
-    return spark.sql(
-        """
-        SELECT o.o_orderkey, t.l_linenumber,
-               round(t.l_extendedprice, 4) AS l_extendedprice
-        FROM lat_orders o,
-        LATERAL (SELECT l_linenumber, l_extendedprice FROM lat_lineitem
-                 WHERE l_orderkey = o.o_orderkey
-                 ORDER BY l_extendedprice DESC, l_linenumber LIMIT 2) t
-        WHERE o.o_orderkey <= 1000
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _JOIN_LATERAL_TOPN_SQL)
 
 
-@register(
-    "recursive_cte_chain",
-    oracle="""
+_RECURSIVE_CTE_CHAIN_SQL = """
         WITH RECURSIVE chain AS (
             SELECT n_regionkey AS region, n_nationkey AS start_key,
                    n_nationkey AS cur_key, 0 AS depth
-            FROM nation
+            FROM {nation}
             UNION ALL
             SELECT c.region, c.start_key, n.n_nationkey, c.depth + 1
             FROM chain c
-            JOIN nation n ON n.n_regionkey = c.region
-                         AND n.n_nationkey = c.cur_key + 5
+            JOIN {nation} n ON n.n_regionkey = c.region
+                           AND n.n_nationkey = c.cur_key + 5
         )
         SELECT region, count(*) AS paths, max(depth) AS max_chain
         FROM chain
         GROUP BY region
-    """,
+"""
+
+
+@register(
+    "recursive_cte_chain", oracle=_RECURSIVE_CTE_CHAIN_SQL.format(nation="nation")
 )
 def recursive_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (Spark 4.1 WITH RECURSIVE): transitive closure of
@@ -385,24 +369,7 @@ def recursive_cte_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the edge table — the standard BFS-by-joins shape that
     scales as |frontier| per step, with Catalyst planning every step
     as a broadcast join against the small dimension."""
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("rc_nation")
-    return spark.sql(
-        """
-        WITH RECURSIVE chain AS (
-            SELECT n_regionkey AS region, n_nationkey AS start_key,
-                   n_nationkey AS cur_key, 0 AS depth
-            FROM rc_nation
-            UNION ALL
-            SELECT c.region, c.start_key, n.n_nationkey, c.depth + 1
-            FROM chain c
-            JOIN rc_nation n ON n.n_regionkey = c.region
-                            AND n.n_nationkey = c.cur_key + 5
-        )
-        SELECT region, count(*) AS paths, max(depth) AS max_chain
-        FROM chain
-        GROUP BY region
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _RECURSIVE_CTE_CHAIN_SQL)
 
 
 @register(
@@ -592,37 +559,27 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "subquery_exists",
-    oracle="""
+_SUBQUERY_EXISTS_SQL = """
         SELECT c_custkey, c_name
-        FROM customer c
-        WHERE EXISTS (SELECT 1 FROM orders o
+        FROM {customer} c
+        WHERE EXISTS (SELECT 1 FROM {orders} o
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_totalprice > 55000)
-          AND NOT EXISTS (SELECT 1 FROM orders o
+          AND NOT EXISTS (SELECT 1 FROM {orders} o
                           WHERE o.o_custkey = c.c_custkey
                             AND o.o_orderstatus = 'P')
-    """,
+"""
+
+
+@register(
+    "subquery_exists",
+    oracle=_SUBQUERY_EXISTS_SQL.format(customer="customer", orders="orders"),
 )
 def subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS + NOT EXISTS predicates: Catalyst rewrites them to a
     left-semi and a left-anti join on the correlation key — two
     linear shuffles, never a per-row probe."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("ex_orders")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("ex_customer")
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name
-        FROM ex_customer c
-        WHERE EXISTS (SELECT 1 FROM ex_orders o
-                      WHERE o.o_custkey = c.c_custkey
-                        AND o.o_totalprice > 55000)
-          AND NOT EXISTS (SELECT 1 FROM ex_orders o
-                          WHERE o.o_custkey = c.c_custkey
-                            AND o.o_orderstatus = 'P')
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _SUBQUERY_EXISTS_SQL)
 
 
 @register(
@@ -812,7 +769,9 @@ def sql_modern_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the literal oracle — the features are about how the query is
     authored, not what it computes."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("param_orders")
+    track_temp_view(spark, "param_orders")
     spark.sql("DECLARE OR REPLACE VARIABLE pp_price_thr DOUBLE DEFAULT 0.0")
+    track_drop(spark, "DROP TEMPORARY VARIABLE IF EXISTS pp_price_thr")
     spark.sql("SET VARIABLE pp_price_thr = 30000.0")
     total_c = exact_sum_sql("floor(o_totalprice * 100.0 + 0.5)")
     return spark.sql(
@@ -835,38 +794,27 @@ def sql_modern_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
 # commit-vs-receipt lateness predicate, same plan shape).
 
 
-@register(
-    "q4_order_priority",
-    oracle="""
+_Q4_SQL = """
         SELECT o_orderpriority, count(*) AS order_count
-        FROM orders o
+        FROM {orders} o
         WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
           AND o.o_orderdate < TIMESTAMP '1996-07-01'
-          AND EXISTS (SELECT 1 FROM lineitem l
+          AND EXISTS (SELECT 1 FROM {lineitem} l
                       WHERE l.l_orderkey = o.o_orderkey
                         AND l.l_shipdate > o.o_orderdate)
         GROUP BY o_orderpriority
-    """,
+"""
+
+
+@register(
+    "q4_order_priority", oracle=_Q4_SQL.format(orders="orders", lineitem="lineitem")
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q4-shaped: orders per priority in one half-year having at
     least one line shipped after the order date. Catalyst rewrites the
     EXISTS to a left-semi join — lineitem never duplicates orders rows
     and the date filter pushes into the orders scan."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("q4_orders")
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("q4_lineitem")
-    return spark.sql(
-        """
-        SELECT o_orderpriority, count(*) AS order_count
-        FROM q4_orders o
-        WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o.o_orderdate < TIMESTAMP '1996-07-01'
-          AND EXISTS (SELECT 1 FROM q4_lineitem l
-                      WHERE l.l_orderkey = o.o_orderkey
-                        AND l.l_shipdate > o.o_orderdate)
-        GROUP BY o_orderpriority
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _Q4_SQL)
 
 
 @register(
@@ -1050,20 +998,20 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     The revenue sum adds exact cents (``exact_sum_sql``) with one
     portable-rounded final division (q1/q19 pattern — the global
     float sum grows with SF)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("q17_lineitem")
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("q17_part")
     price_c = exact_sum_sql("floor(l.l_extendedprice * 100.0 + 0.5)")
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         f"""
         SELECT CAST(floor(CAST({price_c} AS DOUBLE)
                           / 100.0 / 7.0 * 10000.0 + 0.5) AS DOUBLE)
                    / 10000.0 AS avg_yearly
-        FROM q17_lineitem l JOIN q17_part p ON p.p_partkey = l.l_partkey
+        FROM {{lineitem}} l JOIN {{part}} p ON p.p_partkey = l.l_partkey
         WHERE p.p_brand = 'Brand#2'
           AND l.l_quantity < (SELECT 0.2 * avg(l2.l_quantity)
-                              FROM q17_lineitem l2
+                              FROM {{lineitem}} l2
                               WHERE l2.l_partkey = l.l_partkey)
-        """
+        """,
     )
 
 
@@ -1193,21 +1141,21 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     float sum grows with customer count; floor(x*100+0.5) rounds
     half-up toward +inf identically on both engines for the negative
     balances too)."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("q22_customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("q22_orders")
     bal_c = exact_sum_sql("floor(c.c_acctbal * 100.0 + 0.5)")
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         f"""
         SELECT c.c_mktsegment, count(*) AS numcust,
                CAST({bal_c} AS DOUBLE) / 100.0 AS totacctbal
-        FROM q22_customer c
-        WHERE c.c_acctbal > (SELECT avg(c2.c_acctbal) FROM q22_customer c2
+        FROM {{customer}} c
+        WHERE c.c_acctbal > (SELECT avg(c2.c_acctbal) FROM {{customer}} c2
                              WHERE c2.c_acctbal > 0)
-          AND NOT EXISTS (SELECT 1 FROM q22_orders o
+          AND NOT EXISTS (SELECT 1 FROM {{orders}} o
                           WHERE o.o_custkey = c.c_custkey
                             AND o.o_orderdate >= TIMESTAMP '1999-01-01')
         GROUP BY c.c_mktsegment
-        """
+        """,
     )
 
 
@@ -1228,14 +1176,15 @@ def sql_pivot_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     labeled count columns. Catalyst compiles both paths to the same
     single-shuffle conditional aggregate — pinned by the shared FILTER
     oracle."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("pvt_orders")
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         """
         SELECT * FROM (
-            SELECT o_orderpriority, o_orderstatus FROM pvt_orders
+            SELECT o_orderpriority, o_orderstatus FROM {orders}
         )
         PIVOT (count(*) FOR o_orderstatus IN ('O' AS o, 'F' AS f, 'P' AS p))
-        """
+        """,
     )
 
 
@@ -1546,18 +1495,19 @@ def sql_inline_values_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookup dims ship inside production SQL. Catalyst plans the
     LocalRelation as a broadcast build side automatically; the fact
     scan is the only I/O."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("iv_orders")
     total_c = exact_sum_sql("floor(o.o_totalprice * 100.0 + 0.5)")
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         f"""
         SELECT v.label, count(*) AS n,
                CAST({total_c} AS DOUBLE) / 100.0 AS total
-        FROM iv_orders o
+        FROM {{orders}} o
         JOIN VALUES ('O', 'open'), ('F', 'finished'), ('P', 'pending')
              AS v(code, label)
           ON o.o_orderstatus = v.code
         GROUP BY v.label
-        """
+        """,
     )
 
 
@@ -1869,14 +1819,14 @@ def sql_lateral_view_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     path distinct from DataFrame .select(explode(...)), same Generate
     plan; the SQL-authoring twin of sql_pivot_syntax). Per-language
     token totals keep the output dimension-sized."""
-    d = load_table(spark, sf_dir, "documents")
-    d.createOrReplaceTempView("docs_lv")
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         """
         SELECT lang, count(*) AS n_words, count(DISTINCT w) AS n_distinct
-        FROM docs_lv LATERAL VIEW explode(split(text, ' ')) t AS w
+        FROM {documents} LATERAL VIEW explode(split(text, ' ')) t AS w
         GROUP BY lang
-        """
+        """,
     )
 
 
@@ -1897,8 +1847,8 @@ def sql_create_replace_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     subqueries: the filter still pushes through them to the scan.
     Money sums as exact integer cents (q1/q19 pattern; the sf10 sweep
     caught the float sum drifting at ~6e11 per group)."""
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("pp_view_src")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("pp_view_src")
+    track_temp_view(spark, "pp_view_src")
     spark.sql(
         """CREATE OR REPLACE TEMPORARY VIEW pp_hot_orders AS
            SELECT * FROM pp_view_src WHERE o_totalprice > 100000"""
@@ -1907,6 +1857,7 @@ def sql_create_replace_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         """CREATE OR REPLACE TEMPORARY VIEW pp_hot_orders AS
            SELECT * FROM pp_view_src WHERE o_totalprice > 200000"""
     )
+    track_temp_view(spark, "pp_hot_orders")
     total_c = exact_sum_sql("floor(o_totalprice * 100.0 + 0.5)")
     return spark.sql(
         f"""SELECT o_orderpriority, count(*) AS n,
@@ -2394,15 +2345,15 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark SQL, and BIGINT/DECIMAL division would emit DECIMAL(27,6)
     where DuckDB emits DOUBLE — the pandas-visible type skew the r4
     sweep flags."""
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("pp_lca_lineitem")
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         """
         SELECT l_orderkey, l_linenumber,
                l_extendedprice * (1 - l_discount) AS discounted,
                floor(discounted * 100.0D + 0.5D) / 100.0D AS discounted_r2
-        FROM pp_lca_lineitem WHERE l_orderkey <= 500
-        """
+        FROM {lineitem} WHERE l_orderkey <= 500
+        """,
     )
 
 
@@ -2440,16 +2391,18 @@ def sql_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
         RETURN CASE WHEN q >= 30 THEN 'bulk' ELSE 'retail' END
         """
     )
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("pp_sqludf_lineitem")
-    return spark.sql(
+    track_drop(spark, "DROP TEMPORARY FUNCTION IF EXISTS pp_charge")
+    track_drop(spark, "DROP TEMPORARY FUNCTION IF EXISTS pp_order_class")
+    return sql_on_tables(
+        spark,
+        sf_dir,
         """
         SELECT l_orderkey, l_linenumber,
                floor(pp_charge(l_extendedprice, l_discount, l_tax)
                      * 100.0D + 0.5D) / 100.0D AS charge_r2,
                pp_order_class(l_quantity) AS order_class
-        FROM pp_sqludf_lineitem WHERE l_orderkey <= 300
-        """
+        FROM {lineitem} WHERE l_orderkey <= 300
+        """,
     )
 
 
@@ -2473,51 +2426,42 @@ _PS_CTE = """
             SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
                    CAST(sum(l_quantity) AS BIGINT) AS ps_availqty,
                    min(l_extendedprice / l_quantity) AS ps_supplycost
-            FROM {li}
+            FROM {lineitem}
             GROUP BY l_partkey, l_suppkey
         )
 """
 
-_Q2_SQL = """
-        WITH {ps}
+_Q2_SQL = "WITH" + _PS_CTE + """
         SELECT s.s_acctbal, s.s_name, n.n_name, p.p_partkey, p.p_type
-        FROM part_v p
+        FROM {part} p
         JOIN ps ON ps.ps_partkey = p.p_partkey
-        JOIN supplier_v s ON s.s_suppkey = ps.ps_suppkey
-        JOIN nation_v n ON n.n_nationkey = s.s_nationkey
-        JOIN region_v r ON r.r_regionkey = n.n_regionkey
+        JOIN {supplier} s ON s.s_suppkey = ps.ps_suppkey
+        JOIN {nation} n ON n.n_nationkey = s.s_nationkey
+        JOIN {region} r ON r.r_regionkey = n.n_regionkey
         WHERE r.r_name = 'EUROPE'
           AND p.p_size BETWEEN 10 AND 20
           AND p.p_type = 'STANDARD'
           AND ps.ps_supplycost = (
               SELECT min(ps2.ps_supplycost)
               FROM ps ps2
-              JOIN supplier_v s2 ON s2.s_suppkey = ps2.ps_suppkey
-              JOIN nation_v n2 ON n2.n_nationkey = s2.s_nationkey
-              JOIN region_v r2 ON r2.r_regionkey = n2.n_regionkey
+              JOIN {supplier} s2 ON s2.s_suppkey = ps2.ps_suppkey
+              JOIN {nation} n2 ON n2.n_nationkey = s2.s_nationkey
+              JOIN {region} r2 ON r2.r_regionkey = n2.n_regionkey
               WHERE ps2.ps_partkey = p.p_partkey AND r2.r_name = 'EUROPE')
         ORDER BY s.s_acctbal DESC, n.n_name, s.s_name, p.p_partkey
         LIMIT 100
 """
 
 
-def _tpch_views(spark: SparkSession, sf_dir: str, prefix: str, tables):
-    """Register prefix-unique temp views; return name mapping."""
-    out = {}
-    for t in tables:
-        v = f"{prefix}_{t}"
-        load_table(spark, sf_dir, t).createOrReplaceTempView(v)
-        out[t] = v
-    return out
-
-
 @register(
     "q2_min_cost_supplier",
-    oracle=_Q2_SQL.format(ps=_PS_CTE.format(li="lineitem"))
-    .replace("part_v", "part")
-    .replace("supplier_v", "supplier")
-    .replace("nation_v", "nation")
-    .replace("region_v", "region"),
+    oracle=_Q2_SQL.format(
+        lineitem="lineitem",
+        part="part",
+        supplier="supplier",
+        nation="nation",
+        region="region",
+    ),
 )
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q2-shaped: for each STANDARD mid-size part, the European
@@ -2529,21 +2473,12 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines), so the filter is engine-stable. Top-100 runs as
     TakeOrderedAndProject with a unique (acctbal, nation, supplier,
     part) tie-break."""
-    v = _tpch_views(
-        spark, sf_dir, "q2", ["lineitem", "part", "supplier", "nation", "region"]
-    )
-    return spark.sql(
-        _Q2_SQL.format(ps=_PS_CTE.format(li=v["lineitem"]))
-        .replace("part_v", v["part"])
-        .replace("supplier_v", v["supplier"])
-        .replace("nation_v", v["nation"])
-        .replace("region_v", v["region"])
-    )
+    return sql_on_tables(spark, sf_dir, _Q2_SQL)
 
 
 _Q9_SQL = """
         WITH red_parts AS (
-            SELECT p_partkey FROM part_v WHERE p_name LIKE '%red%'
+            SELECT p_partkey FROM {part} WHERE p_name LIKE '%red%'
         ),
         lr AS (
             -- BROADCAST is load-bearing at scale: red_parts is ~13%
@@ -2557,7 +2492,7 @@ _Q9_SQL = """
             SELECT /*+ BROADCAST(rp) */
                    l.l_partkey, l.l_suppkey, l.l_orderkey, l.l_quantity,
                    l.l_extendedprice, l.l_discount
-            FROM lineitem_v l
+            FROM {lineitem} l
             JOIN red_parts rp ON rp.p_partkey = l.l_partkey
         ),
         ps AS (
@@ -2577,9 +2512,9 @@ _Q9_SQL = """
         FROM lr l
         JOIN ps ON ps.ps_partkey = l.l_partkey
                AND ps.ps_suppkey = l.l_suppkey
-        JOIN supplier_v s ON s.s_suppkey = l.l_suppkey
-        JOIN orders_v o ON o.o_orderkey = l.l_orderkey
-        JOIN nation_v n ON n.n_nationkey = s.s_nationkey
+        JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
+        JOIN {orders} o ON o.o_orderkey = l.l_orderkey
+        JOIN {nation} n ON n.n_nationkey = s.s_nationkey
         GROUP BY n.n_name, year(o.o_orderdate)
         ORDER BY nation, o_year DESC
 """
@@ -2587,12 +2522,13 @@ _Q9_SQL = """
 
 @register(
     "q9_product_type_profit",
-    oracle=_Q9_SQL
-    .replace("lineitem_v", "lineitem")
-    .replace("part_v", "part")
-    .replace("supplier_v", "supplier")
-    .replace("orders_v", "orders")
-    .replace("nation_v", "nation"),
+    oracle=_Q9_SQL.format(
+        lineitem="lineitem",
+        part="part",
+        supplier="supplier",
+        orders="orders",
+        nation="nation",
+    ),
 )
 def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q9-shaped: profit (revenue minus derived supply cost) on
@@ -2614,29 +2550,17 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays a narrow (orderkey, orderdate) MERGE join. year() is CAST
     to INT on both engines (DuckDB's year() is BIGINT — driver-canon
     type alignment)."""
-    v = _tpch_views(
-        spark, sf_dir, "q9",
-        ["lineitem", "part", "supplier", "orders", "nation"],
-    )
-    return spark.sql(
-        _Q9_SQL
-        .replace("lineitem_v", v["lineitem"])
-        .replace("part_v", v["part"])
-        .replace("supplier_v", v["supplier"])
-        .replace("orders_v", v["orders"])
-        .replace("nation_v", v["nation"])
-    )
+    return sql_on_tables(spark, sf_dir, _Q9_SQL)
 
 
-_Q11_SQL = """
-        WITH {ps}
+_Q11_SQL = "WITH" + _PS_CTE + """
         SELECT ps.ps_partkey,
                round(CAST(sum(CAST(floor(ps.ps_supplycost * ps.ps_availqty
                                          * 100.0 + 0.5) AS BIGINT))
                           AS DOUBLE) / 100.0, 2) AS value
         FROM ps
-        JOIN supplier_v s ON s.s_suppkey = ps.ps_suppkey
-        JOIN nation_v n ON n.n_nationkey = s.s_nationkey
+        JOIN {supplier} s ON s.s_suppkey = ps.ps_suppkey
+        JOIN {nation} n ON n.n_nationkey = s.s_nationkey
         WHERE n.n_name = 'NATION_7'
         GROUP BY ps.ps_partkey
         HAVING sum(CAST(floor(ps.ps_supplycost * ps.ps_availqty
@@ -2644,8 +2568,8 @@ _Q11_SQL = """
             SELECT sum(CAST(floor(ps2.ps_supplycost * ps2.ps_availqty
                                   * 100.0 + 0.5) AS BIGINT)) * 0.001
             FROM ps ps2
-            JOIN supplier_v s2 ON s2.s_suppkey = ps2.ps_suppkey
-            JOIN nation_v n2 ON n2.n_nationkey = s2.s_nationkey
+            JOIN {supplier} s2 ON s2.s_suppkey = ps2.ps_suppkey
+            JOIN {nation} n2 ON n2.n_nationkey = s2.s_nationkey
             WHERE n2.n_name = 'NATION_7')
         ORDER BY value DESC, ps.ps_partkey
 """
@@ -2653,9 +2577,7 @@ _Q11_SQL = """
 
 @register(
     "q11_important_stock",
-    oracle=_Q11_SQL.format(ps=_PS_CTE.format(li="lineitem"))
-    .replace("supplier_v", "supplier")
-    .replace("nation_v", "nation"),
+    oracle=_Q11_SQL.format(lineitem="lineitem", supplier="supplier", nation="nation"),
 )
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q11-shaped: parts whose derived inventory value held by
@@ -2664,25 +2586,19 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     single row); the main branch is one groupBy over the nation-pruned
     partsupp derivation. The nation filter reaches the supplier dim
     before either join, so both sides shuffle only the ~1/25 slice."""
-    v = _tpch_views(spark, sf_dir, "q11", ["lineitem", "supplier", "nation"])
-    return spark.sql(
-        _Q11_SQL.format(ps=_PS_CTE.format(li=v["lineitem"]))
-        .replace("supplier_v", v["supplier"])
-        .replace("nation_v", v["nation"])
-    )
+    return sql_on_tables(spark, sf_dir, _Q11_SQL)
 
 
-_Q16_SQL = """
-        WITH {ps}
+_Q16_SQL = "WITH" + _PS_CTE + """
         SELECT p.p_brand, p.p_type, p.p_size,
                count(DISTINCT ps.ps_suppkey) AS supplier_cnt
         FROM ps
-        JOIN part_v p ON p.p_partkey = ps.ps_partkey
+        JOIN {part} p ON p.p_partkey = ps.ps_partkey
         WHERE p.p_brand <> 'Brand#45'
           AND p.p_type NOT LIKE 'PROMO%'
           AND p.p_size IN (1, 4, 9, 14, 19, 24, 29, 34)
           AND ps.ps_suppkey NOT IN (
-              SELECT s_suppkey FROM supplier_v WHERE s_acctbal < 0)
+              SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0)
         GROUP BY p.p_brand, p.p_type, p.p_size
         ORDER BY supplier_cnt DESC, p.p_brand, p.p_type, p.p_size
 """
@@ -2690,9 +2606,7 @@ _Q16_SQL = """
 
 @register(
     "q16_supplier_part_counts",
-    oracle=_Q16_SQL.format(ps=_PS_CTE.format(li="lineitem"))
-    .replace("part_v", "part")
-    .replace("supplier_v", "supplier"),
+    oracle=_Q16_SQL.format(lineitem="lineitem", part="part", supplier="supplier"),
 )
 def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q16-shaped: how many suppliers can supply each qualifying
@@ -2701,33 +2615,28 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     The NOT IN subquery is tiny and broadcast as a null-aware anti
     join; part filters prune before the join; count(DISTINCT) runs as
     the standard two-phase expand/aggregate."""
-    v = _tpch_views(spark, sf_dir, "q16", ["lineitem", "part", "supplier"])
-    return spark.sql(
-        _Q16_SQL.format(ps=_PS_CTE.format(li=v["lineitem"]))
-        .replace("part_v", v["part"])
-        .replace("supplier_v", v["supplier"])
-    )
+    return sql_on_tables(spark, sf_dir, _Q16_SQL)
 
 
 _Q20_SQL = """
         WITH ps AS (
             SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
                    CAST(sum(l_quantity) AS BIGINT) AS ps_availqty
-            FROM lineitem_v
+            FROM {lineitem}
             GROUP BY l_partkey, l_suppkey
         )
         SELECT s.s_name, s.s_acctbal
-        FROM supplier_v s
-        JOIN nation_v n ON n.n_nationkey = s.s_nationkey
+        FROM {supplier} s
+        JOIN {nation} n ON n.n_nationkey = s.s_nationkey
         WHERE n.n_name = 'NATION_3'
           AND s.s_suppkey IN (
               SELECT ps.ps_suppkey
               FROM ps
-              JOIN part_v p ON p.p_partkey = ps.ps_partkey
+              JOIN {part} p ON p.p_partkey = ps.ps_partkey
               WHERE p.p_name LIKE 'small%'
                 AND ps.ps_availqty > (
                     SELECT 2 * sum(l.l_quantity)
-                    FROM lineitem_v l
+                    FROM {lineitem} l
                     WHERE l.l_partkey = ps.ps_partkey
                       AND l.l_suppkey = ps.ps_suppkey
                       AND l.l_shipdate >= TIMESTAMP '1999-01-01'
@@ -2736,18 +2645,11 @@ _Q20_SQL = """
 """
 
 
-def _q20_sql(li: str, part: str, supplier: str, nation: str) -> str:
-    return (
-        _Q20_SQL.replace("lineitem_v", li)
-        .replace("part_v", part)
-        .replace("supplier_v", supplier)
-        .replace("nation_v", nation)
-    )
-
-
 @register(
     "q20_part_promotion",
-    oracle=_q20_sql("lineitem", "part", "supplier", "nation"),
+    oracle=_Q20_SQL.format(
+        lineitem="lineitem", part="part", supplier="supplier", nation="nation"
+    ),
 )
 def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q20-shaped: suppliers in one nation holding excess derived
@@ -2757,14 +2659,9 @@ def q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined on the composite key, then the IN collapses to a left-semi
     join against the small supplier dim. Quantity sums are integral in
     double, so the 2x threshold compare is exact on both engines. The
-    SQL text is shared verbatim with the oracle via _q20_sql (the
+    SQL text is shared verbatim with the oracle through _Q20_SQL (the
     alias-drift defense the other derived-partsupp queries use)."""
-    v = _tpch_views(
-        spark, sf_dir, "q20", ["lineitem", "part", "supplier", "nation"]
-    )
-    return spark.sql(
-        _q20_sql(v["lineitem"], v["part"], v["supplier"], v["nation"])
-    )
+    return sql_on_tables(spark, sf_dir, _Q20_SQL)
 
 
 @register(
@@ -2921,7 +2818,7 @@ def events_uplift_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LINKPRED_SQL = """
         WITH nodes AS (
             SELECT DISTINCT l_orderkey AS ord, l_partkey AS p
-            FROM {li}
+            FROM {lineitem}
             WHERE l_partkey < 300
         ),
         edges AS (
@@ -2956,7 +2853,7 @@ _LINKPRED_SQL = """
 
 @register(
     "graph_link_prediction_cn",
-    oracle=_LINKPRED_SQL.format(li="lineitem"),
+    oracle=_LINKPRED_SQL.format(lineitem="lineitem"),
 )
 def graph_link_prediction_cn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Link prediction on the part co-purchase graph: non-adjacent part
@@ -2970,10 +2867,7 @@ def graph_link_prediction_cn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared neighbor, the existing-edge check is a broadcast-able
     anti join, and the top-20 runs as TakeOrderedAndProject with a
     full unique tie-break."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lp_lineitem"
-    )
-    return spark.sql(_LINKPRED_SQL.format(li="lp_lineitem"))
+    return sql_on_tables(spark, sf_dir, _LINKPRED_SQL)
 
 
 @register(
@@ -3008,21 +2902,20 @@ def sql_scripting_control_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the script's loop semantics against a declarative equivalent. The
     geometric cutoff chain is a double multiplication sequence —
     bit-identical on both engines."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "script_orders"
-    )
     with scoped_confs(spark, {"spark.sql.scripting.enabled": "true"}):
-        return spark.sql(
+        return sql_on_tables(
+            spark,
+            sf_dir,
             """
             BEGIN
               DECLARE cutoff DOUBLE DEFAULT 100000.0;
               DECLARE n BIGINT DEFAULT 0;
               DECLARE steps INT DEFAULT 0;
-              SET n = (SELECT count(*) FROM script_orders
+              SET n = (SELECT count(*) FROM {orders}
                        WHERE o_totalprice > cutoff);
               WHILE n > 2000 DO
                 SET cutoff = cutoff * 1.5;
-                SET n = (SELECT count(*) FROM script_orders
+                SET n = (SELECT count(*) FROM {orders}
                          WHERE o_totalprice > cutoff);
                 SET steps = steps + 1;
               END WHILE;
@@ -3030,13 +2923,13 @@ def sql_scripting_control_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
                      n AS n_above,
                      steps AS n_iterations;
             END
-            """
+            """,
         )
 
 
 _FUNNEL_TB_SQL = """
         WITH e AS (
-            SELECT user_id, event_type, sec FROM {ev}
+            SELECT user_id, event_type, sec FROM {src}
         ),
         v AS (
             SELECT user_id, min(sec) AS t_view
@@ -3073,7 +2966,7 @@ _FUNNEL_TB_SQL = """
                    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
             FROM events
         )"""
-    + _FUNNEL_TB_SQL.format(ev="src").replace("WITH e AS", ", e AS", 1),
+    + _FUNNEL_TB_SQL.format(src="src").replace("WITH e AS", ", e AS", 1),
 )
 def events_funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-BOUNDED conversion funnel: view -> click within 2h ->
@@ -3089,8 +2982,7 @@ def events_funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.unix_timestamp(F.date_trunc("second", F.col("ts"))).alias("sec"),
     )
-    e.createOrReplaceTempView("ftb_events")
-    return spark.sql(_FUNNEL_TB_SQL.format(ev="ftb_events"))
+    return spark.sql(_FUNNEL_TB_SQL, src=e)
 
 
 @register(
@@ -3217,9 +3109,7 @@ def graph_label_propagation_communities(
     )
 
 
-@register(
-    "events_markov_backtest",
-    oracle="""
+_MARKOV_BACKTEST_SQL = """
         WITH seq AS (
             SELECT user_id, ts, event_type,
                    lead(event_type) OVER (
@@ -3228,7 +3118,7 @@ def graph_label_propagation_communities(
                    lead(ts) OVER (
                        PARTITION BY user_id ORDER BY ts, event_id
                    ) AS next_ts
-            FROM events
+            FROM {events}
         ),
         train AS (
             SELECT event_type AS prev, next_type
@@ -3275,7 +3165,11 @@ def graph_label_propagation_communities(
                           / count(*) * 1000000.0 + 0.5)
                     AS DOUBLE) / 1000000.0 AS baseline_accuracy
         FROM scored
-    """,
+"""
+
+
+@register(
+    "events_markov_backtest", oracle=_MARKOV_BACKTEST_SQL.format(events="events")
 )
 def events_markov_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal backtest of the first-order Markov next-event model
@@ -3294,22 +3188,12 @@ def events_markov_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user-partitioned lead window (the only
     fact-sized work), two tiny model aggregates (|types|^2 and
     |types| rows, broadcast back), one count readout."""
-    from parquet_playground_spark.registry import ORACLES
-
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "mb_events"
-    )
-    # the oracle SQL is engine-portable; only the table name differs
-    return spark.sql(
-        ORACLES["events_markov_backtest"].replace(
-            "FROM events", "FROM mb_events"
-        )
-    )
+    return sql_on_tables(spark, sf_dir, _MARKOV_BACKTEST_SQL)
 
 
 _DECAY_SQL = """
         WITH anchor AS (
-            SELECT max(ts) AS now_ts FROM {ev}
+            SELECT max(ts) AS now_ts FROM {events}
         ),
         scored AS (
             SELECT e.user_id,
@@ -3318,7 +3202,7 @@ _DECAY_SQL = """
                                  AS DOUBLE) / 604800.0)
                        * CAST(floor(e.value * 100.0 + 0.5) AS BIGINT)
                        * 10000.0 + 0.5) AS BIGINT) AS s_micro
-            FROM {ev} e CROSS JOIN anchor a
+            FROM {events} e CROSS JOIN anchor a
         ),
         per_user AS (
             SELECT user_id, count(*) AS n_events,
@@ -3340,7 +3224,7 @@ _DECAY_SQL = """
 @register(
     "events_decay_engagement_score",
     oracle=_DECAY_SQL.format(
-        ev="events", age_seconds="date_diff('second', e.ts, a.now_ts)"
+        events="events", age_seconds="date_diff('second', e.ts, a.now_ts)"
     ),
 )
 def events_decay_engagement_score(
@@ -3368,14 +3252,11 @@ def events_decay_engagement_score(
     age-in-seconds expression differs) — r5 ADVICE #3 flagged the old
     whitespace-exact str.replace derivation as silently no-op-ing if
     the template is ever reformatted."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "decay_events"
-    )
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         _DECAY_SQL.format(
-            ev="decay_events",
-            age_seconds=(
-                "unix_timestamp(a.now_ts) - unix_timestamp(e.ts)"
-            ),
-        )
+            events="{events}",
+            age_seconds="unix_timestamp(a.now_ts) - unix_timestamp(e.ts)",
+        ),
     )

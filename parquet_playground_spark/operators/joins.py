@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register
 from parquet_playground_spark.session import scoped_confs
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, sql_on_tables
 
 
 @register(
@@ -431,16 +431,19 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
 
-@register(
-    "join_mark_existence",
-    oracle="""
+_MARK_EXISTENCE_SQL = """
         SELECT c.c_custkey, c.c_mktsegment,
-               EXISTS (SELECT 1 FROM orders o
+               EXISTS (SELECT 1 FROM {orders} o
                        WHERE o.o_custkey = c.c_custkey
                          AND o.o_orderpriority = '1-URGENT') AS has_urgent
-        FROM customer c
+        FROM {customer} c
         WHERE c.c_custkey <= 700
-    """,
+"""
+
+
+@register(
+    "join_mark_existence",
+    oracle=_MARK_EXISTENCE_SQL.format(orders="orders", customer="customer"),
 )
 def join_mark_existence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mark join (existence flag): EXISTS used in the PROJECTION, not
@@ -450,20 +453,7 @@ def join_mark_existence(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row subquery) and never duplicates probe rows the way a
     LEFT JOIN + IS NOT NULL would on multi-match keys. The standard
     feature-flagging join of enrichment pipelines."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "mk_customer"
-    )
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("mk_orders")
-    return spark.sql(
-        """
-        SELECT c.c_custkey, c.c_mktsegment,
-               EXISTS (SELECT 1 FROM mk_orders o
-                       WHERE o.o_custkey = c.c_custkey
-                         AND o.o_orderpriority = '1-URGENT') AS has_urgent
-        FROM mk_customer c
-        WHERE c.c_custkey <= 700
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _MARK_EXISTENCE_SQL)
 
 
 @register(
@@ -656,26 +646,29 @@ def join_natural_using(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast for the dims here). Column-name-driven matching is
     resolved at analysis time, so there is no runtime cost vs an
     explicit ON clause."""
-    load_table(spark, sf_dir, "customer").select(
+    cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey"), "c_acctbal"
-    ).createOrReplaceTempView("nj_cust")
-    load_table(spark, sf_dir, "nation").select(
+    )
+    nat = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("nationkey"),
         F.col("n_name").alias("nation_name"),
         F.col("n_regionkey").alias("regionkey"),
-    ).createOrReplaceTempView("nj_nat")
-    load_table(spark, sf_dir, "region").select(
+    )
+    reg = load_table(spark, sf_dir, "region").select(
         F.col("r_regionkey").alias("regionkey"),
         F.col("r_name").alias("region_name"),
-    ).createOrReplaceTempView("nj_reg")
+    )
     return spark.sql(
         """
         SELECT region_name, nation_name,
                count(*) AS n_customers,
                round(sum(c_acctbal), 2) AS total_bal
-        FROM nj_cust NATURAL JOIN nj_nat JOIN nj_reg USING (regionkey)
+        FROM {cust} NATURAL JOIN {nat} JOIN {reg} USING (regionkey)
         GROUP BY region_name, nation_name
-        """
+        """,
+        cust=cust,
+        nat=nat,
+        reg=reg,
     )
 
 

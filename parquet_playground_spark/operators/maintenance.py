@@ -31,7 +31,7 @@ from parquet_playground_spark.functions.scalars import _round_stable
 from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register
 from parquet_playground_spark.session import scoped_confs
-from parquet_playground_spark.tables import load_table, scratch_path
+from parquet_playground_spark.tables import load_table, scratch_path, sql_on_tables
 
 _SEC = "CAST(epoch(date_trunc('second', ts)) AS BIGINT)"
 
@@ -949,7 +949,7 @@ _PSI_SQL = """
                    CASE WHEN ts < TIMESTAMP '2024-01-16'
                         THEN 'expected' ELSE 'actual' END AS period,
                    count(*) AS c
-            FROM {ev}
+            FROM {events}
             GROUP BY 1, 2
         ),
         tot AS (
@@ -976,7 +976,7 @@ _PSI_SQL = """
 
 @register(
     "dq_distribution_drift_psi",
-    oracle=_PSI_SQL.format(ev="events"),
+    oracle=_PSI_SQL.format(events="events"),
 )
 def dq_distribution_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index between the first and second half of
@@ -989,8 +989,7 @@ def dq_distribution_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     side would need the usual epsilon floor, which the bucketed CASE
     would add at the shares step. 6-dp rounding absorbs ln/division
     ulp drift on these O(1) magnitudes."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("psi_events")
-    return spark.sql(_PSI_SQL.format(ev="psi_events"))
+    return sql_on_tables(spark, sf_dir, _PSI_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1060,17 +1059,7 @@ def dq_functional_dependency_profile(
     map-combinable, shuffle carries distinct-cell cardinality, never
     raw rows twice. Profiling additional FDs appends union arms
     without new passes over any table."""
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    p = load_table(spark, sf_dir, "part")
-    o.createOrReplaceTempView("fd_orders")
-    c.createOrReplaceTempView("fd_customer")
-    p.createOrReplaceTempView("fd_part")
-    return spark.sql(
-        _FD_SQL.format(
-            orders="fd_orders", customer="fd_customer", part="fd_part"
-        )
-    )
+    return sql_on_tables(spark, sf_dir, _FD_SQL)
 
 
 @register(

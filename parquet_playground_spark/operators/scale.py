@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from parquet_playground_spark.operators.aggregates import exact_sum
 from parquet_playground_spark.registry import register, track_persist
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, sql_on_tables
 
 SALT_BUCKETS = 8
 SESSION_GAP_SEC = 28800  # 8h; sf0.01 median inter-event gap is ~7.3h
@@ -473,20 +473,19 @@ def sql_partition_hints(spark: SparkSession, sf_dir: str) -> DataFrame:
     REBALANCE_PARTITIONS_BY_COL in the physical plan. At 100 TB
     REBALANCE is the safer default — AQE splits oversized partitions
     instead of trusting a hand-picked count."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "hint_cust"
-    )
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         """
         SELECT /*+ REBALANCE(nationkey) */ nationkey,
                count(*) AS n_customers
         FROM (
             SELECT /*+ REPARTITION(8, c_nationkey) */
                    c_nationkey AS nationkey
-            FROM hint_cust
+            FROM {customer}
         )
         GROUP BY nationkey
-        """
+        """,
     )
 
 

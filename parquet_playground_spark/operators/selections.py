@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, sql_on_tables
 
 
 @register(
@@ -145,17 +145,19 @@ def filter_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("l_orderkey", "l_linenumber")
 
 
-@register(
-    "sql_group_order_by_all",
-    oracle="""
+_GROUP_ORDER_BY_ALL_SQL = """
         SELECT l_returnflag, l_linestatus,
                CAST(count(*) AS BIGINT) AS n,
                CAST(sum(CAST(floor(l_extendedprice * 100.0 + 0.5)
                              AS BIGINT)) AS BIGINT) AS revenue_cents
-        FROM lineitem
+        FROM {lineitem}
         GROUP BY ALL
         ORDER BY ALL
-    """,
+"""
+
+
+@register(
+    "sql_group_order_by_all", oracle=_GROUP_ORDER_BY_ALL_SQL.format(lineitem="lineitem")
 )
 def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Modern-SQL GROUP BY ALL / ORDER BY ALL surface: both Spark 4
@@ -168,13 +170,4 @@ def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical plan to an explicit-keys aggregate — the
     sugar resolves at analysis time."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "gba_lineitem"
-    )
-    from parquet_playground_spark.registry import ORACLES
-
-    return spark.sql(
-        ORACLES["sql_group_order_by_all"].replace(
-            "FROM lineitem", "FROM gba_lineitem"
-        )
-    )
+    return sql_on_tables(spark, sf_dir, _GROUP_ORDER_BY_ALL_SQL)

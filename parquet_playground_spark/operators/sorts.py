@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, sql_on_tables
 
 
 @register(
@@ -104,14 +104,16 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "topk_offset_pagination",
-    oracle="""
+_OFFSET_PAGINATION_SQL = """
         SELECT o_orderkey, round(o_totalprice, 2) AS price
-        FROM orders
+        FROM {orders}
         ORDER BY o_totalprice DESC, o_orderkey
         LIMIT 10 OFFSET 20
-    """,
+"""
+
+
+@register(
+    "topk_offset_pagination", oracle=_OFFSET_PAGINATION_SQL.format(orders="orders")
 )
 def topk_offset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyset-free pagination: page 3 of the price ranking via
@@ -121,12 +123,4 @@ def topk_offset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     OFFSET degrades to top-N with huge N, where keyset pagination
     (WHERE price < last_seen) is the scale answer. Unique tie-break
     keeps pages deterministic."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("pag_orders")
-    return spark.sql(
-        """
-        SELECT o_orderkey, round(o_totalprice, 2) AS price
-        FROM pag_orders
-        ORDER BY o_totalprice DESC, o_orderkey
-        LIMIT 10 OFFSET 20
-        """
-    )
+    return sql_on_tables(spark, sf_dir, _OFFSET_PAGINATION_SQL)

@@ -20,7 +20,7 @@ from parquet_playground_spark.operators.distrank import (
     global_running_agg,
 )
 from parquet_playground_spark.registry import register, track_persist
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, sql_on_tables
 
 
 @register(
@@ -727,7 +727,7 @@ _NORMAL_EQ_SQL = """
                             AS BIGINT)) AS DOUBLE) / 100.0 AS sx1y,
                    CAST(sum(CAST(floor(l_discount * l_extendedprice * 10000.0 + 0.5)
                             AS BIGINT)) AS DOUBLE) / 10000.0 AS sx2y
-            FROM {li}
+            FROM {lineitem}
         ),
         solved AS (
             SELECT
@@ -758,14 +758,14 @@ _NORMAL_EQ_SQL = """
                    * (l.l_extendedprice
                       - (c.b + c.w1 * l.l_quantity + c.w2 * l.l_discount)))
                    / max(s.n)), 4) AS rmse
-        FROM {li} l CROSS JOIN coef c CROSS JOIN stats s
+        FROM {lineitem} l CROSS JOIN coef c CROSS JOIN stats s
         GROUP BY c.b, c.w1, c.w2
 """
 
 
 @register(
     "ml_linear_normal_equation",
-    oracle=_NORMAL_EQ_SQL.format(li="lineitem"),
+    oracle=_NORMAL_EQ_SQL.format(lineitem="lineitem"),
 )
 def ml_linear_normal_equation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-feature linear regression solved in CLOSED FORM by the
@@ -785,10 +785,7 @@ def ml_linear_normal_equation(spark: SparkSession, sf_dir: str) -> DataFrame:
     recovered doubles are identical, so Cramer arithmetic is
     bit-identical. The residual sum's own order drift dies under
     sqrt(SS/n) at 4 dp."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "ppml_lineitem"
-    )
-    return spark.sql(_NORMAL_EQ_SQL.format(li="ppml_lineitem"))
+    return sql_on_tables(spark, sf_dir, _NORMAL_EQ_SQL)
 
 
 _BOOT_B = 32
@@ -1060,12 +1057,12 @@ def stat_cohort_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_all = e.agg(
         F.max(F.date_trunc("day", "ts").cast("date")).alias("max_all")
     )
-    per_user.crossJoin(F.broadcast(max_all)).select(
+    src = per_user.crossJoin(F.broadcast(max_all)).select(
         "user_id",
         F.datediff("max_all", "first_d").cast("bigint").alias("horizon"),
         F.datediff("last_d", "first_d").cast("bigint").alias("lifetime"),
-    ).createOrReplaceTempView("km_src")
-    return spark.sql(_KM_SQL.format(src="km_src"))
+    )
+    return spark.sql(_KM_SQL, src=src)
 
 
 _KFOLD_SQL = """
@@ -1073,7 +1070,7 @@ _KFOLD_SQL = """
             SELECT l_quantity AS x1, l_discount AS x2,
                    l_extendedprice AS y,
                    {fold_expr} AS fold
-            FROM {li}
+            FROM {lineitem}
         ),
         fold_stats AS (
             SELECT fold,
@@ -1159,7 +1156,7 @@ _KFOLD_SPARK_HASH = (
 
 @register(
     "ml_kfold_cross_validation",
-    oracle=_KFOLD_SQL.format(li="lineitem", fold_expr=_KFOLD_DUCK_HASH),
+    oracle=_KFOLD_SQL.format(lineitem="lineitem", fold_expr=_KFOLD_DUCK_HASH),
 )
 def ml_kfold_cross_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed 4-fold cross-validation of the normal-equation
@@ -1173,11 +1170,10 @@ def ml_kfold_cross_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficients. Statistics accumulate as scaled integers (exact,
     order-independent — see ml_linear_normal_equation), so fold
     subtraction and the solves are bit-identical cross-engine."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "kfold_lineitem"
-    )
-    return spark.sql(
-        _KFOLD_SQL.format(li="kfold_lineitem", fold_expr=_KFOLD_SPARK_HASH)
+    return sql_on_tables(
+        spark,
+        sf_dir,
+        _KFOLD_SQL.format(lineitem="{lineitem}", fold_expr=_KFOLD_SPARK_HASH),
     )
 
 
@@ -1186,7 +1182,7 @@ _MWU_SQL = """
             SELECT CASE WHEN event_type = 'purchase' THEN 'a' ELSE 'b' END
                        AS grp,
                    value
-            FROM {ev}
+            FROM {events}
             WHERE event_type IN ('purchase', 'click')
         ),
         ranked AS (
@@ -1224,7 +1220,7 @@ _MWU_SQL = """
 
 @register(
     "stat_mann_whitney_u",
-    oracle=_MWU_SQL.format(ev="events"),
+    oracle=_MWU_SQL.format(events="events"),
 )
 def stat_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U rank-sum test between purchase and click value
@@ -1237,8 +1233,7 @@ def stat_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition at test scale; a production run pre-buckets values and
     computes ranks by prefix-sums per bucket), then a 1-row readout
     with the normal approximation z."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("mwu_events")
-    return spark.sql(_MWU_SQL.format(ev="mwu_events"))
+    return sql_on_tables(spark, sf_dir, _MWU_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1250,19 +1245,19 @@ _STUMP_SQL = """
                    CAST(l_quantity AS BIGINT) AS v,
                    CAST(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END
                         AS BIGINT) AS y
-            FROM {li}
+            FROM {lineitem}
             UNION ALL
             SELECT 'discount_pct',
                    CAST(floor(l_discount * 100.0 + 0.5) AS BIGINT),
                    CAST(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END
                         AS BIGINT)
-            FROM {li}
+            FROM {lineitem}
             UNION ALL
             SELECT 'price_10k',
                    CAST(floor(l_extendedprice / 10000.0) AS BIGINT),
                    CAST(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END
                         AS BIGINT)
-            FROM {li}
+            FROM {lineitem}
         ),
         pv AS (
             SELECT feature, v, count(*) AS cnt, sum(y) AS pos
@@ -1301,7 +1296,7 @@ _STUMP_SQL = """
 """
 
 
-@register("ml_decision_stump", oracle=_STUMP_SQL.format(li="lineitem"))
+@register("ml_decision_stump", oracle=_STUMP_SQL.format(lineitem="lineitem"))
 def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact CART decision-stump training: find the (feature,
     threshold) split minimizing weighted Gini impurity for predicting
@@ -1323,10 +1318,7 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     'histogram'), a per-feature window over the few-hundred-row
     histogram table, and a global top-3 — the fact table is scanned
     once; nothing pairwise, nothing iterative."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "stump_lineitem"
-    )
-    return spark.sql(_STUMP_SQL.format(li="stump_lineitem"))
+    return sql_on_tables(spark, sf_dir, _STUMP_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1338,7 +1330,7 @@ _AUC_SQL = """
                    + CAST(l_quantity AS BIGINT) AS score,
                    CAST(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END
                         AS BIGINT) AS y
-            FROM {li}
+            FROM {lineitem}
         ),
         hist AS (
             SELECT score, count(*) AS cnt, sum(y) AS pos
@@ -1370,7 +1362,7 @@ _AUC_SQL = """
 """
 
 
-@register("ml_auc_roc", oracle=_AUC_SQL.format(li="lineitem"))
+@register("ml_auc_roc", oracle=_AUC_SQL.format(lineitem="lineitem"))
 def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ROC AUC (and Gini = 2*AUC-1) of a deterministic linear
     score (discount pct * 100 + quantity) predicting returns
@@ -1390,10 +1382,7 @@ def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     by score design at any SF), then a window over that aggregate —
     the classic distributed-AUC evaluation shape used for CTR models,
     never materializing pos x neg pairs."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "auc_lineitem"
-    )
-    return spark.sql(_AUC_SQL.format(li="auc_lineitem"))
+    return sql_on_tables(spark, sf_dir, _AUC_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1405,7 +1394,7 @@ _CONF_SQL = """
                        AS disc_pct,
                    CAST(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END
                         AS BIGINT) AS y
-            FROM {li}
+            FROM {lineitem}
         ),
         hist AS (
             SELECT disc_pct, count(*) AS cnt, sum(y) AS pos
@@ -1441,7 +1430,7 @@ _CONF_SQL = """
 
 
 @register(
-    "ml_confusion_matrix_metrics", oracle=_CONF_SQL.format(li="lineitem")
+    "ml_confusion_matrix_metrics", oracle=_CONF_SQL.format(lineitem="lineitem")
 )
 def ml_confusion_matrix_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrices and threshold metrics (precision / recall /
@@ -1456,10 +1445,7 @@ def ml_confusion_matrix_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single integer-ratio division rounded at 6 dp. F1 is computed
     directly as 2tp/(2tp+fp+fn) — one division, no compounding of
     pre-rounded precision/recall."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "conf_lineitem"
-    )
-    return spark.sql(_CONF_SQL.format(li="conf_lineitem"))
+    return sql_on_tables(spark, sf_dir, _CONF_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1470,7 +1456,7 @@ _TE_SQL = """
             SELECT p.p_brand, CAST(l.l_orderkey % 5 AS BIGINT) AS fold,
                    CAST(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END
                         AS BIGINT) AS y
-            FROM {li} l JOIN {pt} p ON l.l_partkey = p.p_partkey
+            FROM {lineitem} l JOIN {part} p ON l.l_partkey = p.p_partkey
         ),
         cell AS (
             SELECT p_brand, fold, count(*) AS cnt, sum(y) AS pos
@@ -1499,7 +1485,7 @@ _TE_SQL = """
 
 @register(
     "ml_target_encoding_kfold",
-    oracle=_TE_SQL.format(li="lineitem", pt="part"),
+    oracle=_TE_SQL.format(lineitem="lineitem", part="part"),
 )
 def ml_target_encoding_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-fold out-of-fold target encoding of the part brand against
@@ -1522,11 +1508,7 @@ def ml_target_encoding_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     x 5 folds = 125 cells at any SF), a 25-row join, a 1-row broadcast
     prior. The encoded table is broadcast-joinable back onto the fact
     table for free downstream."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "te_lineitem"
-    )
-    load_table(spark, sf_dir, "part").createOrReplaceTempView("te_part")
-    return spark.sql(_TE_SQL.format(li="te_lineitem", pt="te_part"))
+    return sql_on_tables(spark, sf_dir, _TE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1537,7 +1519,7 @@ _CALIB_SQL = """
             SELECT CAST(floor(l_discount * 100.0 + 0.5) AS BIGINT) AS b,
                    CAST(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END
                         AS BIGINT) AS y
-            FROM {li}
+            FROM {lineitem}
         ),
         binned AS (
             SELECT b, count(*) AS n, sum(y) AS pos,
@@ -1572,7 +1554,7 @@ _CALIB_SQL = """
 """
 
 
-@register("ml_calibration_bins", oracle=_CALIB_SQL.format(li="lineitem"))
+@register("ml_calibration_bins", oracle=_CALIB_SQL.format(lineitem="lineitem"))
 def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram for the discount-as-probability predictor
     (p_hat = disc_pct/10): per-bin predicted vs observed return rate,
@@ -1589,10 +1571,7 @@ def ml_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after operates on that aggregate. This is the
     distributed model-monitoring shape: calibration of a trillion
     predictions costs one histogram pass."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "calib_lineitem"
-    )
-    return spark.sql(_CALIB_SQL.format(li="calib_lineitem"))
+    return sql_on_tables(spark, sf_dir, _CALIB_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1603,7 +1582,7 @@ _WELCH_SQL = """
             SELECT l_returnflag AS grp,
                    CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)
                        AS cents
-            FROM {li} WHERE l_returnflag IN ('R', 'N')
+            FROM {lineitem} WHERE l_returnflag IN ('R', 'N')
         ),
         mom AS (
             SELECT grp, count(*) AS n, sum(cents) AS s1,
@@ -1645,7 +1624,7 @@ _WELCH_SQL = """
 """
 
 
-@register("stat_welch_ttest", oracle=_WELCH_SQL.format(li="lineitem"))
+@register("stat_welch_ttest", oracle=_WELCH_SQL.format(lineitem="lineitem"))
 def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's unequal-variance two-sample t-test (returned vs
     non-returned line price), with the Welch-Satterthwaite effective
@@ -1662,10 +1641,7 @@ def stat_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     any data size costs one pass and a |groups|-row shuffle. The
     heavy-tail caveat (use stat_mann_whitney_u for revenue-like
     metrics) is documented there; this is the parametric sibling."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "welch_lineitem"
-    )
-    return spark.sql(_WELCH_SQL.format(li="welch_lineitem"))
+    return sql_on_tables(spark, sf_dir, _WELCH_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1677,7 +1653,7 @@ _ANOVA_SQL = """
                    sum(CAST(l_quantity AS BIGINT)) AS s1,
                    sum(CAST(l_quantity AS BIGINT)
                        * CAST(l_quantity AS BIGINT)) AS s2
-            FROM {li} GROUP BY l_returnflag
+            FROM {lineitem} GROUP BY l_returnflag
         ),
         piv AS (
             SELECT max(CASE WHEN grp = 'A' THEN n END) AS na,
@@ -1720,7 +1696,7 @@ _ANOVA_SQL = """
 """
 
 
-@register("stat_anova_oneway", oracle=_ANOVA_SQL.format(li="lineitem"))
+@register("stat_anova_oneway", oracle=_ANOVA_SQL.format(lineitem="lineitem"))
 def stat_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA F-test of line quantity across the three return
     flags. Each group reduces to exact integer moments (n, sum,
@@ -1737,10 +1713,7 @@ def stat_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     readout shape as stat_welch_ttest (its 2-group sibling). The
     s1_g^2 products stay under 2^53 through sf1; above that the
     moments should accumulate as DECIMAL(38,0) like Welch's sumsq."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "anova_lineitem"
-    )
-    return spark.sql(_ANOVA_SQL.format(li="anova_lineitem"))
+    return sql_on_tables(spark, sf_dir, _ANOVA_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1750,12 +1723,12 @@ _BF_SQL = """
         WITH med AS (
             SELECT l_returnflag AS grp,
                    CAST(2.0 * median(l_quantity) AS BIGINT) AS med2
-            FROM {li} GROUP BY l_returnflag
+            FROM {lineitem} GROUP BY l_returnflag
         ),
         z AS (
             SELECT m.grp,
                    abs(2 * CAST(l.l_quantity AS BIGINT) - m.med2) AS w
-            FROM {li} l JOIN med m ON l.l_returnflag = m.grp
+            FROM {lineitem} l JOIN med m ON l.l_returnflag = m.grp
         ),
         mom AS (
             SELECT grp, count(*) AS n, sum(w) AS s1, sum(w * w) AS s2
@@ -1794,7 +1767,7 @@ _BF_SQL = """
 
 
 @register(
-    "stat_levene_brown_forsythe", oracle=_BF_SQL.format(li="lineitem")
+    "stat_levene_brown_forsythe", oracle=_BF_SQL.format(lineitem="lineitem")
 )
 def stat_levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brown-Forsythe (median-centered Levene) test for equality of
@@ -1813,10 +1786,7 @@ def stat_levene_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB swap to approx_percentile's KLL sketch), a broadcast 3-row
     join of medians back onto the fact, and one moment aggregation —
     two fact passes total, both map-combinable."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "bf_lineitem"
-    )
-    return spark.sql(_BF_SQL.format(li="bf_lineitem"))
+    return sql_on_tables(spark, sf_dir, _BF_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1829,7 +1799,7 @@ _GBDT_SQL = """
                    CAST(floor(l_extendedprice / 10000.0) AS BIGINT) AS pb,
                    CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)
                        AS y_c
-            FROM {li}
+            FROM {lineitem}
         ),
         long1 AS (
             SELECT 'quantity' AS feature, qty AS v, y_c FROM base
@@ -1930,7 +1900,7 @@ _GBDT_SQL = """
 
 @register(
     "ml_gbdt_residual_boost",
-    oracle=_GBDT_SQL.format(li="lineitem", idiv="//"),
+    oracle=_GBDT_SQL.format(lineitem="lineitem", idiv="//"),
 )
 def ml_gbdt_residual_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two rounds of gradient boosting with regression stumps
@@ -1959,10 +1929,9 @@ def ml_gbdt_residual_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
     one broadcast of the 1-row model against the base table. K
     boosting rounds cost K+1 linear passes — no per-split rescans,
     no driver-side data."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "gbdt_lineitem"
+    return sql_on_tables(
+        spark, sf_dir, _GBDT_SQL.format(lineitem="{lineitem}", idiv="div")
     )
-    return spark.sql(_GBDT_SQL.format(li="gbdt_lineitem", idiv="div"))
 
 
 # ---------------------------------------------------------------------------
@@ -2137,7 +2106,7 @@ _PR_SQL = """
                        AS score,
                    CAST(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END
                         AS BIGINT) AS y
-            FROM {li}
+            FROM {lineitem}
         ),
         hist AS (
             SELECT score, count(*) AS cnt, sum(y) AS pos
@@ -2179,7 +2148,7 @@ _PR_SQL = """
 
 @register(
     "ml_pr_curve_ap",
-    oracle=_PR_SQL.format(li="lineitem", idiv="//", bigint="HUGEINT"),
+    oracle=_PR_SQL.format(lineitem="lineitem", idiv="//", bigint="HUGEINT"),
 )
 def ml_pr_curve_ap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full precision-recall curve (one operating point per distinct
@@ -2204,11 +2173,10 @@ def ml_pr_curve_ap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-combinable aggregation + windows over the
     |distinct scores| histogram (11 rows here, bounded by score
     design at any SF)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "pr_lineitem"
-    )
-    return spark.sql(
-        _PR_SQL.format(li="pr_lineitem", idiv="div", bigint="DECIMAL(38,0)")
+    return sql_on_tables(
+        spark,
+        sf_dir,
+        _PR_SQL.format(lineitem="{lineitem}", idiv="div", bigint="DECIMAL(38,0)"),
     )
 
 
@@ -2221,7 +2189,7 @@ _LIFT_SQL = """
                        AS score,
                    CAST(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END
                         AS BIGINT) AS y
-            FROM {li}
+            FROM {lineitem}
         ),
         hist AS (
             SELECT score, count(*) AS cnt, sum(y) AS pos
@@ -2254,7 +2222,7 @@ _LIFT_SQL = """
 
 
 @register(
-    "ml_cumulative_gains_lift", oracle=_LIFT_SQL.format(li="lineitem")
+    "ml_cumulative_gains_lift", oracle=_LIFT_SQL.format(lineitem="lineitem")
 )
 def ml_cumulative_gains_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative gains and lift chart by score threshold — the
@@ -2271,10 +2239,7 @@ def ml_cumulative_gains_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one map-combinable aggregation; windows run over the
     |distinct scores| aggregate (11 rows at any SF)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lift_lineitem"
-    )
-    return spark.sql(_LIFT_SQL.format(li="lift_lineitem"))
+    return sql_on_tables(spark, sf_dir, _LIFT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2285,7 +2250,7 @@ _SPEARMAN_SQL = """
             SELECT CAST(l_quantity AS BIGINT) AS x,
                    CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)
                        AS y
-            FROM {li}
+            FROM {lineitem}
         ),
         hx AS (
             SELECT x, count(*) AS cnt,
@@ -2332,7 +2297,7 @@ _SPEARMAN_SQL = """
 """
 
 
-@register("stat_spearman_corr", oracle=_SPEARMAN_SQL.format(li="lineitem"))
+@register("stat_spearman_corr", oracle=_SPEARMAN_SQL.format(lineitem="lineitem"))
 def stat_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation between quantity and price — the
     monotonic-association measure that survives outliers and
@@ -2350,10 +2315,7 @@ def stat_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-cardinality side; AQE decides for the price side), one
     moment aggregate — no global row sort, which is what makes
     Spearman feasible at 100 TB."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "spear_lineitem"
-    )
-    return spark.sql(_SPEARMAN_SQL.format(li="spear_lineitem"))
+    return sql_on_tables(spark, sf_dir, _SPEARMAN_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2363,7 +2325,7 @@ _KENDALL_SQL = """
         WITH base AS (
             SELECT CAST(l_quantity AS BIGINT) AS x,
                    CAST(floor(l_extendedprice / 10000.0) AS BIGINT) AS y
-            FROM {li}
+            FROM {lineitem}
         ),
         cells AS (
             SELECT x, y, count(*) AS nij FROM base GROUP BY x, y
@@ -2405,7 +2367,7 @@ _KENDALL_SQL = """
 """
 
 
-@register("stat_kendall_tau_b", oracle=_KENDALL_SQL.format(li="lineitem"))
+@register("stat_kendall_tau_b", oracle=_KENDALL_SQL.format(lineitem="lineitem"))
 def stat_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall's tau-b between quantity and price bucket — the
     concordance-based rank correlation (more robust than Spearman to
@@ -2426,10 +2388,7 @@ def stat_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded-size cell self-join, two marginal aggregates — the
     canonical trick for rank statistics over low-cardinality columns
     at fleet scale."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "kend_lineitem"
-    )
-    return spark.sql(_KENDALL_SQL.format(li="kend_lineitem"))
+    return sql_on_tables(spark, sf_dir, _KENDALL_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2439,7 +2398,7 @@ _MDE_SQL = """
         WITH obs AS (
             SELECT event_type,
                    CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS cents
-            FROM {ev} WHERE event_type IN ('click', 'view')
+            FROM {events} WHERE event_type IN ('click', 'view')
         ),
         mom AS (
             SELECT event_type AS grp, count(*) AS n, sum(cents) AS s1,
@@ -2476,7 +2435,7 @@ _MDE_SQL = """
 """
 
 
-@register("stat_power_analysis_mde", oracle=_MDE_SQL.format(ev="events"))
+@register("stat_power_analysis_mde", oracle=_MDE_SQL.format(events="events"))
 def stat_power_analysis_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Experiment power analysis from pilot data: the minimum
     detectable effect at the CURRENT sample sizes and the required
@@ -2493,10 +2452,7 @@ def stat_power_analysis_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-combinable moment aggregation, a 1-row
     pivot, scalar arithmetic — the cheapest query in the stats suite
     regardless of data volume."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "mde_events"
-    )
-    return spark.sql(_MDE_SQL.format(ev="mde_events"))
+    return sql_on_tables(spark, sf_dir, _MDE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2509,7 +2465,7 @@ _CORRMAT_SQL = """
                    CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)
                        AS f3,
                    CAST(floor(l_tax * 100.0 + 0.5) AS BIGINT) AS f4
-            FROM {li}
+            FROM {lineitem}
         ),
         mom AS (
             SELECT count(*) AS n,
@@ -2577,7 +2533,7 @@ _CORRMAT_SQL = """
 
 @register(
     "ml_feature_correlation_matrix",
-    oracle=_CORRMAT_SQL.format(li="lineitem"),
+    oracle=_CORRMAT_SQL.format(lineitem="lineitem"),
 )
 def ml_feature_correlation_matrix(
     spark: SparkSession, sf_dir: str
@@ -2601,12 +2557,7 @@ def ml_feature_correlation_matrix(
     (caught by the plan pin); the Spark side instead explodes an
     array of pair structs FROM the single 1-row aggregate, so the
     plan has exactly one scan and one aggregation."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "corrmat_lineitem"
-    )
-    prefix = _CORRMAT_SQL[: _CORRMAT_SQL.index("        pairs AS (")].format(
-        li="corrmat_lineitem"
-    )
+    prefix = _CORRMAT_SQL[: _CORRMAT_SQL.index("        pairs AS (")]
 
     def _pair(fa: str, fb: str, ia: int, ib: int) -> str:
         return (
@@ -2628,7 +2579,9 @@ def ml_feature_correlation_matrix(
         for idx, (fa, ia) in enumerate(feats)
         for fb, ib in feats[idx + 1 :]
     )
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         prefix
         + f"""
         expanded AS (
@@ -2646,7 +2599,7 @@ def ml_feature_correlation_matrix(
                     AS DOUBLE) / 1000000.0 AS pearson_r
         FROM expanded
         ORDER BY feature_a, feature_b
-        """
+        """,
     )
 
 
@@ -2662,7 +2615,7 @@ _PROP_SQL = """
                    max(CASE WHEN event_type = 'purchase'
                                  AND value >= 400.0
                             THEN 1 ELSE 0 END) AS converted
-            FROM {ev}
+            FROM {events}
             GROUP BY user_id
         ),
         cnt AS (
@@ -2698,7 +2651,7 @@ _PROP_SQL = """
 @register(
     "stat_two_proportion_ztest",
     oracle=_PROP_SQL.format(
-        ev="events",
+        events="events",
         hex_head="CAST(concat('0x', ",
         hex_tail=") AS BIGINT)",
     ).replace("AS STRING", "AS VARCHAR"),
@@ -2721,15 +2674,14 @@ def stat_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one user-keyed aggregation (the only fact shuffle),
     one 1-row count pivot, scalar arithmetic."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "prop_events"
-    )
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         _PROP_SQL.format(
-            ev="prop_events",
+            events="{events}",
             hex_head="CAST(conv(",
             hex_tail=", 16, 10) AS BIGINT)",
-        )
+        ),
     )
 
 
@@ -2741,7 +2693,7 @@ _WILSON_SQL = """
             SELECT event_type,
                    count(*) AS n,
                    sum(CASE WHEN value >= 400.0 THEN 1 ELSE 0 END) AS k
-            FROM {ev}
+            FROM {events}
             GROUP BY event_type
         )
         SELECT event_type, CAST(n AS BIGINT) AS n, CAST(k AS BIGINT) AS k,
@@ -2770,7 +2722,7 @@ _WILSON_SQL = """
 """
 
 
-@register("stat_binomial_ci_wilson", oracle=_WILSON_SQL.format(ev="events"))
+@register("stat_binomial_ci_wilson", oracle=_WILSON_SQL.format(events="events"))
 def stat_binomial_ci_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """95% Wilson score interval for each segment's high-value rate —
     the proportion CI that behaves at the extremes where the normal
@@ -2784,10 +2736,7 @@ def stat_binomial_ci_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one map-combinable count aggregation (|segments|
     rows), then scalar arithmetic — nothing scales past the first
     pass."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "wilson_events"
-    )
-    return spark.sql(_WILSON_SQL.format(ev="wilson_events"))
+    return sql_on_tables(spark, sf_dir, _WILSON_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2802,7 +2751,7 @@ _LC_SQL = """
                    CAST(l_quantity AS BIGINT) AS x,
                    CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)
                        AS y
-            FROM {li} CROSS JOIN pcts p
+            FROM {lineitem} CROSS JOIN pcts p
             WHERE {hex_head}substr(md5(concat(
                       CAST(l_orderkey AS STRING), '_',
                       CAST(l_linenumber AS STRING))), 1, 8){hex_tail}
@@ -2842,7 +2791,7 @@ _LC_SQL = """
 @register(
     "ml_learning_curve_subsample",
     oracle=_LC_SQL.format(
-        li="lineitem",
+        lineitem="lineitem",
         hex_head="CAST(concat('0x', ",
         hex_tail=") AS BIGINT)",
     ).replace("AS STRING", "AS VARCHAR"),
@@ -2866,13 +2815,12 @@ def ml_learning_curve_subsample(
     cross join + hash filter, then a 3-group moment aggregate — K
     curve points never cost K scans, and the sampling predicate is
     scan-level (no shuffle to sample)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lc_lineitem"
-    )
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         _LC_SQL.format(
-            li="lc_lineitem",
+            lineitem="{lineitem}",
             hex_head="CAST(conv(",
             hex_tail=", 16, 10) AS BIGINT)",
-        )
+        ),
     )

@@ -19,7 +19,7 @@ from parquet_playground_spark.registry import (
     track_persist,
     track_temp_view,
 )
-from parquet_playground_spark.tables import load_table
+from parquet_playground_spark.tables import load_table, sql_on_tables
 
 
 @register(
@@ -989,7 +989,7 @@ _DFT_SQL = """
             SELECT event_type,
                    CAST(date_trunc('day', ts) AS DATE) AS day,
                    CAST(count(*) AS DOUBLE) AS x
-            FROM {ev} GROUP BY 1, 2
+            FROM {events} GROUP BY 1, 2
         ),
         idx AS (
             SELECT event_type, x,
@@ -1034,7 +1034,7 @@ _DFT_SQL = """
 
 @register(
     "ts_periodogram_dft",
-    oracle=_DFT_SQL.format(ev="events"),
+    oracle=_DFT_SQL.format(events="events"),
 )
 def ts_periodogram_dft(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-frequency DFT periodogram: spectral power of each daily
@@ -1048,8 +1048,7 @@ def ts_periodogram_dft(spark: SparkSession, sf_dir: str) -> DataFrame:
     same pi literal on both engines and the 2-dp rounding absorbs
     sub-ulp libm drift. One daily groupBy + a |periods|-fold expansion
     of the |days|-row aggregate — scan-bound at any scale."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("dft_events")
-    return spark.sql(_DFT_SQL.format(ev="dft_events"))
+    return sql_on_tables(spark, sf_dir, _DFT_SQL)
 
 
 _COVER_SQL = """
@@ -1057,7 +1056,7 @@ _COVER_SQL = """
             SELECT user_id,
                    sec - 900 AS s,
                    sec + 900 AS e
-            FROM {ev}
+            FROM {src}
         ),
         marked AS (
             SELECT user_id, s, e,
@@ -1103,7 +1102,7 @@ _COVER_SQL = """
                    CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
             FROM events
         )"""
-    + _COVER_SQL.format(ev="src").replace("WITH ivals AS", ", ivals AS", 1),
+    + _COVER_SQL.format(src="src").replace("WITH ivals AS", ", ivals AS", 1),
 )
 def ts_interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-union coverage (gaps-and-islands): each event claims a
@@ -1120,8 +1119,7 @@ def ts_interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.unix_timestamp(F.date_trunc("second", F.col("ts"))).alias("sec"),
     )
-    e.createOrReplaceTempView("cover_events")
-    return spark.sql(_COVER_SQL.format(ev="cover_events"))
+    return spark.sql(_COVER_SQL, src=e)
 
 
 _HYST_SQL = """
@@ -1129,7 +1127,7 @@ _HYST_SQL = """
             SELECT event_type,
                    CAST(date_trunc('day', ts) AS DATE) AS day,
                    round(sum(value), 4) AS v
-            FROM {ev} GROUP BY 1, 2
+            FROM {events} GROUP BY 1, 2
         ),
         stats AS (
             -- explicit moment arithmetic (not stddev_samp): both
@@ -1187,7 +1185,7 @@ _HYST_SQL = """
 
 @register(
     "ts_alert_hysteresis",
-    oracle=_HYST_SQL.format(ev="events"),
+    oracle=_HYST_SQL.format(events="events"),
 )
 def ts_alert_hysteresis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Alerting with HYSTERESIS: a series enters alert when its daily
@@ -1265,7 +1263,7 @@ _THEILSEN_SQL = """
             SELECT event_type,
                    CAST(date_trunc('day', ts) AS DATE) AS day,
                    round(sum(value), 4) AS v
-            FROM {ev} GROUP BY 1, 2
+            FROM {events} GROUP BY 1, 2
         ),
         idx AS (
             SELECT event_type, v,
@@ -1291,7 +1289,7 @@ _THEILSEN_SQL = """
 @register(
     "ts_theil_sen_slope",
     oracle=_THEILSEN_SQL.format(
-        ev="events", median_fn="quantile_cont(s.slope, 0.5)"
+        events="events", median_fn="quantile_cont(s.slope, 0.5)"
     ),
 )
 def ts_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1305,12 +1303,10 @@ def ts_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     join key is the series, so one shuffle. Slopes are exact divisions
     of 4-dp dailies and both engines interpolate the median with the
     same R-7 rule on identical values."""
-    e = load_table(spark, sf_dir, "events")
-    e.createOrReplaceTempView("sen_events")
-    return spark.sql(
-        _THEILSEN_SQL.format(
-            ev="sen_events", median_fn="percentile(s.slope, 0.5)"
-        )
+    return sql_on_tables(
+        spark,
+        sf_dir,
+        _THEILSEN_SQL.format(events="{events}", median_fn="percentile(s.slope, 0.5)"),
     )
 
 
@@ -1831,13 +1827,13 @@ _XCORR_SQL = """
             SELECT CAST({epoch}(date_trunc('hour', ts)) / 3600000000
                         AS BIGINT) AS hr,
                    CAST(floor(sum(value) * 10000.0 + 0.5) AS BIGINT) AS v
-            FROM {ev} WHERE event_type = 'click' GROUP BY 1
+            FROM {events} WHERE event_type = 'click' GROUP BY 1
         ),
         y0 AS (
             SELECT CAST({epoch}(date_trunc('hour', ts)) / 3600000000
                         AS BIGINT) AS hr,
                    CAST(floor(sum(value) * 10000.0 + 0.5) AS BIGINT) AS v
-            FROM {ev} WHERE event_type = 'purchase' GROUP BY 1
+            FROM {events} WHERE event_type = 'purchase' GROUP BY 1
         ),
         bounds AS (
             SELECT min(hr) AS mn, max(hr) AS mx
@@ -1888,7 +1884,7 @@ _XCORR_SQL = """
 @register(
     "ts_cross_correlation_lagged",
     oracle=_XCORR_SQL.format(
-        ev="events",
+        events="events",
         epoch="epoch_us",
         unnest_series="unnest(generate_series(mn, mx))",
     ),
@@ -1914,15 +1910,14 @@ def ts_cross_correlation_lagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two map-combinable hourly aggregations (calendar-
     bounded output), a generated spine, one equi-join, one 7-group
     aggregate. At production span the spine partitions by month."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "xcorr_events"
-    )
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         _XCORR_SQL.format(
-            ev="xcorr_events",
+            events="{events}",
             epoch="unix_micros",
             unnest_series="explode(sequence(mn, mx))",
-        )
+        ),
     )
 
 
@@ -1937,7 +1932,7 @@ _ROC_SQL = """
                    lag(CAST({epoch}(ts) AS BIGINT)) OVER w AS t_prev,
                    lag(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) OVER w
                        AS v_prev
-            FROM {ev}
+            FROM {events}
             WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
         ),
         rates AS (
@@ -1961,7 +1956,7 @@ _ROC_SQL = """
 
 @register(
     "ts_rate_of_change_irregular",
-    oracle=_ROC_SQL.format(ev="events", epoch="epoch_us"),
+    oracle=_ROC_SQL.format(events="events", epoch="epoch_us"),
 )
 def ts_rate_of_change_irregular(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First derivative of an IRREGULARLY-sampled series (no resample
@@ -1983,10 +1978,9 @@ def ts_rate_of_change_irregular(spark: SparkSession, sf_dir: str) -> DataFrame:
     at production volume partition by (type, day) with a |days|-row
     boundary carry like ts_gapfill_locf) and one map-combinable
     summary aggregate."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "roc_events"
+    return sql_on_tables(
+        spark, sf_dir, _ROC_SQL.format(events="{events}", epoch="unix_micros")
     )
-    return spark.sql(_ROC_SQL.format(ev="roc_events", epoch="unix_micros"))
 
 
 # ---------------------------------------------------------------------------
@@ -1996,7 +1990,7 @@ _DECOMP_SQL = """
         WITH per_hour AS (
             SELECT date_trunc('hour', ts) AS hour_ts,
                    CAST(floor(sum(value) * 10000.0 + 0.5) AS BIGINT) AS v4
-            FROM {ev} GROUP BY 1
+            FROM {events} GROUP BY 1
         ),
         ma AS (
             SELECT hour_ts, v4,
@@ -2023,7 +2017,7 @@ _DECOMP_SQL = """
 
 
 @register(
-    "ts_decompose_additive", oracle=_DECOMP_SQL.format(ev="events")
+    "ts_decompose_additive", oracle=_DECOMP_SQL.format(events="events")
 )
 def ts_decompose_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Additive seasonal decomposition, STL-lite: remove the trend
@@ -2044,10 +2038,7 @@ def ts_decompose_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     (calendar-bounded output), one ordered window over that aggregate
     (720 rows/month at any SF; partition by month with boundary
     overlap at production span), one 24-row groupBy."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "decomp_events"
-    )
-    return spark.sql(_DECOMP_SQL.format(ev="decomp_events"))
+    return sql_on_tables(spark, sf_dir, _DECOMP_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2062,7 +2053,7 @@ _OUTAGE_SQL = f"""
                    lag(CAST({{epoch}}(ts) AS BIGINT)) OVER (
                        PARTITION BY event_type ORDER BY ts, event_id
                    ) AS t_prev
-            FROM {{ev}}
+            FROM {{events}}
         ),
         gaps AS (
             SELECT event_type, t_us - t_prev AS gap_us
@@ -2078,7 +2069,7 @@ _OUTAGE_SQL = f"""
                CAST(floor(CAST(coalesce(max(g.gap_us), 0) AS DOUBLE)
                           / 60000000.0 * 10000.0 + 0.5)
                     AS DOUBLE) / 10000.0 AS max_gap_min
-        FROM (SELECT DISTINCT event_type FROM {{ev}}) o
+        FROM (SELECT DISTINCT event_type FROM {{events}}) o
         LEFT JOIN gaps g ON o.event_type = g.event_type
         GROUP BY o.event_type
         ORDER BY o.event_type
@@ -2087,7 +2078,7 @@ _OUTAGE_SQL = f"""
 
 @register(
     "ts_heartbeat_outage_intervals",
-    oracle=_OUTAGE_SQL.format(ev="events", epoch="epoch_us").replace(
+    oracle=_OUTAGE_SQL.format(events="events", epoch="epoch_us").replace(
         "::BIGINT", "::BIGINT"
     ),
 )
@@ -2110,13 +2101,12 @@ def ts_heartbeat_outage_intervals(
     ts_rate_of_change_irregular — partition by (type, day) with
     boundary carry at production volume), a filter that keeps only
     gap rows (tiny), one summary aggregate."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "outage_events"
-    )
-    return spark.sql(
-        _OUTAGE_SQL.format(ev="outage_events", epoch="unix_micros").replace(
+    return sql_on_tables(
+        spark,
+        sf_dir,
+        _OUTAGE_SQL.format(events="{events}", epoch="unix_micros").replace(
             f"{_OUTAGE_GAP_MIN}::BIGINT", f"CAST({_OUTAGE_GAP_MIN} AS BIGINT)"
-        )
+        ),
     )
 
 
@@ -2127,7 +2117,7 @@ _FCBT_SQL = """
         WITH hourly AS (
             SELECT date_trunc('hour', ts) AS hour_ts,
                    CAST(floor(sum(value) * 10000.0 + 0.5) AS BIGINT) AS v4
-            FROM {ev} GROUP BY 1
+            FROM {events} GROUP BY 1
         ),
         labeled AS (
             SELECT hour_ts, v4,
@@ -2179,7 +2169,7 @@ _FCBT_SQL = """
 @register(
     "ts_forecast_backtest_seasonal",
     oracle=_FCBT_SQL.format(
-        ev="events",
+        events="events",
         dow="CAST(isodow(hour_ts) - 1 AS BIGINT)",
     ).replace("INTERVAL 168 HOURS", "INTERVAL 168 HOUR"),
 )
@@ -2204,13 +2194,10 @@ def ts_forecast_backtest_seasonal(
     Scale shape: one hourly aggregation, a broadcast 168-row model
     join, a self-join on the shifted hour key (calendar-bounded), one
     readout aggregate."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "fcbt_events"
-    )
-    return spark.sql(
-        _FCBT_SQL.format(
-            ev="fcbt_events", dow="CAST(weekday(hour_ts) AS BIGINT)"
-        )
+    return sql_on_tables(
+        spark,
+        sf_dir,
+        _FCBT_SQL.format(events="{events}", dow="CAST(weekday(hour_ts) AS BIGINT)"),
     )
 
 
@@ -2223,7 +2210,7 @@ _BURST_SQL = """
                    {dow} AS dow,
                    CAST(hour(date_trunc('hour', ts)) AS BIGINT) AS hod,
                    count(*) AS n
-            FROM {ev}
+            FROM {events}
             GROUP BY 1, 2, 3
         ),
         baseline AS (
@@ -2253,7 +2240,7 @@ _BURST_SQL = """
 @register(
     "events_anomaly_burst_poisson",
     oracle=_BURST_SQL.format(
-        ev="events", dow="CAST(isodow(date_trunc('hour', ts)) - 1 AS BIGINT)"
+        events="events", dow="CAST(isodow(date_trunc('hour', ts)) - 1 AS BIGINT)"
     ),
 )
 def events_anomaly_burst_poisson(
@@ -2276,14 +2263,13 @@ def events_anomaly_burst_poisson(
     Scale shape: one hourly count (calendar-bounded), a 168-row
     baseline aggregate broadcast back, a filter — the always-on
     monitoring query shape."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "burst_events"
-    )
-    return spark.sql(
+    return sql_on_tables(
+        spark,
+        sf_dir,
         _BURST_SQL.format(
-            ev="burst_events",
+            events="{events}",
             dow="CAST(weekday(date_trunc('hour', ts)) AS BIGINT)",
-        )
+        ),
     )
 
 
@@ -2294,7 +2280,7 @@ _PEAK_SQL = """
         WITH hourly AS (
             SELECT event_type, date_trunc('hour', ts) AS hour_ts,
                    CAST(floor(sum(value) * 10000.0 + 0.5) AS BIGINT) AS v4
-            FROM {ev} GROUP BY 1, 2
+            FROM {events} GROUP BY 1, 2
         ),
         winfo AS (
             SELECT event_type, hour_ts, v4,
@@ -2331,7 +2317,7 @@ _PEAK_SQL = """
 
 @register(
     "ts_peak_detection_local_maxima",
-    oracle=_PEAK_SQL.format(ev="events"),
+    oracle=_PEAK_SQL.format(events="events"),
 )
 def ts_peak_detection_local_maxima(
     spark: SparkSession, sf_dir: str
@@ -2356,7 +2342,4 @@ def ts_peak_detection_local_maxima(
     Scale shape: one hourly aggregation, one +-3-row window per
     series over the calendar-bounded aggregate, a |series|-row
     median broadcast."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView(
-        "peak_events"
-    )
-    return spark.sql(_PEAK_SQL.format(ev="peak_events"))
+    return sql_on_tables(spark, sf_dir, _PEAK_SQL)

@@ -24,8 +24,9 @@ QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
 # Resources acquired while building the CURRENT query's plan —
-# persisted DataFrames (track_persist) and streaming memory-sink temp
-# views (track_temp_view). A query function can't release its own:
+# persisted DataFrames (track_persist), temp views such as streaming
+# memory sinks (track_temp_view) and temporary functions and variables
+# (track_drop). A query function can't release its own:
 # the caller materializes the returned DataFrame only after the
 # function exits. So every registered query releases the PREVIOUS
 # query's tracked resources on entry, and a sequential sweep (the
@@ -61,6 +62,13 @@ def track_temp_view(spark: SparkSession, name: str) -> None:
     _TRACKED_CLEANUPS.append(
         lambda: spark.catalog.dropTempView(name)
     )
+
+
+def track_drop(spark: SparkSession, statement: str) -> None:
+    """Track a DROP statement for a named session object the current
+    query creates (a temporary function or variable), so no query
+    leaves one in the caller's session."""
+    _TRACKED_CLEANUPS.append(lambda: spark.sql(statement))
 
 
 def release_tracked_caches() -> None:

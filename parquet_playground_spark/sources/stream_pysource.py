@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from parquet_playground_spark.registry import register
+from parquet_playground_spark.registry import register, track_temp_view
 from parquet_playground_spark.session import ensure_session_defaults, stream_confs
 
 ROWS_PER_PARTITION = 2000
@@ -193,6 +193,7 @@ def stream_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
+        track_temp_view(spark, sink)
         q.awaitTermination()
     return spark.table(sink)
 

@@ -23,6 +23,7 @@ import atexit
 import glob as _glob
 import os
 import shutil
+import string
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -63,8 +64,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -153,3 +152,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # window(), watermarks) was written against.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def sql_on_tables(
+    spark: SparkSession, sf_dir: str, template: str, **frames: DataFrame
+) -> DataFrame:
+    """``spark.sql(template)`` with each table placeholder (``{lineitem}``,
+    ``{orders}``) bound to that table's ``load_table`` frame and any
+    other placeholder to the frame of that name in ``frames``.
+
+    Each table gets one frame, so a template that names a table twice
+    reads one relation. ``spark.sql`` registers every frame under a
+    generated name and drops it before returning, so no query leaves a
+    view in the caller's session. A template's oracle is the same text
+    with each table placeholder filled in with the table's own name."""
+    fields = {f for _, f, _, _ in string.Formatter().parse(template) if f}
+    tables = {t: load_table(spark, sf_dir, t) for t in TABLES if t in fields}
+    return spark.sql(template, **tables, **frames)

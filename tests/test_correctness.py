@@ -532,11 +532,11 @@ def test_dual_dialect_templates_fail_loudly_on_drift():
     from parquet_playground_spark.operators import analytics, stats
 
     spark_side = analytics._DECAY_SQL.format(
-        ev="decay_events",
+        events="decay_events",
         age_seconds="unix_timestamp(a.now_ts) - unix_timestamp(e.ts)",
     )
     oracle_side = analytics._DECAY_SQL.format(
-        ev="events", age_seconds="date_diff('second', e.ts, a.now_ts)"
+        events="events", age_seconds="date_diff('second', e.ts, a.now_ts)"
     )
     assert "date_diff" not in spark_side
     assert "unix_timestamp" not in oracle_side

@@ -104,10 +104,27 @@ registry.load_all()
 NAMES = list(registry.QUERIES)
 
 
+def _session_objects(spark) -> tuple[list[str], list[str]]:
+    """The session's temp views and user functions. SQL SHOW, not
+    spark.catalog.listFunctions(): that converts every builtin over
+    py4j and costs minutes across the sweep."""
+    views = sorted(
+        r.viewName for r in spark.sql("SHOW VIEWS").collect() if r.isTemporary
+    )
+    functions = sorted(r.function for r in spark.sql("SHOW USER FUNCTIONS").collect())
+    return views, functions
+
+
 @pytest.mark.slow
 @pytest.mark.parametrize("name", NAMES)
 def test_no_unexplained_plan_antipatterns(spark, name):
+    before = _session_objects(spark)
     names = [n.name for n in plan_nodes(registry.QUERIES[name](spark, SF_DIR))]
+    # A query leaves the caller's session as it found it: every temp
+    # view, temp function or variable it creates by name is tracked
+    # and released with the registry's tracked caches.
+    registry.release_tracked_caches()
+    assert _session_objects(spark) == before
     if name not in ALLOWED_NESTED_LOOP:
         assert "CartesianProduct" not in names
         if name not in SCALAR_BROADCAST_BNLJ:

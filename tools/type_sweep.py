@@ -38,9 +38,7 @@ import traceback
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from tools.verify_local import oracle_connection  # noqa: E402
-
-SF_DIR = "/root/testdata/sf0.01"
+from tools.verify_local import SF_DIR, oracle_connection  # noqa: E402
 
 INT_FAMILY = {
     "TINYINT", "SMALLINT", "INTEGER", "BIGINT",
