@@ -6,8 +6,8 @@ session from ``get_spark`` and a session someone else built (the
 external driver's bare ``local[8]``, ``tools/verify_local.py
 --vanilla``) run with the same confs. ``get_spark`` puts only the
 static confs (master, driver memory, warehouse dir, UI, classpath,
-Python worker daemon) in the builder and then goes through the same
-call.
+Python worker daemon and its Unix sockets) in the builder and then
+goes through the same call.
 
   * ``spark.sql.shuffle.partitions`` is the context's
     ``defaultParallelism``: one post-shuffle partition per core, e.g. 8
@@ -44,12 +44,39 @@ on a 4-core host each Python task of a ``get_spark`` session spent
 JVM-only job takes ~50 ms end to end. The daemon re-reads an archive
 only when it has changed. A foreign session keeps the stock daemon:
 its results are the same, only its Python tasks are slower.
+
+``get_spark`` also moves the daemon, its workers and the accumulator
+server from loopback TCP to Unix sockets
+(``spark.python.unix.domain.socket.enabled``): over TCP each Python
+task waited ~40 ms with no CPU in use. On 4 cores at sf0.1,
+``udf_arrow_map``'s one Python task read a stage run time minus task
+CPU of 37-38 ms over TCP and 5-6 ms over Unix sockets (medians of 14
+runs). The sockets live in ``tables.socket_dir()``
+(``spark.python.unix.domain.socket.dir``), which meets three rules:
+
+  * It is short. PySpark binds ``<dir>/.<uuid4>.sock``, 43 bytes after
+    the dir, and Linux caps a socket path at 107 bytes, so the dir is
+    at most 64 bytes; Spark itself rejects a dir over 61 characters.
+    ``scratch_path("uds")`` is used when it fits, else the same name
+    directly under ``/tmp``. A socket path that does not fit fails
+    ``get_spark`` itself (``OSError: AF_UNIX path too long``), since
+    the accumulator server binds when the SparkContext starts; a dir
+    over 61 characters fails every Python task.
+  * It belongs to this process and is removed at its exit; a killed
+    daemon leaves its socket behind.
+  * It is mode 0700: in Unix-socket mode a worker skips PySpark's
+    secret handshake, so the dir's mode is the only guard on a socket
+    that runs code.
+
+A foreign session keeps loopback TCP, the stock daemon's default: both
+confs are static, so only ``get_spark``'s builder sets them.
 """
 
 from __future__ import annotations
 
 import contextlib
 import os
+import stat
 from collections.abc import Iterator, Mapping
 
 from pyspark.sql import SparkSession
@@ -93,8 +120,9 @@ _ROCKSDB_PROVIDER = (
 
 def get_spark(app_name: str = "parquet-playground-spark") -> SparkSession:
     """Create (or fetch) the engine's SparkSession."""
-    from parquet_playground_spark.tables import scratch_path
+    from parquet_playground_spark.tables import scratch_path, socket_dir
 
+    sock_dir = _private_dir(socket_dir())
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -108,6 +136,10 @@ def get_spark(app_name: str = "parquet-playground-spark") -> SparkSession:
         # which the worker's Python finds on this package's parent dir
         .config("spark.python.daemon.module", "parquet_playground_spark.pyworker")
         .config("spark.executorEnv.PYTHONPATH", os.path.dirname(_PACKAGE_DIR))
+        # the daemon, its workers and the accumulator server talk over
+        # Unix sockets in this process's private dir, not loopback TCP
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", sock_dir)
     )
     # Parquet modular-encryption factory (sources/encrypted.py): the
     # pp-crypto.jar holds PlaygroundDecryptionFactory with the corpus's
@@ -120,6 +152,19 @@ def get_spark(app_name: str = "parquet-playground-spark") -> SparkSession:
     spark.sparkContext.setLogLevel("WARN")
     ensure_session_defaults(spark)
     return spark
+
+
+def _private_dir(path: str) -> str:
+    """Create ``path`` as a mode-0700 directory of this user and return
+    it. A Unix-socket worker skips PySpark's secret handshake, so the
+    directory's mode is the only guard on the sockets inside; a
+    directory or link someone else made at the name is refused."""
+    os.makedirs(path, mode=0o700, exist_ok=True)
+    st = os.lstat(path)
+    if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid():
+        raise PermissionError(f"{path} is not a directory owned by this user")
+    os.chmod(path, 0o700)
+    return path
 
 
 def ensure_session_defaults(spark: SparkSession) -> None:

@@ -45,11 +45,35 @@ def scratch_path(name: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"ppspark_{name}_{os.getpid()}")
 
 
+# Linux's sun_path holds 107 bytes and a NUL; PySpark binds each Unix
+# socket at <dir>/.<uuid4>.sock, 43 bytes after the dir
+_SUN_PATH_MAX = 107
+_SOCK_NAME_LEN = len("/.") + 36 + len(".sock")
+# Spark 4.1 rejects a spark.python.unix.domain.socket.dir longer than
+# 61 characters, and only when a Python task starts, not at session start
+_SPARK_SOCK_DIR_MAX = 61
+
+
+def socket_dir() -> str:
+    """This process's directory for Python-worker Unix sockets:
+    ``scratch_path("uds")`` when both limits above allow it, else the
+    same ``ppspark_uds_<pid>`` name directly under ``/tmp`` (a temp dir
+    inside a deep checkout is too long). ``_cleanup_process_staging``
+    removes it at exit either way."""
+    path = scratch_path("uds")
+    if (
+        len(path) > _SPARK_SOCK_DIR_MAX
+        or len(os.fsencode(path)) + _SOCK_NAME_LEN > _SUN_PATH_MAX
+    ):
+        path = os.path.join("/tmp", os.path.basename(path))
+    return path
+
+
 @atexit.register
 def _cleanup_process_staging() -> None:
     """Remove this process's scratch paths on exit. Scoped strictly to
     this pid's paths: other live sessions are untouched."""
-    for d in _glob.glob(scratch_path("*")):
+    for d in {*_glob.glob(scratch_path("*")), socket_dir()}:
         shutil.rmtree(d, ignore_errors=True)
 
 TABLES = (

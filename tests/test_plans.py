@@ -331,21 +331,22 @@ def test_quantize_has_no_shuffle_and_no_python(spark):
 def test_sql_broadcast_hint_is_respected(spark):
     """The SQL BROADCAST hint must produce a BroadcastHashJoin even
     where size stats alone might pick sort-merge — the escape hatch
-    when a dimension's stats are missing at 100 TB."""
-    from parquet_playground_spark.tables import load_table
+    when a dimension's stats are missing at 100 TB. The tables go in
+    as ``spark.sql`` arguments, so the test leaves no view behind."""
+    from parquet_playground_spark.tables import sql_on_tables
 
-    load_table(spark, SF_DIR, "orders").createOrReplaceTempView("hint_orders")
-    load_table(spark, SF_DIR, "customer").createOrReplaceTempView(
-        "hint_customer"
-    )
-    df = spark.sql(
+    views_before = spark.sql("SHOW VIEWS").collect()
+    df = sql_on_tables(
+        spark,
+        SF_DIR,
         """
         SELECT /*+ BROADCAST(c) */ c.c_mktsegment, count(*) AS n
-        FROM hint_orders o JOIN hint_customer c ON o.o_custkey = c.c_custkey
+        FROM {orders} o JOIN {customer} c ON o.o_custkey = c.c_custkey
         GROUP BY c.c_mktsegment
-        """
+        """,
     )
     assert "BroadcastHashJoin" in [n.name for n in plan_nodes(df)]
+    assert spark.sql("SHOW VIEWS").collect() == views_before
 
 
 def test_dynamic_partition_pruning_on_partitioned_fact(spark):

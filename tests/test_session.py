@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from types import SimpleNamespace
 
 import pytest
 
@@ -40,6 +41,28 @@ def test_foreign_session_gets_the_whole_table(spark):
     for key, value in SESSION_CONFS.items():
         assert foreign.conf.get(key) == value, key
     assert foreign.conf.get(PARTS) == str(spark.sparkContext.defaultParallelism)
+
+
+class _RecordingConf:
+    def __init__(self) -> None:
+        self.set_keys: list[str] = []
+
+    def get(self, key, default=None):
+        return default
+
+    def set(self, key, value) -> None:
+        self.set_keys.append(key)
+
+
+def test_foreign_session_keeps_its_python_worker_confs():
+    """The Unix-socket and daemon confs are static, set only in
+    get_spark's builder: a foreign session keeps the stock daemon over
+    TCP, so ensure_session_defaults must set no spark.python.* conf."""
+    conf = _RecordingConf()
+    foreign = SimpleNamespace(conf=conf, sparkContext=SimpleNamespace(defaultParallelism=8))
+    ensure_session_defaults(foreign)
+    assert PARTS in conf.set_keys
+    assert not [k for k in conf.set_keys if k.startswith("spark.python.")]
 
 
 def test_scoped_confs_restores_set_and_unset_keys(spark):

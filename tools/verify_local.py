@@ -17,8 +17,10 @@ Spark's int64 under any type-sensitive canon.
 --vanilla runs the queries on a bare
 `SparkSession.builder.master("local[8]").getOrCreate()` session instead
 of `get_spark` — the external driver builds exactly such a session. It
-lacks `get_spark`'s static confs (driver memory, the crypto classpath);
-every query self-provisions the rest through
+lacks `get_spark`'s static confs (driver memory, the crypto classpath,
+the engine's worker daemon and its Unix sockets), so its Python tasks
+run on the stock PySpark daemon over loopback TCP; every query
+self-provisions the rest through
 `session.ensure_session_defaults` (the same conf table and
 one-partition-per-core rule `get_spark` applies, so 8 shuffle
 partitions here) and `install_crypto_classloader`.
