@@ -5,78 +5,39 @@ canon but failed the driver's hash because the two engines emitted
 different RESULT TYPES for identical values — DuckDB HUGEINT/DOUBLE/
 DECIMAL reaching pandas as float64 or Decimal objects where Spark
 emits int64/float64 (VERDICT r3 "What's wrong" #1-#4). This suite
-makes that class un-shippable: every registered oracle's DuckDB
-result types are compared against the Spark DataFrame schema (analysis
-only — no execution of the heavy path) using the same family rules as
-tools/type_sweep.py. A new query with a `sum(int_col)` oracle (HUGEINT)
-or an uncast DECIMAL projection fails here before it can burn a driver
-round.
+makes that class un-shippable: for every registered key, the DuckDB
+oracle's result types are compared against the Spark schema with the
+family rules of `tools/verify_local.type_flag`, read from the shared
+`query_record` (tests/conftest.py). A new query with a `sum(int_col)`
+oracle (HUGEINT) or an uncast DECIMAL projection fails here before it
+can burn a driver round.
 
 Value-level strict verification (pandas round-trip + dtype-kind
-assert) is the `tools/verify_local.py --strict` sweep — run it per
-round; it is too slow for pytest (~30 min).
+assert) is the `tools/verify_local.py --strict` sweep.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from tests.conftest import SF_DIR
-from tools.type_sweep import _duck_token, _flag, _spark_token
+from tools.verify_local import type_flag
 
 
-def _oracle_names():
+def _query_names():
     from parquet_playground_spark import registry
 
     registry.load_all()
-    return sorted(registry.ORACLES)
+    return sorted(registry.QUERIES)
 
 
-# Heavy side-effect queries (multi-variant writes, streaming staging,
-# iterative jobs) whose DataFrame CONSTRUCTION already executes jobs.
-# Their types are covered by the per-round `verify_local.py --strict`
-# sweep; excluding them keeps this net fast enough to run on every
-# pytest invocation.
-_HEAVY = {
-    "stream_watermark_late",
-    "write_encrypted_roundtrip",
-    "stream_checkpoint_recovery",
-    "stream_foreachbatch_upsert",
-    "stream_progress_metrics",
-    "sink_python_datasource",
-    "kmeans_lloyd_iterations",
-    "ml_logistic_gradient_steps",
-    "embedding_pca_power_iteration",
-    "graph_pagerank_power",
-    "mv_incremental_refresh",
-    "plan_cache_reuse",
-    "stream_dedup",
-    "stream_dedup_within_watermark",
-    "stream_session_window",
-    "stream_sliding_agg",
-    "stream_static_join",
-    "stream_stateful_running",
-    "stream_stream_join",
-    "stream_stream_left_outer",
-    "stream_transform_with_state",
-    "stream_tumbling_count",
-    "stream_python_source",
-    "stream_windowed_topk",
-}
-
-
-@pytest.mark.parametrize("name", [n for n in _oracle_names() if n not in _HEAVY])
-def test_no_result_type_skew(spark, oracle_con, name):
-    from parquet_playground_spark import registry
-
-    sdf = registry.QUERIES[name](spark, SF_DIR)
-    sfields = {f.name: _spark_token(f.dataType) for f in sdf.schema.fields}
-    rel = oracle_con.sql(registry.ORACLES[name])
-    dfields = dict(zip(rel.columns, [_duck_token(t) for t in rel.types]))
+@pytest.mark.parametrize("name", _query_names())
+def test_no_result_type_skew(query_record, name):
+    rec = query_record(name).need("types")
+    sfields, dfields = dict(rec.spark_schema), dict(rec.duck_schema)
     assert sorted(sfields) == sorted(dfields), "column-name mismatch"
     skew = {}
     for col, stok in sfields.items():
-        sev = _flag(stok, dfields[col])
+        sev = type_flag(stok, dfields[col])
         if sev and "MISMATCH" in sev:
             skew[col] = (stok, dfields[col], sev)
     assert not skew, f"result-type skew vs oracle: {skew}"

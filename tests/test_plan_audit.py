@@ -13,9 +13,10 @@ accidental cross join fails loudly instead of hiding among the 400+
 plans. Audit some keys only with `pytest tests/test_plan_audit.py -k
 <name>`.
 
-Plan-only (queries are not executed), but plan CONSTRUCTION side
-effects — staging stream sources, writing fixture tables, computing
-broadcast centroids — do run, so the sweep costs a few minutes.
+The audit reads the shared `query_record` (tests/conftest.py): the
+node names of each query's initial plan, walked before the record
+executes the query for the oracle check. Only a build or plan-walk
+error fails a case here; a collect error fails `test_oracle_match`.
 Marked `slow`; deselect with `-m 'not slow'` for quick iteration.
 """
 
@@ -104,27 +105,15 @@ registry.load_all()
 NAMES = list(registry.QUERIES)
 
 
-def _session_objects(spark) -> tuple[list[str], list[str]]:
-    """The session's temp views and user functions. SQL SHOW, not
-    spark.catalog.listFunctions(): that converts every builtin over
-    py4j and costs minutes across the sweep."""
-    views = sorted(
-        r.viewName for r in spark.sql("SHOW VIEWS").collect() if r.isTemporary
-    )
-    functions = sorted(r.function for r in spark.sql("SHOW USER FUNCTIONS").collect())
-    return views, functions
-
-
 @pytest.mark.slow
 @pytest.mark.parametrize("name", NAMES)
-def test_no_unexplained_plan_antipatterns(spark, name):
-    before = _session_objects(spark)
-    names = [n.name for n in plan_nodes(registry.QUERIES[name](spark, SF_DIR))]
+def test_no_unexplained_plan_antipatterns(query_record, name):
+    rec = query_record(name).need("plan")
+    names = rec.nodes
     # A query leaves the caller's session as it found it: every temp
     # view, temp function or variable it creates by name is tracked
     # and released with the registry's tracked caches.
-    registry.release_tracked_caches()
-    assert _session_objects(spark) == before
+    assert rec.after == rec.before
     if name not in ALLOWED_NESTED_LOOP:
         assert "CartesianProduct" not in names
         if name not in SCALAR_BROADCAST_BNLJ:
@@ -132,6 +121,17 @@ def test_no_unexplained_plan_antipatterns(spark, name):
             assert n_bnlj == 0, f"{n_bnlj}x BroadcastNestedLoopJoin not in SCALAR_BROADCAST_BNLJ"
     if name not in ALLOWED_PYTHON:
         assert "BatchEvalPython" not in names
+
+
+def test_record_holds_the_initial_plan(spark, query_record):
+    """The record walks a key's plan before executing it. This key's
+    final (AQE) plan differs on every run; its initial plan is the one
+    a fresh, unexecuted build shows."""
+    name = "text_lm_interpolation_tuning"
+    recorded = query_record(name).need("plan").nodes
+    fresh = [n.name for n in plan_nodes(registry.QUERIES[name](spark, SF_DIR))]
+    registry.release_tracked_caches()
+    assert recorded == fresh
 
 
 @pytest.mark.slow

@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import math
 import os
+import re
 import sys
 import time
 import traceback
@@ -130,6 +131,95 @@ def canon_value(v) -> str:
 def canon_rows(cols: list[str], rows: list[tuple]) -> list[str]:
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     return sorted("|".join(canon_value(r[i]) for i in order) for r in rows)
+
+
+# Result-type tokens. The driver's value hash goes through pandas, so
+# equal values hash apart when the engines' result types differ (DuckDB
+# HUGEINT and DECIMAL reach pandas as float64, Spark's DECIMAL as
+# Decimal objects); `type_flag` names each such pairing MISMATCH.
+INT_FAMILY = {
+    "TINYINT", "SMALLINT", "INTEGER", "BIGINT",
+    "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT",
+}
+FLOAT_FAMILY = {"FLOAT", "DOUBLE"}
+
+
+def spark_token(dt) -> str:
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.ArrayType):
+        return f"LIST<{spark_token(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"MAP<{spark_token(dt.keyType)},{spark_token(dt.valueType)}>"
+    if isinstance(dt, T.StructType):
+        inner = ",".join(spark_token(f.dataType) for f in dt.fields)
+        return f"STRUCT<{inner}>"
+    m = {
+        "LongType": "BIGINT",
+        "IntegerType": "INTEGER",
+        "ShortType": "SMALLINT",
+        "ByteType": "TINYINT",
+        "DoubleType": "DOUBLE",
+        "FloatType": "FLOAT",
+        "StringType": "VARCHAR",
+        "BooleanType": "BOOLEAN",
+        "DateType": "DATE",
+        "TimestampType": "TIMESTAMP",
+        "TimestampNTZType": "TIMESTAMP",
+        "BinaryType": "BLOB",
+        "NullType": "NULL",
+    }
+    name = type(dt).__name__
+    if name == "DecimalType":
+        return f"DECIMAL({dt.precision},{dt.scale})"
+    return m.get(name, name.upper())
+
+
+def duck_token(t) -> str:
+    s = str(t).upper()
+    s = s.replace("TIMESTAMP WITH TIME ZONE", "TIMESTAMP")
+    s = s.replace("TIMESTAMP_NS", "TIMESTAMP").replace(
+        "TIMESTAMP_MS", "TIMESTAMP"
+    ).replace("TIMESTAMP_S", "TIMESTAMP")
+    # normalize list syntax X[][]... -> LIST<LIST<X>> (strip all
+    # trailing [] first, then wrap — wrapping inside the loop would
+    # leave inner [] unconverted)
+    depth = 0
+    while s.endswith("[]"):
+        s = s[:-2]
+        depth += 1
+    for _ in range(depth):
+        s = f"LIST<{s}>"
+    s = re.sub(r"^MAP\((.+), (.+)\)$", r"MAP<\1,\2>", s)
+    return s
+
+
+def type_flag(spark_tok: str, duck_tok: str) -> str | None:
+    """Return severity string for a (spark, duck) token pair, or None."""
+    if spark_tok == duck_tok:
+        if "DECIMAL" in spark_tok:  # incl. inside LIST<DECIMAL(p,s)>
+            # DECIMAL-on-both-sides STILL skews through pandas:
+            # DuckDB .df() -> float64, Spark toPandas -> Decimal objects
+            # (fn_cast_decimal failed r2+r3 with matching DECIMAL(p,s)).
+            return "MISMATCH decimal-through-pandas"
+        return None
+    # recurse into lists
+    if spark_tok.startswith("LIST<") and duck_tok.startswith("LIST<"):
+        inner = type_flag(spark_tok[5:-1], duck_tok[5:-1])
+        return f"list:{inner}" if inner else None
+    if {"HUGEINT", "UHUGEINT"} & {duck_tok, spark_tok}:
+        return "MISMATCH hugeint->float64"
+    d_int, s_int = duck_tok in INT_FAMILY, spark_tok in INT_FAMILY
+    d_flt, s_flt = duck_tok in FLOAT_FAMILY, spark_tok in FLOAT_FAMILY
+    if d_int and s_int:
+        return "info int-width"
+    if (d_int and s_flt) or (d_flt and s_int):
+        return "MISMATCH int-vs-float"
+    if d_flt and s_flt:
+        return "MISMATCH float32-vs-float64"
+    if duck_tok.startswith("DECIMAL") or spark_tok.startswith("DECIMAL"):
+        return "MISMATCH decimal-vs-other"
+    return f"MISMATCH other ({spark_tok} vs {duck_tok})"
 
 
 def canon_value_strict(v) -> str:
