@@ -6,8 +6,8 @@ session from ``get_spark`` and a session someone else built (the
 external driver's bare ``local[8]``, ``tools/verify_local.py
 --vanilla``) run with the same confs. ``get_spark`` puts only the
 static confs (master, driver memory, warehouse dir, UI, classpath,
-Python worker daemon and its Unix sockets) in the builder and then
-goes through the same call.
+local filesystem, Python worker daemon and its Unix sockets) in the
+builder and then goes through the same call.
 
   * ``spark.sql.shuffle.partitions`` is the context's
     ``defaultParallelism``: one post-shuffle partition per core, e.g. 8
@@ -70,6 +70,52 @@ runs). The sockets live in ``tables.socket_dir()``
 
 A foreign session keeps loopback TCP, the stock daemon's default: both
 confs are static, so only ``get_spark``'s builder sets them.
+
+Local file writes and stream checkpoints start no process. Without
+``libhadoop.so``, which PySpark does not ship, Hadoop's local
+filesystem forks ``chmod`` for every file and directory it creates.
+Spark's default checkpoint file manager goes through ``FileContext``,
+which does the same through a raw local filesystem of its own (not
+``fs.file.impl``), and whose link resolution forks ``readlink`` about
+twice per renamed file. Each exec costs milliseconds of driver or
+task time (100 ``Shell.execCommand("true")`` calls over py4j: 2.2-4.6
+ms each in two measurements on a 4-core host, against 0.8-1.1 ms for
+a bare py4j call). Two confs remove both, with every file mode and
+commit protocol as before:
+
+  * ``spark.hadoop.fs.file.impl = pp.NioLocalFileSystem``
+    (``java/NioLocalFileSystem.java`` in ``pp-engine.jar``) sets plain
+    rwx modes with ``Files.setPosixFilePermissions``; a mode with the
+    setuid, setgid or sticky bit goes to Hadoop's own method. Files
+    stay 0644 and dirs 0755 (``tests/test_session.py``). The conf is
+    static and needs the jar at JVM launch, so only ``get_spark`` sets
+    it, and only when the jar exists; a foreign session keeps stock
+    Hadoop.
+  * ``stream_confs`` selects Spark's
+    ``FileSystemBasedCheckpointFileManager``: offset, commit and source
+    logs and RocksDB snapshot uploads go temp file, then one local
+    ``rename(2)``, through ``fs.file.impl``. Every stream enters
+    ``stream_confs``, so a foreign session gets this half too (its
+    checkpoint files still fork ``chmod``).
+
+Census of the binaries exec'd in one run of each key at sf0.01 (PATH
+of logging wrappers), over the 16 ``stream_*`` and 15 ``write_*`` keys,
+``sink_python_datasource``, ``compact_small_files`` and
+``join_bucketed_colocated``: 1739 ``chmod`` and 2808 ``readlink``
+before, none after. ``stream_tumbling_count`` went from 54 ``chmod`` +
+136 ``readlink`` + 10 ``rm`` to 10 ``rm``, ``stream_stream_join`` from
+221 + 512 + 56 to 57 ``rm``, ``write_partitioned_parquet`` from 16
+``chmod`` to none. What is left is Spark's own ``rm -rf``
+(``JavaUtils.deleteRecursively``), which no conf turns off.
+
+On a 4-core host, ``perfbench`` ``curation_ingest`` (10 interleaved
+pairs against the previous code, seeds 1001-1010) read ``pass_norm_s``
+1.690 -> 1.226 s (median, -27.5%, lower in 10/10), ``pass_cpu_norm_s``
+3.343 -> 2.416 s (-27.7%, 10/10) and ``query_geomean_norm_s`` 0.267 ->
+0.228 s (-14.8%, 10/10). Per batch of ``stream_tumbling_count`` (a
+``StreamingQueryListener``'s median over 3 warm runs, two such probes
+a side), the state store's commit took 70-82 ms against 186-192 ms,
+and the offset-log and commit-log writes 2-5 ms against 30-37 ms.
 """
 
 from __future__ import annotations
@@ -113,8 +159,15 @@ _APPLIED_MARKER = "spark.pp.session.defaults.applied"
 
 _PACKAGE_DIR = os.path.dirname(os.path.abspath(__file__))
 
+# the engine's Java classes (tools/build_jar.sh builds it from java/*.java)
+ENGINE_JAR = os.path.join(_PACKAGE_DIR, "java", "pp-engine.jar")
+
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
 )
 
 
@@ -141,13 +194,14 @@ def get_spark(app_name: str = "parquet-playground-spark") -> SparkSession:
         .config("spark.python.unix.domain.socket.enabled", "true")
         .config("spark.python.unix.domain.socket.dir", sock_dir)
     )
-    # Parquet modular-encryption factory (sources/encrypted.py): the
-    # pp-crypto.jar holds PlaygroundDecryptionFactory with the corpus's
-    # published keys; classpath entries only apply at JVM launch, so an
-    # already-running session simply leaves the encrypted reads gated.
-    crypto_jar = os.path.join(_PACKAGE_DIR, "java", "pp-crypto.jar")
-    if os.path.exists(crypto_jar):
-        builder = builder.config("spark.driver.extraClassPath", crypto_jar)
+    # pp-engine.jar holds the Parquet modular-encryption factories
+    # (sources/encrypted.py) and the local filesystem that sets file
+    # modes without forking chmod (module docstring). Classpath entries
+    # and fs.file.impl only apply at JVM launch, so an already-running
+    # session keeps stock Hadoop and leaves the encrypted reads gated.
+    if os.path.exists(ENGINE_JAR):
+        builder = builder.config("spark.driver.extraClassPath", ENGINE_JAR)
+        builder = builder.config("spark.hadoop.fs.file.impl", "pp.NioLocalFileSystem")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     ensure_session_defaults(spark)
@@ -209,12 +263,34 @@ def _stream_shuffle_partitions(master: str, default_parallelism: int) -> str:
 
 
 def stream_confs(spark: SparkSession) -> contextlib.AbstractContextManager:
-    """Scope for one streaming run: the streaming partition count and
-    the RocksDB state store. RocksDB keeps state in native memory and
-    local disk, not the JVM heap; the default HDFS-backed store keeps
-    every partition's state map on-heap and ran out of a 1 GiB heap on
-    session windows over 6M events. Both confs are read at query
-    start."""
+    """Scope for one streaming run: the streaming partition count, the
+    RocksDB state store and the ``FileSystem``-based checkpoint file
+    manager. All three are read at query start.
+
+    RocksDB keeps state in native memory and local disk, not the JVM
+    heap; the default HDFS-backed store keeps every partition's state
+    map on-heap and ran out of a 1 GiB heap on session windows over 6M
+    events.
+
+    Spark's default checkpoint file manager writes each offset,
+    commit and source-log file and each RocksDB snapshot upload through
+    ``FileContext``, which on a host without ``libhadoop.so`` forks
+    ``chmod`` for the file and ``readlink`` about twice for its rename;
+    the ``FileSystem``-based one writes through ``fs.file.impl`` and
+    renames with one local ``rename(2)``. With ``get_spark``'s
+    filesystem, one run of ``stream_tumbling_count`` went from 54
+    ``chmod`` + 136 ``readlink`` processes to none, and the summed
+    trigger time of its two batches from 898 ms to 450 ms (median pass
+    of one traced ``perfbench`` pair; the module docstring has the
+    full census and A/B).
+
+    Both managers write to a temp file and rename it into place, so a
+    batch is still committed only once its log file is whole. The
+    ``FileSystem`` one refuses an existing log file by an existence
+    check before the rename, not by an atomic no-overwrite rename;
+    that is safe with one writer per checkpoint, which every checkpoint
+    here has (a per-process ``scratch_path`` or Spark's own per-query
+    temp dir)."""
     sc = spark.sparkContext
     return scoped_confs(
         spark,
@@ -223,5 +299,6 @@ def stream_confs(spark: SparkSession) -> contextlib.AbstractContextManager:
                 sc.master, sc.defaultParallelism
             ),
             "spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER,
+            "spark.sql.streaming.checkpointFileManagerClass": _FS_CHECKPOINT_MANAGER,
         },
     )

@@ -5,7 +5,7 @@ their footer/column keys (footer "kf", double_field "kc1", float_field
 "kc2", AAD prefix "tester" on two files). The engine reads them with
 Spark's normal vectorized parquet reader by supplying a
 DecryptionPropertiesFactory (java/PlaygroundDecryptionFactory.java,
-built into java/pp-crypto.jar and placed on the driver classpath by
+built into java/pp-engine.jar and placed on the driver classpath by
 session.get_spark) — activated per-read via the public
 `parquet.crypto.factory.class` hadoop conf, which Spark forwards from
 reader options.
@@ -27,15 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from parquet_playground_spark.registry import register
-from parquet_playground_spark.session import ensure_session_defaults
+from parquet_playground_spark.session import ENGINE_JAR, ensure_session_defaults
 from parquet_playground_spark.sources.corpus import CORPUS_DIR
 
 FACTORY_CLASS = "pp.PlaygroundDecryptionFactory"
-CRYPTO_JAR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "java",
-    "pp-crypto.jar",
-)
 
 # file -> needs explicit AAD prefix (only the variant that disables
 # in-file AAD-prefix storage; the others store or don't use a prefix)
@@ -76,19 +71,19 @@ def install_crypto_classloader(spark: SparkSession) -> bool:
         return True  # already resolvable; don't stack classloaders
     except Exception:  # noqa: BLE001 — ClassNotFound via py4j
         pass
-    if not os.path.exists(CRYPTO_JAR):
+    if not os.path.exists(ENGINE_JAR):
         return False
     try:
         # Cluster mode ships the jar to executors; local mode relies on
         # the setClassLoader below (the conf object is shared, not
         # serialized, so executor-side loaders never apply).
-        spark.sparkContext._jsc.sc().addJar(CRYPTO_JAR)
+        spark.sparkContext._jsc.sc().addJar(ENGINE_JAR)
     except Exception:  # noqa: BLE001 — best-effort
         pass
     try:
         jvm = spark._jvm
         gw = spark.sparkContext._gateway
-        url = jvm.java.io.File(CRYPTO_JAR).toURI().toURL()
+        url = jvm.java.io.File(ENGINE_JAR).toURI().toURL()
         arr = gw.new_array(jvm.java.net.URL, 1)
         arr[0] = url
         parent = jvm.Thread.currentThread().getContextClassLoader()
@@ -149,7 +144,7 @@ def encrypted_corpus_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
             name = type(exc).__name__
             status = (
                 "factory_unavailable"
-                if "ClassNotFound" in str(exc) or not os.path.exists(CRYPTO_JAR)
+                if "ClassNotFound" in str(exc) or not os.path.exists(ENGINE_JAR)
                 else f"error:{name}"
             )
             records.append((rel, status, -1, -1.0))
