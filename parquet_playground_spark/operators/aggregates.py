@@ -102,57 +102,49 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of SF: shuffle is O(groups), the ideal scale shape.
 
     Money arithmetic is EXACT: quantities/cents/pct integerize per
-    row, and the three money sums of integer products (base price in
-    cents, disc price in 1e-4 USD, charge in 1e-6 USD) go through
-    exact_sum: two int64 limb sums per row on the codegen'd primitive
-    path, recombined into a DECIMAL(38,0) once per group. Each average
-    takes one final division. The first sf1 TPC-H oracle sweep caught
-    the original float-sum form diverging from DuckDB above the 4-dp
-    grid at ~5e10 magnitudes (the q11 lesson applied to the
-    flagship)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    qty_i = F.col("l_quantity").cast("bigint")
-    price_c = F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("bigint")
-    disc_p = F.floor(F.col("l_discount") * 100.0 + 0.5).cast("bigint")
-    tax_p = F.floor(F.col("l_tax") * 100.0 + 0.5).cast("bigint")
-    disc_price_4 = price_c * (100 - disc_p)
-    charge_6 = disc_price_4 * (100 + tax_p)
-    cnt = F.count(F.lit(1))
-    return (
-        li.filter(
-            F.col("l_shipdate")
-            <= F.lit("2024-09-01 00:00:00").cast("timestamp")
+    row (``rows_in``), and the three money sums of integer products
+    (base price in cents, disc price in 1e-4 USD, charge in 1e-6 USD)
+    go through exact_sum_sql: two int64 limb sums per row on the
+    codegen'd primitive path, recombined into a DECIMAL(38,0) once per
+    group. Each average takes one final division. The first sf1 TPC-H
+    oracle sweep caught the original float-sum form diverging from
+    DuckDB above the 4-dp grid at ~5e10 magnitudes (the q11 lesson
+    applied to the flagship). Built as one SQL statement on
+    ``sql_on_tables``: ~20 py4j round trips, where the Column API pays
+    one or more per expression node (~900 for this aggregate)."""
+    price_c = exact_sum_sql("price_c")
+    disc_price_4 = exact_sum_sql("price_c * (100 - disc_p)")
+    charge_6 = exact_sum_sql("price_c * (100 - disc_p) * (100 + tax_p)")
+    return sql_on_tables(
+        spark,
+        sf_dir,
+        f"""
+        WITH rows_in AS (
+            SELECT l_returnflag, l_linestatus,
+                   CAST(l_quantity AS BIGINT) AS qty_i,
+                   CAST(floor(l_extendedprice * 100D + 0.5D) AS BIGINT) AS price_c,
+                   CAST(floor(l_discount * 100D + 0.5D) AS BIGINT) AS disc_p,
+                   CAST(floor(l_tax * 100D + 0.5D) AS BIGINT) AS tax_p
+            FROM {{lineitem}}
+            WHERE l_shipdate <= TIMESTAMP '2024-09-01 00:00:00'
         )
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(qty_i).cast("double").alias("sum_qty"),
-            (exact_sum(price_c).cast("double") / 100.0).alias("sum_base_price"),
-            (exact_sum(disc_price_4).cast("double") / 10000.0).alias(
-                "sum_disc_price"
-            ),
-            (exact_sum(charge_6).cast("double") / 1000000.0).alias("sum_charge"),
-            (
-                F.floor(
-                    F.sum(qty_i).cast("double") / cnt * 10000.0 + 0.5
-                ).cast("double")
-                / 10000.0
-            ).alias("avg_qty"),
-            (
-                F.floor(
-                    F.sum(price_c).cast("double") / cnt / 100.0 * 10000.0
-                    + 0.5
-                ).cast("double")
-                / 10000.0
-            ).alias("avg_price"),
-            (
-                F.floor(
-                    F.sum(disc_p).cast("double") / cnt / 100.0 * 10000.0
-                    + 0.5
-                ).cast("double")
-                / 10000.0
-            ).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
+        SELECT
+            l_returnflag,
+            l_linestatus,
+            CAST(sum(qty_i) AS DOUBLE) AS sum_qty,
+            CAST({price_c} AS DOUBLE) / 100D AS sum_base_price,
+            CAST({disc_price_4} AS DOUBLE) / 10000D AS sum_disc_price,
+            CAST({charge_6} AS DOUBLE) / 1000000D AS sum_charge,
+            CAST(floor(CAST(sum(qty_i) AS DOUBLE) / count(1) * 10000D + 0.5D)
+                 AS DOUBLE) / 10000D AS avg_qty,
+            CAST(floor(CAST(sum(price_c) AS DOUBLE) / count(1) / 100D
+                       * 10000D + 0.5D) AS DOUBLE) / 10000D AS avg_price,
+            CAST(floor(CAST(sum(disc_p) AS DOUBLE) / count(1) / 100D
+                       * 10000D + 0.5D) AS DOUBLE) / 10000D AS avg_disc,
+            count(*) AS count_order
+        FROM rows_in
+        GROUP BY l_returnflag, l_linestatus
+        """,
     )
 
 

@@ -167,33 +167,38 @@ def q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle_hash as well: never broadcast (the q9-class OOM at 100x),
     and hash-building the uniform supplier side skips the sort of both
     sides a merge join would need. One aggregate of |nations| rows at
-    the end; revenue sums exact 1e-4-USD integers with exact_sum
-    (per-nation float sums grow with SF)."""
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
-    n = load_table(spark, sf_dir, "nation")
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    cust_orders = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .join(o, o.o_custkey == c.c_custkey)
-        .select("o_orderkey", "c_nationkey", "n_name")
+    the end; revenue sums exact 1e-4-USD integers with exact_sum_sql
+    (per-nation float sums grow with SF).
+
+    One SQL statement on ``sql_on_tables``; hints carry the join pins:
+    ``BROADCAST(n), BROADCAST(r)`` in the customer-orders CTE and
+    ``SHUFFLE_HASH(co), SHUFFLE_HASH(s)`` on the lineitem joins."""
+    rev_4 = exact_sum_sql(
+        "CAST(floor(l.l_extendedprice * 100D + 0.5D) AS BIGINT)"
+        " * (100 - CAST(floor(l.l_discount * 100D + 0.5D) AS BIGINT))"
     )
-    rev_4 = F.floor(F.col("l_extendedprice") * 100.0 + 0.5).cast("bigint") * (
-        100 - F.floor(F.col("l_discount") * 100.0 + 0.5).cast("bigint")
-    )
-    return (
-        li.join(
-            cust_orders.hint("shuffle_hash"), li.l_orderkey == F.col("o_orderkey")
+    return sql_on_tables(
+        spark,
+        sf_dir,
+        f"""
+        WITH cust_orders AS (
+            SELECT /*+ BROADCAST(n), BROADCAST(r) */
+                   o.o_orderkey, c.c_nationkey, n.n_name
+            FROM {{customer}} c
+            JOIN {{nation}} n ON c.c_nationkey = n.n_nationkey
+            JOIN {{region}} r ON n.n_regionkey = r.r_regionkey
+            JOIN {{orders}} o ON o.o_custkey = c.c_custkey
+            WHERE r.r_name = 'AMERICA'
         )
-        .join(
-            s.hint("shuffle_hash"),
-            (s.s_suppkey == li.l_suppkey) & (s.s_nationkey == F.col("c_nationkey")),
-        )
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg((exact_sum(rev_4).cast("double") / 10000.0).alias("revenue"))
+        SELECT /*+ SHUFFLE_HASH(co), SHUFFLE_HASH(s) */
+               co.n_name AS nation,
+               CAST({rev_4} AS DOUBLE) / 10000D AS revenue
+        FROM {{lineitem}} l
+        JOIN cust_orders co ON l.l_orderkey = co.o_orderkey
+        JOIN {{supplier}} s ON s.s_suppkey = l.l_suppkey
+                           AND s.s_nationkey = co.c_nationkey
+        GROUP BY co.n_name
+        """,
     )
 
 
@@ -535,27 +540,30 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchanges + final-agg exchange); now 1 lineitem scan, no final
     aggregate. total_qty is bit-identical under
     either grouping: l_quantity is integer-valued, so the double sum
-    is exact in any accumulation order."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("qty"))
-        .filter(F.col("qty") > 260)
-    )
-    hits = o.join(big.hint("shuffle_hash"), big.l_orderkey == o.o_orderkey)
-    return (
-        hits.join(c, c.c_custkey == o.o_custkey)
-        .select(
-            "c_custkey",
-            "o_orderkey",
-            F.col("o_orderdate").cast("date").alias("orderdate"),
-            "o_totalprice",
-            F.round(F.col("qty"), 4).alias("total_qty"),
+    is exact in any accumulation order. One SQL statement on
+    ``sql_on_tables``; the ``SHUFFLE_HASH(big)`` hint carries the
+    build-side pin."""
+    return sql_on_tables(
+        spark,
+        sf_dir,
+        """
+        WITH big AS (
+            SELECT l_orderkey, sum(l_quantity) AS qty
+            FROM {lineitem}
+            GROUP BY l_orderkey
+            HAVING qty > 260
         )
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(100)
+        SELECT /*+ SHUFFLE_HASH(big) */
+               c.c_custkey, o.o_orderkey,
+               CAST(o.o_orderdate AS DATE) AS orderdate,
+               o.o_totalprice,
+               round(big.qty, 4) AS total_qty
+        FROM {orders} o
+        JOIN big ON big.l_orderkey = o.o_orderkey
+        JOIN {customer} c ON c.c_custkey = o.o_custkey
+        ORDER BY o.o_totalprice DESC, o.o_orderkey
+        LIMIT 100
+        """,
     )
 
 

@@ -77,31 +77,26 @@ def topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "topk_per_group",
-    oracle="""
+_TOPK_PER_GROUP_SQL = """
         SELECT c_nationkey, c_custkey, round(c_acctbal, 4) AS bal
         FROM (
-            SELECT c_nationkey, c_custkey, c_acctbal,
+            SELECT c_custkey, c_nationkey, c_acctbal,
                    row_number() OVER (
                        PARTITION BY c_nationkey
                        ORDER BY c_acctbal DESC, c_custkey
                    ) AS rn
-            FROM customer
+            FROM {customer}
         )
         WHERE rn <= 3
-    """,
-)
+"""
+
+
+@register("topk_per_group", oracle=_TOPK_PER_GROUP_SQL.format(customer="customer"))
 def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey")
-    )
-    return (
-        c.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("c_nationkey", "c_custkey", F.round("c_acctbal", 4).alias("bal"))
-    )
+    """Per-group top-k as a row_number() filter: one shuffle on the
+    group key, and the rank limit reaches the window as
+    WindowGroupLimit."""
+    return sql_on_tables(spark, sf_dir, _TOPK_PER_GROUP_SQL)
 
 
 _OFFSET_PAGINATION_SQL = """

@@ -5,16 +5,21 @@ Tables are one parquet file per name under an sf dir
 partitioned directory; ``spark.read.parquet`` handles both shapes, so
 nothing here changes at scale.
 
-Each table's footer schema is inferred once per process and reused.
-Spark infers a Parquet schema with one job per ``spark.read.parquet``
-call (``SchemaMergeUtils.mergeSchemasInParallel``), even for a single
-file, so re-inferring it on every query costs a job and ~0.1 s of
-driver time per table load. The cache key holds everything the
-inferred schema depends on: the table's real path, its file signature
-((size, mtime_ns) of the file, or of every file under a directory
-table) and the SQL confs that Parquet schema conversion reads. Only
-the schema is reused: every query still lists the table's files and
-scans its data, and no result is cached.
+Each table is resolved once per session and reused. Resolving a table
+infers its footer schema, with one Spark job per ``spark.read.parquet``
+call even for a single file (``SchemaMergeUtils.mergeSchemasInParallel``),
+lists its files into an ``InMemoryFileIndex`` and builds the relation:
+~0.1 s of driver time per load with inference, and still 6-10 ms with
+the schema given. ``load_table`` keeps the resolved frame per session
+and hands out a re-aliased copy of it, whose columns get fresh
+expression ids, so two loads of one table in one query still
+self-join. The cache key holds everything the resolved relation
+depends on: the session (weakly held), the table's real path, its file
+signature ((size, mtime_ns) of the file, or of every file under a
+directory table) and the SQL confs that schema inference and relation
+resolution read. What is reused is the resolved relation only, i.e.
+the schema and the file listing: every query still scans the table's
+data, and no result is cached.
 """
 
 from __future__ import annotations
@@ -25,10 +30,10 @@ import os
 import shutil
 import string
 import tempfile
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from parquet_playground_spark.session import ensure_session_defaults
 
@@ -94,23 +99,53 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-# SQL confs that Parquet-to-Spark schema conversion reads; a change to
-# any of them can change the inferred schema, so their values are part
-# of the cache key (and the key does not depend on who built the
-# session).
+# The SQL confs that DataSource.resolveRelation and InMemoryFileIndex
+# read when a table is resolved and that can change the relation they
+# build; their values are part of the cache key. First, those of
+# Parquet schema inference and conversion (ParquetUtils.inferSchema,
+# ParquetToSparkSchemaConverter; a corrupt footer is skipped or raises).
 _SCHEMA_CONFS = (
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.ignoreVariantAnnotation",
     "spark.sql.caseSensitive",
     "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles",
 )
+# Then the relation's own: a V1 LogicalRelation or a V2 scan, and the
+# time zone that partition values parse in and events.ts is cast in
+_RELATION_CONFS = _SCHEMA_CONFS + (
+    "spark.sql.sources.useV1SourceList",
+    "spark.sql.session.timeZone",
+)
+# Partition discovery and the streaming-sink metadata log only apply
+# to a directory table: a single file's base path is its parent, with
+# no partition directory below it.
+_DIRECTORY_CONFS = (
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.sources.validatePartitionColumns",
+    "spark.sql.files.ignoreInvalidPartitionPaths",
+    "spark.sql.streaming.fileStreamSink.ignoreMetadata",
+)
+# Read but left out of the key, since the relation does not keep them:
+# the listing's parallelism (parallelPartitionDiscovery.*), locality
+# and missing-file handling (ignoreDataLocality, ignoreMissingFiles:
+# a vanished file changes the signature) and the file-status cache
+# size; split sizes (files.maxPartitionBytes, openCostInBytes,
+# min/maxPartitionNum) and the size estimate's compression factor are
+# read when a query is planned, not when its table is resolved.
 
-# (real path, file signature, schema conf values) -> footer schema.
-# Concurrent misses on one key both infer and store the same schema,
-# so no lock is needed.
-_FOOTER_SCHEMAS: dict[tuple, StructType] = {}
+# session -> {(real path, file signature, conf values): (the resolved
+# JVM Dataset, a JVM Seq of its column names)}. Weak on the session, so
+# the cache never keeps a session alive, and a new or foreign session
+# never gets another session's frame. JVM handles are kept, not
+# DataFrames: a DataFrame holds its session and would keep the key
+# alive. Concurrent misses on one key both resolve and store an equal
+# frame, so no lock is needed.
+_RESOLVED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _file_signature(path: str) -> tuple:
@@ -134,47 +169,60 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ParquetConverter.java:98 — schema always from the footer, never
     user-declared). Vectorized, splittable, filter-pushdown-capable.
 
-    The footer schema is inferred on a table's first load and handed
-    to ``spark.read.schema`` on later ones (cache key: see the module
-    docstring). It is the schema the footer gives, so plans and results
-    are unchanged; only the inference job is skipped, and the files are
-    still listed and scanned by every query."""
+    A table is resolved on its first load in a session (cache key: see
+    the module docstring); later loads return the same resolved frame
+    re-aliased (``toDF``, one py4j round trip), so each load's columns
+    get fresh expression ids. What is reused is the schema and the file
+    listing, the same the footer gives, so plans and results are
+    unchanged: every query still scans the data, and no result is
+    cached."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    ensure_session_defaults(spark)
+    resolved = _RESOLVED.get(spark)
+    if resolved is None:
+        ensure_session_defaults(spark)
+        resolved = _RESOLVED[spark] = {}
     path = table_path(sf_dir, name)
+    confs = _RELATION_CONFS + (_DIRECTORY_CONFS if os.path.isdir(path) else ())
     key = (
         os.path.realpath(path),
         _file_signature(path),
-        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
+        tuple(spark.conf.get(k) for k in confs),
     )
-    schema = _FOOTER_SCHEMAS.get(key)
-    if schema is None:
+    hit = resolved.get(key)
+    if hit is None:
         df = spark.read.parquet(path)
-        schema = _FOOTER_SCHEMAS[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
-    if name == "events":
-        ts_type = {f.name: f.dataType.simpleString() for f in schema}.get("ts")
-        if ts_type == "bigint":
-            # events.ts stored as parquet timestamp[ns]; with
-            # spark.sql.legacy.parquet.nanosAsLong it arrives as long
-            # nanos. Convert to a microsecond timestamp (truncation
-            # matches the date_trunc('second'|…) discipline every oracle
-            # already applies; reference nano-decode lineage:
-            # ParquetConverter.java:40-61). integer DIV (not double /):
-            # nanos ~1.7e18 exceed double's 2^53 exact range, and a
-            # ±128 ns rounding error can flip a second boundary under
-            # the oracles' date_trunc('second').
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif ts_type == "timestamp_ntz":
-            # events.ts stored as parquet timestamp[us] without UTC
-            # adjustment — Spark 4 infers TIMESTAMP_NTZ. The session is
-            # pinned to UTC, so casting to the session-TZ TIMESTAMP
-            # keeps the stored wall clock as the same instant while
-            # restoring the type every downstream query (unix_micros,
-            # window(), watermarks) was written against.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        if name == "events":
+            df = _normalize_events_ts(df)
+        jvm = spark.sparkContext._jvm
+        hit = resolved[key] = (df._jdf, jvm.PythonUtils.toSeq(df.columns))
+    jdf, columns = hit
+    return DataFrame(jdf.toDF(columns), spark)
+
+
+def _normalize_events_ts(df: DataFrame) -> DataFrame:
+    """events.ts as a session-TZ TIMESTAMP, whichever way the testdata
+    generation stored it."""
+    ts_type = {f.name: f.dataType.simpleString() for f in df.schema}.get("ts")
+    if ts_type == "bigint":
+        # events.ts stored as parquet timestamp[ns]; with
+        # spark.sql.legacy.parquet.nanosAsLong it arrives as long
+        # nanos. Convert to a microsecond timestamp (truncation
+        # matches the date_trunc('second'|…) discipline every oracle
+        # already applies; reference nano-decode lineage:
+        # ParquetConverter.java:40-61). integer DIV (not double /):
+        # nanos ~1.7e18 exceed double's 2^53 exact range, and a
+        # ±128 ns rounding error can flip a second boundary under
+        # the oracles' date_trunc('second').
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    if ts_type == "timestamp_ntz":
+        # events.ts stored as parquet timestamp[us] without UTC
+        # adjustment — Spark 4 infers TIMESTAMP_NTZ. The session is
+        # pinned to UTC, so casting to the session-TZ TIMESTAMP
+        # keeps the stored wall clock as the same instant while
+        # restoring the type every downstream query (unix_micros,
+        # window(), watermarks) was written against.
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

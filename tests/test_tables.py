@@ -1,10 +1,12 @@
-"""Footer-schema reuse in `tables.load_table`.
+"""Table reuse in `tables.load_table`.
 
-A table's footer schema is inferred once and handed back to
-``spark.read.schema`` on later loads. These tests pin the cache key:
-each case fails if the part of the key it exercises is dropped, and
-the parity test pins that a cached build gives the same optimized
-plan and the same rows as a cold one.
+A table is resolved (footer schema, file listing) once per session,
+and later loads hand back that frame re-aliased. These tests pin the
+cache key: each case fails if the part of the key it exercises is
+dropped. Others pin what is shared (one file index per session and
+table) and what is not (expression ids, so self-joins still resolve;
+another session's frame), and the parity test pins that a cached build
+gives the same optimized plan and the same rows as a cold one.
 """
 
 from __future__ import annotations
@@ -115,6 +117,53 @@ def test_added_file_reinfers_directory_table(spark, tmp_path):
         assert after.count() == 3
 
 
+def _file_index_id(df):
+    """JVM identity of the file index under `df`'s one table scan."""
+    (relation,) = [
+        leaf
+        for leaf in _jvm_list(df._jdf.queryExecution().analyzed().collectLeaves())
+        if leaf.nodeName() == "LogicalRelation"
+    ]
+    return df._sc._jvm.System.identityHashCode(relation.relation().location())
+
+
+def _jvm_list(seq):
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def test_loads_in_one_session_share_the_file_index(spark):
+    first = tables.load_table(spark, SF_DIR, "orders")
+    second = tables.load_table(spark, SF_DIR, "orders")
+    assert _file_index_id(first) == _file_index_id(second)
+
+
+def test_two_loads_self_join_as_two_reads(spark):
+    """Each load's columns get fresh expression ids, as two independent
+    reads' do, and a self-join of two loads counts what two reads
+    count."""
+    a = tables.load_table(spark, SF_DIR, "lineitem")
+    b = tables.load_table(spark, SF_DIR, "lineitem")
+    a_ids, b_ids = (
+        df._jdf.queryExecution().analyzed().output().toString() for df in (a, b)
+    )
+    assert a_ids != b_ids
+    got = a.join(b, (a.l_orderkey == b.l_orderkey) & (a.l_suppkey != b.l_suppkey))
+    path = tables.table_path(SF_DIR, "lineitem")
+    x, y = spark.read.parquet(path), spark.read.parquet(path)
+    want = x.join(y, (x.l_orderkey == y.l_orderkey) & (x.l_suppkey != y.l_suppkey))
+    assert got.count() == want.count() > 0
+
+
+def test_new_session_gets_its_own_frame(spark):
+    """A frame is reused only within the session that resolved it."""
+    mine = tables.load_table(spark, SF_DIR, "nation")
+    other = spark.newSession()
+    theirs = tables.load_table(other, SF_DIR, "nation")
+    assert theirs._jdf.sparkSession().equals(other._jsparkSession)
+    assert _file_index_id(theirs) != _file_index_id(mine)
+    assert theirs.count() == mine.count() == 25
+
+
 def _optimized_plan(df):
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     return re.sub(r"#\d+L?", "#", plan)
@@ -135,7 +184,7 @@ def test_cached_build_matches_cold_build(spark, name):
     footer schema."""
     registry.load_all()
     query = registry.QUERIES[name]
-    tables._FOOTER_SCHEMAS.clear()
+    tables._RESOLVED.clear()
     cold = query(spark, SF_DIR)
     cold_plan, cold_rows = _optimized_plan(cold), cold.collect()
     cached = query(spark, SF_DIR)

@@ -1,7 +1,8 @@
 """tools/time_queries.py, the per-query timing tool, on the sf0.001 tables.
 
 It must report every requested query with construction + stream +
-planning + execution spans that add up to the run's wall time, keep sweeping
+planning + execution spans that add up to the run's wall time and the
+py4j round trips of construction, keep sweeping
 past a query that raises, and reject an unknown name before any query
 runs.
 """
@@ -39,6 +40,8 @@ def test_every_name_is_reported_with_spans_that_add_up(spark, capsys, tmp_path):
         assert (stream > 0) == name.startswith("stream_"), rows[name]
         assert (tmp_path / f"{name}.txt").read_text().startswith("== Physical Plan ==")
     assert "queries=3 errors=0" in rows["TOTAL"]
+    assert rows["query"].split()[6] == "py4j"
+    assert int(rows["q1_pricing_summary"].split()[6]) > 0
     assert "isFinalPlan=true" in (tmp_path / "q1_pricing_summary.txt").read_text()
 
 

@@ -1,5 +1,5 @@
 """Per-query timing: min of N noop-write runs, split into construction,
-planning and execution.
+planning and execution, with the py4j round trips of construction.
 
 Each query is materialized with a noop-format write (as bench.py does),
 so the whole plan executes without collecting to the driver. Runs go in
@@ -11,7 +11,11 @@ planning (Catalyst producing the executed plan) and execution (the
 noop write). Streaming keys run their stream inside the query
 function; the wall time of the streaming queries started there, from a
 StreamingQueryListener's started/terminated events, is reported as
-`stream` and left out of construction.
+`stream` and left out of construction. `py4j` counts the fastest
+run's round trips to the JVM during construction: calls of py4j's
+`send_command` on the session's gateway client, the same method
+perfbench/worker.py's tracer wraps. The Column API pays one or more
+per expression node, a SQL template a few per statement.
 
 Usage:
   python tools/time_queries.py [--sf DIR] [--runs N] [--plans DIR]
@@ -58,6 +62,7 @@ class Timing:
     stream_s: float = 0.0
     plan_s: float = 0.0
     exec_s: float = 0.0
+    py4j_calls: int = 0
     error: str = ""
 
 
@@ -119,12 +124,40 @@ class StreamSpans:
         self.spark.streams.removeListener(self.listener)
 
 
-def run_once(spark, fn, sf_dir: str, t: Timing, streams: StreamSpans):
+class Py4jCalls:
+    """Counts py4j round trips: `send_command` calls on the session's
+    gateway client while `counting` is set."""
+
+    def __init__(self, spark) -> None:
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.original = self.client.send_command
+        self.counting = False
+        self.n = 0
+        calls = self
+
+        def send_command(*args, **kwargs):
+            if calls.counting:
+                calls.n += 1
+            return calls.original(*args, **kwargs)
+
+        self.client.send_command = send_command
+
+    def close(self) -> None:
+        self.client.send_command = self.original
+
+
+def run_once(
+    spark, fn, sf_dir: str, t: Timing, streams: StreamSpans, py4j: Py4jCalls
+):
     """One noop-write run of `fn`, kept in `t` if it is the fastest;
     returns the run's DataFrame."""
+    py4j.n, py4j.counting = 0, True
     t0 = time.perf_counter()
-    df = fn(spark, sf_dir)
-    t1 = time.perf_counter()
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        t1 = time.perf_counter()
+        py4j.counting = False
     df._jdf.queryExecution().executedPlan()
     t2 = time.perf_counter()
     df.write.format("noop").mode("overwrite").save()
@@ -132,7 +165,7 @@ def run_once(spark, fn, sf_dir: str, t: Timing, streams: StreamSpans):
     if t3 - t0 < t.wall_s:
         stream_s = streams.seconds(t0, t1)
         t.wall_s, t.construct_s, t.stream_s = t3 - t0, t1 - t0 - stream_s, stream_s
-        t.plan_s, t.exec_s = t2 - t1, t3 - t2
+        t.plan_s, t.exec_s, t.py4j_calls = t2 - t1, t3 - t2, py4j.n
     return df
 
 
@@ -156,6 +189,7 @@ def sweep(
 
     timings = [Timing(name) for name in names]
     streams = StreamSpans(spark)
+    py4j = Py4jCalls(spark)
     try:
         for i in range(runs):
             for t in timings:
@@ -163,7 +197,9 @@ def sweep(
                     continue
                 spark.sparkContext.setJobDescription(f"time_queries: {t.name}")
                 try:
-                    df = run_once(spark, registry.QUERIES[t.name], sf_dir, t, streams)
+                    df = run_once(
+                        spark, registry.QUERIES[t.name], sf_dir, t, streams, py4j
+                    )
                     if plans and i == runs - 1:
                         with open(os.path.join(plans, f"{t.name}.txt"), "w") as fh:
                             fh.write(final_plan(df))
@@ -173,22 +209,24 @@ def sweep(
     finally:
         spark.sparkContext.setJobDescription(None)
         streams.close()
+        py4j.close()
     return timings
 
 
 def report(timings: list[Timing], sf_dir: str, runs: int) -> None:
     print(f"{'query':36s} {'wall':>8s} {'construct':>9s} {'stream':>7s} "
-          f"{'plan':>7s} {'exec':>8s}")
+          f"{'plan':>7s} {'exec':>8s} {'py4j':>6s}")
     for t in timings:
         if t.error:
             print(f"{t.name:36s} ERROR {t.error}")
         else:
             print(f"{t.name:36s} {t.wall_s:8.3f} {t.construct_s:9.3f} "
-                  f"{t.stream_s:7.3f} {t.plan_s:7.3f} {t.exec_s:8.3f}")
+                  f"{t.stream_s:7.3f} {t.plan_s:7.3f} {t.exec_s:8.3f} {t.py4j_calls:6d}")
     ok = [t for t in timings if not t.error]
     print(f"{'TOTAL':36s} {sum(t.wall_s for t in ok):8.3f} "
           f"{sum(t.construct_s for t in ok):9.3f} {sum(t.stream_s for t in ok):7.3f} "
-          f"{sum(t.plan_s for t in ok):7.3f} {sum(t.exec_s for t in ok):8.3f}  "
+          f"{sum(t.plan_s for t in ok):7.3f} {sum(t.exec_s for t in ok):8.3f} "
+          f"{sum(t.py4j_calls for t in ok):6d}  "
           f"queries={len(ok)} errors={len(timings) - len(ok)} "
           f"runs={runs} sf_dir={sf_dir}")
 

@@ -19,8 +19,10 @@ Spark's int64 under any type-sensitive canon.
 of `get_spark` — the external driver builds exactly such a session. It
 lacks `get_spark`'s static confs (driver memory, the crypto classpath,
 the engine's worker daemon and its Unix sockets), so its Python tasks
-run on the stock PySpark daemon over loopback TCP; every query
-self-provisions the rest through
+run on the stock PySpark daemon over loopback TCP. They import this
+package through the checkout root, which the tool puts at the front of
+PYTHONPATH before the session starts, so it runs from any directory.
+Every query self-provisions the rest through
 `session.ensure_session_defaults` (the same conf table and
 one-partition-per-core rule `get_spark` applies, so 8 shuffle
 partitions here) and `install_crypto_classloader`.
@@ -331,6 +333,12 @@ def main() -> int:
     if vanilla:
         from pyspark.sql import SparkSession
 
+        # the stock workers import this package through the JVM's
+        # PYTHONPATH, which it inherits from this process at launch; no
+        # conf is set, so the session stays bare
+        os.environ["PYTHONPATH"] = os.pathsep.join(
+            p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+        )
         spark = SparkSession.builder.master("local[8]").getOrCreate()
     else:
         spark = get_spark("verify-local")
